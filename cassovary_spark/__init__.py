@@ -6,9 +6,9 @@ DataFrame passes over an ``edges(src: long, dst: long)`` table, designed for
 multi-executor clusters at 100 TB scale:
 
 - declarative DataFrame plans (Catalyst handles pushdown/pruning/join strategy)
-- explicit hash-partitioning on the join key for iterative gather-scatter
-- dual-orientation edge layouts (by-src / by-dst) for direction-aware execution
-- hub/skew salting + AQE
+- explicit hash-partitioning on the join key for iterative gather-scatter,
+  driven by one superstep driver (``superstep.Superstep``)
+- AQE skew handling at scale
 - vectorized pandas/Arrow UDFs only (no per-row Python)
 - per-superstep checkpointing with per-partition lineage, resumable mid-run
 

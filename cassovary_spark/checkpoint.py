@@ -20,7 +20,7 @@ import json
 import os
 import tempfile
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,18 +99,6 @@ class CheckpointStore:
         return its[-1], df, meta
 
 
-@dataclass
-class IterationMetrics:
-    """Accumulated per-superstep convergence metrics for a run."""
-
-    history: list[dict[str, Any]] = field(default_factory=list)
-
-    def record(self, iteration: int, error: float, **extra: Any) -> dict[str, Any]:
-        row = {"iteration": iteration, "error": error, **extra}
-        self.history.append(row)
-        return row
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage between supersteps without a checkpoint store.
 
@@ -166,10 +154,10 @@ class StateScratch:
         # last write fell back to plain parquet) — lets operators reference
         # the current state by name in a single spark.sql() superstep build,
         # which saves ~15 py4j round-trips of DataFrame construction
-        # (measured ~10%/superstep, scripts/profile_superstep7.py)
+        # (measured ~10%/superstep)
         self.last_table: str | None = None
         # ping-pong table rotation: per-superstep DROP+saveAsTable costs a
-        # fixed ~0.33s of catalog DDL (measured, scripts/profile_superstep.py);
+        # fixed ~0.33s of catalog DDL (measured);
         # inserting into keep_last pre-created bucketed tables in rotation
         # costs ~0.28s TOTAL (write+read) for a 339k-row state and the reread
         # still reports hash-partitioning+ordering (0-exchange self-join

@@ -28,11 +28,12 @@ questions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import StateScratch
 from cassovary_spark.graph import mutualize, vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep
 
 # FM bias correction (Flajolet-Martin 1985): E[2^R] = phi * n
 _FM_PHI = 0.77351
@@ -90,8 +91,6 @@ def _gather_step(und, state, regs):
         ).alias(f"b{r}")
         for r in regs
     ]
-    from cassovary_spark.plans import update_join_hint
-
     # state-update join: hash-build the fresh aggregate instead of sorting it
     # (plans.update_join_hint rationale)
     return state.join(gathered.hint(update_join_hint().lower()), "id", "left"), merged
@@ -107,41 +106,28 @@ def neighborhood_function(
     vertex pairs within distance t on the undirected closure, including
     the trivial pair (v, v)."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions, superstep_conf
-
-    m0 = edges.count()
-    p = choose_partitions(spark, m0, num_partitions)
-    und = mutualize(edges).repartition(p, "dst").sortWithinPartitions("dst").persist()
-    verts = vertices_of(edges)
     regs = list(range(registers))
-
-    scratch = StateScratch(spark)
-    out_rows = []
-    try:
-      with superstep_conf(spark, p, m0):
-        state = scratch.roundtrip(
-            verts.select("id", *_init_sketch_cols(registers)).repartition(p, "id"),
-            bucket_by="id", num_buckets=p,
+    with Superstep(spark, edges.count(), num_partitions) as ss:
+        und = ss.persist(mutualize(edges), "dst")
+        state, _ = ss.write(
+            vertices_of(edges).select("id", *_init_sketch_cols(registers))
+            .repartition(ss.p, "id")
         )
-        for t in range(1, iterations + 1):
-            from pyspark.sql import Observation
 
+        def step(state, _last):
             joined, merged = _gather_step(und, state, regs)
-            # NF(t) rides the state write as an observed aggregate — one
-            # job per superstep, no separate estimate pass (same policy as
-            # pagerank's dangling mass / CC's convergence sum)
-            obs = Observation()
-            state = scratch.roundtrip(
-                joined.select("id", *merged).observe(
-                    obs, F.round(F.sum(_est_col(registers)), 4).alias("nf")
-                ),
-                bucket_by="id", num_buckets=p,
+            # NF(t) rides the state write as an observed aggregate — one job
+            # per superstep, no separate estimate pass
+            state, got = ss.write(
+                joined.select("id", *merged),
+                F.round(F.sum(_est_col(registers)), 4).alias("nf"),
             )
-            out_rows.append((t, float(obs.get["nf"])))
-    finally:
-        scratch.close()
-        und.unpersist()
-    return spark.createDataFrame(out_rows, "t int, nf double")
+            return state, {"nf": float(got["nf"])}
+
+        _, history = ss.run(state, step, max_iterations=iterations)
+    return spark.createDataFrame(
+        [(row["iteration"], row["nf"]) for row in history], "t int, nf double"
+    )
 
 
 def effective_diameter(
@@ -160,41 +146,27 @@ def effective_diameter(
     count) so the curve is monotone by construction and the whole
     computation replays in the SQL oracle."""
     spark = edges.sparkSession
-    from pyspark.sql import Observation
-
-    from cassovary_spark.plans import choose_partitions, superstep_conf
-
-    m0 = edges.count()
-    p = choose_partitions(spark, m0, num_partitions)
-    und = mutualize(edges).repartition(p, "dst").sortWithinPartitions("dst").persist()
-    verts = vertices_of(edges)
     regs = list(range(registers))
-
-    scratch = StateScratch(spark)
-    nf = {}
-    try:
-      with superstep_conf(spark, p, m0):
+    with Superstep(spark, edges.count(), num_partitions) as ss:
+        und = ss.persist(mutualize(edges), "dst")
         obs0 = Observation()
-        state = scratch.roundtrip(
-            verts.select("id", *_init_sketch_cols(registers))
+        state, _ = ss.write(
+            vertices_of(edges).select("id", *_init_sketch_cols(registers))
             .observe(obs0, F.round(F.sum(_est_col(registers)), 4).alias("nf"))
-            .repartition(p, "id"),
-            bucket_by="id", num_buckets=p,
+            .repartition(ss.p, "id")
         )
-        nf[0] = float(obs0.get["nf"])
-        for t in range(1, iterations + 1):
+        nf = {0: float(obs0.get["nf"])}
+
+        def step(state, _last):
             joined, merged = _gather_step(und, state, regs)
-            obs = Observation()
-            state = scratch.roundtrip(
-                joined.select("id", *merged).observe(
-                    obs, F.round(F.sum(_est_col(registers)), 4).alias("nf")
-                ),
-                bucket_by="id", num_buckets=p,
+            state, got = ss.write(
+                joined.select("id", *merged),
+                F.round(F.sum(_est_col(registers)), 4).alias("nf"),
             )
-            nf[t] = float(obs.get["nf"])
-    finally:
-        scratch.close()
-        und.unpersist()
+            return state, {"nf": float(got["nf"])}
+
+        _, history = ss.run(state, step, max_iterations=iterations)
+    nf.update((row["iteration"], row["nf"]) for row in history)
 
     target = q * nf[iterations]
     d = 0.0
@@ -224,30 +196,22 @@ def harmonic_centrality_sketch(
     small-graph counterpart is operators.centrality.closeness_centrality
     (reference ClosenessCentrality.scala)."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions, superstep_conf
-
-    m0 = edges.count()
-    p = choose_partitions(spark, m0, num_partitions)
-    und = mutualize(edges).repartition(p, "dst").sortWithinPartitions("dst").persist()
-    verts = vertices_of(edges)
     regs = list(range(registers))
-
-    scratch = StateScratch(spark)
-    try:
-      with superstep_conf(spark, p, m0):
-        state = scratch.roundtrip(
-            verts.select("id", *_init_sketch_cols(registers))
+    with Superstep(spark, edges.count(), num_partitions) as ss:
+        und = ss.persist(mutualize(edges), "dst")
+        state, _ = ss.write(
+            vertices_of(edges).select("id", *_init_sketch_cols(registers))
             .withColumn("prev_est", _est_col(registers))
             .withColumn("harmonic", F.lit(0.0))
-            .repartition(p, "id"),
-            bucket_by="id", num_buckets=p,
+            .repartition(ss.p, "id")
         )
-        for t in range(1, iterations + 1):
+
+        def step(state, last):
+            t = last.get("iteration", 0) + 1
             joined, merged = _gather_step(und, state, regs)
-            est = _est_col(registers)
-            state = scratch.roundtrip(
+            state, _ = ss.write(
                 joined.select("id", *merged, "prev_est", "harmonic")
-                .withColumn("est", est)
+                .withColumn("est", _est_col(registers))
                 .select(
                     "id",
                     *[f"b{r}" for r in regs],
@@ -256,12 +220,10 @@ def harmonic_centrality_sketch(
                         F.col("harmonic")
                         + (F.col("est") - F.col("prev_est")) / F.lit(float(t))
                     ).alias("harmonic"),
-                ),
-                bucket_by="id", num_buckets=p,
+                )
             )
+            return state, {}
+
+        state, _ = ss.run(state, step, max_iterations=iterations)
         result = state.select("id", F.round("harmonic", 6).alias("harmonic"))
-        result = result.localCheckpoint(eager=True)
-    finally:
-        scratch.close()
-        und.unpersist()
-    return result
+        return result.localCheckpoint(eager=True)

@@ -24,12 +24,21 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import StateScratch, materialize
+from cassovary_spark.checkpoint import materialize
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 # shared workaround for window-order-unstable collect_list (observed
 # reordering at sf0.01) — single definition lives in tourists
 from cassovary_spark.operators.tourists import _ranked_list  # noqa: E402
+
+
+# bipartite's numpy twin is NOT O(m): the final-pass top-k contributor
+# recording lexsorts the full edge flow (O(m log m) single-threaded), so its
+# local/distributed crossover sits well below the memory-budget threshold
+# the O(m)-kernel operators use (r6 measured: 10.4s local vs 8.8s
+# distributed at 6M edges / local[32]) — cap it at 4M edges.
+BIPARTITE_LOCAL_CAP = 4_000_000
 
 
 @dataclass
@@ -112,159 +121,137 @@ def bipartite_link_analysis(
     comparisons (the reference's priority queue has unspecified tie order,
     so any deterministic refinement is valid)."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import LOCAL_EDGE_THRESHOLD, choose_partitions
-
-    # bipartite's numpy twin is NOT O(m): the final-pass top-k contributor
-    # recording lexsorts the full edge flow (O(m log m) single-threaded), so
-    # its local/distributed crossover sits well below the memory-budget
-    # threshold the O(m)-kernel operators use (r6 measured: 10.4s local vs
-    # 8.8s distributed at 6M edges / local[32]) — cap it at 4M edges.
-    _BIPARTITE_LOCAL_CAP = 4_000_000
     m0 = edges.count()
-    if engine == "auto":
-        engine = (
-            "local"
-            if m0 <= min(LOCAL_EDGE_THRESHOLD, _BIPARTITE_LOCAL_CAP)
-            else "distributed"
-        )
-    if engine == "local":
+    if choose_engine(m0, engine, cap=BIPARTITE_LOCAL_CAP) == "local":
         return _bipartite_local(
             spark, edges, left_weights, num_iterations, reset_prob_left,
             reset_prob_right, num_top_contributors, contributor_weight_rounding,
         )
+    # the alternating left/right passes share the driver's partition count,
+    # scratch and cleanup, but not its loop: each pass writes a different
+    # side and the last two also record contributors
+    with Superstep(spark, m0, num_partitions) as ss:
+        # subgraph restriction: only edges whose left endpoint was supplied
+        e = ss.persist(
+            edges.select("src", "dst")
+            .join(left_weights.select(F.col("id").alias("src")), "src", "left_semi"),
+            "src",
+        )
+        ldeg = e.groupBy("src").agg(F.count("*").alias("ldeg"))
+        rdeg = e.groupBy("dst").agg(F.count("*").alias("rdeg"))
 
-    p = choose_partitions(spark, m0, num_partitions)
+        lw0 = ss.persist(
+            left_weights.select("id", F.col("weight").alias("init"))
+            .join(ldeg.withColumnRenamed("src", "id"), "id", "left")
+            .fillna(0, subset=["ldeg"])
+        )
+        lw, _ = ss.write(
+            lw0.select("id", F.col("init").alias("weight"), "init", "ldeg"), bucket_by=None
+        )
+        rw, _ = ss.write(
+            rdeg.select(F.col("dst").alias("id"), F.lit(0.0).alias("weight"), "rdeg"),
+            bucket_by=None,
+        )
 
-    # subgraph restriction: only edges whose left endpoint was supplied
-    e = (
-        edges.select("src", "dst")
-        .join(left_weights.select(F.col("id").alias("src")), "src", "left_semi")
-        .repartition(p, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    ldeg = e.groupBy("src").agg(F.count("*").alias("ldeg"))
-    rdeg = e.groupBy("dst").agg(F.count("*").alias("rdeg"))
+        l_contrib = r_contrib = None
+        for it in range(1, num_iterations + 1):
+            last = it >= num_iterations - 1
+            if it % 2 == 1:  # left -> right, reset prob on right (init 0)
+                flows = (
+                    e.join(
+                        lw.select(F.col("id").alias("src"), "weight", "ldeg"), "src"
+                    )
+                    .select(
+                        "src",
+                        "dst",
+                        (
+                            (F.col("weight") / F.col("ldeg"))
+                            * F.lit(1.0 - reset_prob_right)
+                        ).alias("flow"),
+                        F.col("weight").alias("src_weight"),
+                    )
+                )
+                agg = flows.groupBy("dst").agg(F.sum("flow").alias("gathered"))
+                rw, _ = ss.write(
+                    rw.select("id", "rdeg")
+                    .join(agg.withColumnRenamed("dst", "id"), "id", "left")
+                    .select(
+                        "id",
+                        F.coalesce("gathered", F.lit(0.0)).alias("weight"),
+                        "rdeg",
+                    ),
+                    bucket_by=None,
+                )
+                if last:
+                    rank_w = (
+                        F.round("src_weight", contributor_weight_rounding)
+                        if contributor_weight_rounding is not None
+                        else F.col("src_weight")
+                    )
+                    w = Window.partitionBy("dst").orderBy(
+                        rank_w.desc(), F.asc("src")
+                    )
+                    r_contrib = ss.local_checkpoint(
+                        flows.withColumn("rn", F.row_number().over(w))
+                        .filter(F.col("rn") <= num_top_contributors)
+                        .groupBy(F.col("dst").alias("id"))
+                        .agg(_ranked_list("src").alias("contributors"))
+                    )
+            else:  # right -> left, reset prob on left
+                flows = (
+                    e.join(
+                        rw.select(F.col("id").alias("dst"), "weight", "rdeg"), "dst"
+                    )
+                    .select(
+                        "src",
+                        "dst",
+                        (
+                            (F.col("weight") / F.col("rdeg"))
+                            * F.lit(1.0 - reset_prob_left)
+                        ).alias("flow"),
+                        F.col("weight").alias("src_weight"),
+                    )
+                )
+                agg = flows.groupBy("src").agg(F.sum("flow").alias("gathered"))
+                lw, _ = ss.write(
+                    lw.select("id", "init", "ldeg")
+                    .join(agg.withColumnRenamed("src", "id"), "id", "left")
+                    .select(
+                        "id",
+                        (
+                            F.lit(reset_prob_left) * F.col("init")
+                            + F.coalesce("gathered", F.lit(0.0))
+                        ).alias("weight"),
+                        "init",
+                        "ldeg",
+                    ),
+                    bucket_by=None,
+                )
+                if last:
+                    rank_w = (
+                        F.round("src_weight", contributor_weight_rounding)
+                        if contributor_weight_rounding is not None
+                        else F.col("src_weight")
+                    )
+                    w = Window.partitionBy("src").orderBy(
+                        rank_w.desc(), F.asc("dst")
+                    )
+                    l_contrib = ss.local_checkpoint(
+                        flows.withColumn("rn", F.row_number().over(w))
+                        .filter(F.col("rn") <= num_top_contributors)
+                        .groupBy(F.col("src").alias("id"))
+                        .agg(_ranked_list("dst").alias("contributors"))
+                    )
 
-    lw0 = (
-        left_weights.select("id", F.col("weight").alias("init"))
-        .join(ldeg.withColumnRenamed("src", "id"), "id", "left")
-        .fillna(0, subset=["ldeg"])
-        .persist()
-    )
-    scratch = StateScratch(spark)
-    # contributor frames reference the superstep-state files live at compute
-    # time; materialize them in their own scratch so later state eviction
-    # (keep_last) can't delete files they still read lazily
-    contrib_scratch = StateScratch(spark, keep_last=2)
-    lw = scratch.roundtrip(lw0.select("id", F.col("init").alias("weight"), "init", "ldeg"))
-    rw = scratch.roundtrip(
-        rdeg.select(F.col("dst").alias("id"), F.lit(0.0).alias("weight"), "rdeg")
-    )
-
-    l_contrib = r_contrib = None
-    for it in range(1, num_iterations + 1):
-        last = it >= num_iterations - 1
-        if it % 2 == 1:  # left -> right, reset prob on right (init 0)
-            flows = (
-                e.join(
-                    lw.select(F.col("id").alias("src"), "weight", "ldeg"), "src"
-                )
-                .select(
-                    "src",
-                    "dst",
-                    (
-                        (F.col("weight") / F.col("ldeg"))
-                        * F.lit(1.0 - reset_prob_right)
-                    ).alias("flow"),
-                    F.col("weight").alias("src_weight"),
-                )
-            )
-            agg = flows.groupBy("dst").agg(F.sum("flow").alias("gathered"))
-            rw = scratch.roundtrip(
-                rw.select("id", "rdeg")
-                .join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("gathered", F.lit(0.0)).alias("weight"),
-                    "rdeg",
-                )
-            )
-            if last:
-                rank_w = (
-                    F.round("src_weight", contributor_weight_rounding)
-                    if contributor_weight_rounding is not None
-                    else F.col("src_weight")
-                )
-                w = Window.partitionBy("dst").orderBy(
-                    rank_w.desc(), F.asc("src")
-                )
-                r_contrib = contrib_scratch.roundtrip(
-                    flows.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= num_top_contributors)
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(_ranked_list("src").alias("contributors"))
-                )
-        else:  # right -> left, reset prob on left
-            flows = (
-                e.join(
-                    rw.select(F.col("id").alias("dst"), "weight", "rdeg"), "dst"
-                )
-                .select(
-                    "src",
-                    "dst",
-                    (
-                        (F.col("weight") / F.col("rdeg"))
-                        * F.lit(1.0 - reset_prob_left)
-                    ).alias("flow"),
-                    F.col("weight").alias("src_weight"),
-                )
-            )
-            agg = flows.groupBy("src").agg(F.sum("flow").alias("gathered"))
-            lw = scratch.roundtrip(
-                lw.select("id", "init", "ldeg")
-                .join(agg.withColumnRenamed("src", "id"), "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(reset_prob_left) * F.col("init")
-                        + F.coalesce("gathered", F.lit(0.0))
-                    ).alias("weight"),
-                    "init",
-                    "ldeg",
-                )
-            )
-            if last:
-                rank_w = (
-                    F.round("src_weight", contributor_weight_rounding)
-                    if contributor_weight_rounding is not None
-                    else F.col("src_weight")
-                )
-                w = Window.partitionBy("src").orderBy(
-                    rank_w.desc(), F.asc("dst")
-                )
-                l_contrib = contrib_scratch.roundtrip(
-                    flows.withColumn("rn", F.row_number().over(w))
-                    .filter(F.col("rn") <= num_top_contributors)
-                    .groupBy(F.col("src").alias("id"))
-                    .agg(_ranked_list("dst").alias("contributors"))
-                )
-
-    empty = F.array().cast("array<bigint>")
-    left_out = lw.select("id", "weight").join(
-        l_contrib if l_contrib is not None else lw.select("id").withColumn("contributors", empty),
-        "id",
-        "left",
-    ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
-    right_out = rw.select("id", "weight").join(
-        r_contrib if r_contrib is not None else rw.select("id").withColumn("contributors", empty),
-        "id",
-        "left",
-    ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
-    left_out = materialize(left_out)
-    right_out = materialize(right_out)
-    scratch.close()
-    contrib_scratch.close()
-    e.unpersist()
-    lw0.unpersist()
-    return BipartiteAnalysis(left_out, right_out)
+        empty = F.array().cast("array<bigint>")
+        left_out = lw.select("id", "weight").join(
+            l_contrib if l_contrib is not None else lw.select("id").withColumn("contributors", empty),
+            "id",
+            "left",
+        ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
+        right_out = rw.select("id", "weight").join(
+            r_contrib if r_contrib is not None else rw.select("id").withColumn("contributors", empty),
+            "id",
+            "left",
+        ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
+        return BipartiteAnalysis(materialize(left_out), materialize(right_out))

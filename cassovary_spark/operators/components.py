@@ -21,11 +21,13 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import CheckpointStore, StateScratch, materialize
+from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import mutualize, vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 def connected_components(
@@ -46,24 +48,8 @@ def connected_components(
     the scaling harness's instrumentation (scripts/scaling_run.py); the
     numpy twin records ``iterations`` only."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import (
-        LOCAL_EDGE_THRESHOLD,
-        choose_partitions,
-        superstep_conf,
-        update_join_hint,
-    )
-
-    _UPD = update_join_hint()
-
     m0 = edges.count()
-    if engine == "local" and (checkpoint is not None or resume):
-        raise ValueError(
-            "engine='local' cannot honor checkpoint/resume; "
-            "use engine='distributed' (or 'auto', which routes around it)"
-        )
-    if engine == "auto" and checkpoint is None:
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    if choose_engine(m0, engine, checkpoint=checkpoint, resume=resume) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -74,169 +60,70 @@ def connected_components(
             stats["iterations"] = 0  # union-find, not superstep-iterative
         return LE.result_df(spark, ids, {"component": comp}, "id long, component long")
 
-    p = choose_partitions(spark, m0, num_partitions)
+    with Superstep(spark, m0, num_partitions, stats) as ss:
+        # the superstep join keys on dst (gather neighbor labels), so the
+        # static edge table is partitioned AND sorted by dst — SMJ then never
+        # exchanges or sorts the big side
+        und = ss.name(ss.persist(mutualize(edges), "dst"))
+        verts = ss.persist(vertices_of(edges), "id")
+        upd = update_join_hint()
 
-    # the superstep join keys on dst (gather neighbor labels), so the static
-    # edge table is partitioned AND sorted by dst — SMJ then never exchanges
-    # or sorts the big side
-    und = mutualize(edges).repartition(p, "dst").sortWithinPartitions("dst").persist()
-    verts = vertices_of(edges).repartition(p, "id").sortWithinPartitions("id").persist()
+        start, labels, _meta = ss.latest(checkpoint, resume)
+        if labels is None:
+            labels = verts.select("id", F.col("id").alias("component"))
+        else:
+            labels = labels.repartition(ss.p, "id")
+        # labels enter the superstep through the neighbor gather, the least()
+        # fallback, AND (with pointer_jump) a self-join — multiplicative stat
+        # growth — so per-superstep stats are reset via StateScratch.
+        labels, _ = ss.write(labels)
+        label_sum = labels.agg(F.sum("component")).first()[0]
 
-    labels = None
-    start_iter = 0
-    if resume and checkpoint is not None:
-        got = checkpoint.latest(spark)
-        if got is not None:
-            start_iter, labels, _meta = got
-            labels = labels.repartition(p, "id")
-    # labels enter the superstep through the neighbor gather, the least()
-    # fallback, AND (with pointer_jump) a self-join — multiplicative stat
-    # growth — so per-superstep stats are reset via StateScratch.
-    scratch = StateScratch(spark)
-    if labels is None:
-        labels = verts.select("id", F.col("id").alias("component"))
-    labels = scratch.roundtrip(labels, bucket_by="id", num_buckets=p)
-
-    prev_sum = labels.agg(F.sum("component")).first()[0]
-    iteration = start_iter
-    import uuid as _uuid
-
-    # registered once for the single-SQL superstep build (same policy as
-    # pagerank: one spark.sql() call replaces ~12 py4j DataFrame-building
-    # round-trips when the state is a catalog table)
-    und_view = f"cassovary_cc_und_{_uuid.uuid4().hex[:12]}"
-    und.createOrReplaceTempView(und_view)
-    state_table = scratch.last_table
-    # try/finally: a failure mid-superstep must not leak the temp view,
-    # scratch tables, or the persisted frames for the session lifetime
-    # (ADVICE r3)
-    try:
-      with superstep_conf(spark, p, m0):
-        import time as _time
-
-        while max_iterations is None or iteration < max_iterations:
-            t_superstep = _time.time()
-            if state_table is not None:
-                # NO WITH clause: Spark 4.1's CTE planning loses the persisted
-                # sorted view's ordering attributes when the CTE body contains
-                # a merge join over it ("key not found: dst#N" in SortExec
-                # during prepareForExecution) — inline subqueries plan fine and
-                # identical subtrees still collapse to ReusedExchange
-                gather = f"""
-      SELECT /*+ MERGE(e) */ e.src AS id, min(l.component) AS nbr_component
-      FROM {und_view} e JOIN {state_table} l ON e.dst = l.id
-      GROUP BY e.src"""
-                update = f"""SELECT /*+ {_UPD}(c) */ s.id,
+        def step(labels, last):
+            state = ss.name(labels)
+            # NO WITH clause: Spark 4.1's CTE planning loses the persisted
+            # sorted view's ordering attributes when the CTE body contains a
+            # merge join over it ("key not found: dst#N" in SortExec during
+            # prepareForExecution) — inline subqueries plan fine and
+            # identical subtrees still collapse to ReusedExchange
+            sql = f"""SELECT /*+ {upd}(c) */ s.id,
          least(s.component, coalesce(c.nbr_component, s.component)) AS component
-  FROM {state_table} s
-  LEFT JOIN ({gather}
+  FROM {state} s
+  LEFT JOIN (
+      SELECT /*+ MERGE(e) */ e.src AS id, min(l.component) AS nbr_component
+      FROM {und} e JOIN {state} l ON e.dst = l.id
+      GROUP BY e.src
   ) c ON s.id = c.id"""
-                if pointer_jump:
-                    # label(v) <- label(label(v)) as TWO phases: materialize
-                    # the gather+update once to scratch, then self-join the
-                    # O(V) table. The previous inlined self-join of the
-                    # update subquery looked free but the planner reused only
-                    # one exchange — the O(E) gather aggregation ran TWICE
-                    # per superstep (plan probe: 2x HashAggregate/SMJ over
-                    # the edge view; measured: CC superstep ~4x a pagerank
-                    # superstep at 64M edges). An extra O(V) scratch write is
-                    # far cheaper than a second O(E) gather. Values are
-                    # identical — the jump reads the same update rows.
-                    upd = scratch.roundtrip(
-                        spark.sql(update), bucket_by="id", num_buckets=p
-                    )
-                    upd_table = scratch.last_table
-                    if upd_table is not None:
-                        # SHUFFLE_HASH(lut): the probe side is keyed on
-                        # `component` (unsorted, un-co-partitioned), so SMJ
-                        # would sort BOTH sides after their exchanges; the
-                        # hash build of the O(V) lut is the cheaper half
-                        new_labels = spark.sql(f"""
-  SELECT /*+ {_UPD}(lut) */ nl.id, coalesce(lut.component, nl.component) AS component
-  FROM {upd_table} nl
-  LEFT JOIN {upd_table} lut ON nl.component = lut.id""")
-                    else:
-                        lut = upd.select(
-                            F.col("id").alias("component"),
-                            F.col("component").alias("jump"),
-                        )
-                        new_labels = upd.join(
-                            lut.hint(_UPD.lower()), "component", "left"
-                        ).select(
-                            "id", F.coalesce("jump", "component").alias("component")
-                        )
-                else:
-                    new_labels = spark.sql(update)
-            else:
-                # DataFrame build: first iteration after resume/checkpoint,
-                # or when bucketed catalog writes are unavailable
-                nbr_min = (
-                    und.hint("merge")
-                    .join(labels.select(F.col("id").alias("dst"), "component"), "dst")
-                    .groupBy(F.col("src").alias("id"))
-                    .agg(F.min("component").alias("nbr_component"))
-                )
-                new_labels = (
-                    labels.join(nbr_min.hint(_UPD.lower()), "id", "left")
-                    .select(
-                        "id",
-                        F.least(
-                            "component", F.coalesce("nbr_component", "component")
-                        ).alias("component"),
-                    )
-                )
-                if pointer_jump:
-                    # same two-phase shape as the catalog branch: a lazy
-                    # self-join would recompute the O(E) gather twice
-                    upd = scratch.roundtrip(
-                        new_labels.repartition(p, "id"),
-                        bucket_by="id", num_buckets=p,
-                    )
-                    lut = upd.select(
-                        F.col("id").alias("component"),
-                        F.col("component").alias("jump"),
-                    )
-                    new_labels = upd.join(
-                        lut.hint(_UPD.lower()), "component", "left"
-                    ).select(
-                        "id", F.coalesce("jump", "component").alias("component")
-                    )
-                new_labels = new_labels.repartition(p, "id")
+            if pointer_jump:
+                # label(v) <- label(label(v)) as TWO phases: materialize the
+                # gather+update once to scratch, then self-join the O(V)
+                # table. An inlined self-join of the update subquery looked
+                # free but the planner reused only one exchange — the O(E)
+                # gather aggregation ran TWICE per superstep (measured: CC
+                # superstep ~4x a pagerank superstep at 64M edges). An extra
+                # O(V) scratch write is far cheaper than a second O(E) gather.
+                # Values are identical — the jump reads the same update rows.
+                # SHUFFLE_HASH(lut): the probe side is keyed on `component`
+                # (unsorted, un-co-partitioned), so SMJ would sort BOTH sides
+                # after their exchanges; the hash build of the O(V) lut is
+                # the cheaper half.
+                nl = ss.name(ss.write(spark.sql(sql))[0])
+                sql = f"""
+  SELECT /*+ {upd}(lut) */ nl.id, coalesce(lut.component, nl.component) AS component
+  FROM {nl} nl
+  LEFT JOIN {nl} lut ON nl.component = lut.id"""
             # convergence metric (Σ labels strictly decreases until fixpoint)
             # collected via observe during the state write — one job/superstep
-            obs = Observation()
-            new_labels = scratch.roundtrip(
-                new_labels.observe(obs, F.sum("component").alias("s")),
-                bucket_by="id", num_buckets=p,
-            )
-            state_table = scratch.last_table
-            iteration += 1
+            new_labels, got = ss.write(spark.sql(sql), F.sum("component").alias("s"))
+            same = got["s"] == last["label_sum"]  # also None == None: no vertices
+            return new_labels, {
+                "error": 0.0 if same else float(last["label_sum"] - got["s"]),
+                "label_sum": got["s"],
+            }
 
-            cur_sum = obs.get["s"]
-            if stats is not None:
-                stats.setdefault("superstep_walls", []).append(
-                    round(_time.time() - t_superstep, 3)
-                )
-                stats["iterations"] = iteration
-            labels = new_labels
-            if checkpoint is not None:
-                # the checkpoint store returns a non-catalog frame — the next
-                # iteration must build from the DataFrame, not the stale table
-                labels = checkpoint.save(
-                    iteration, labels, {"error": float(prev_sum - cur_sum), "label_sum": cur_sum}
-                )
-                state_table = None
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-
-      result = materialize(labels.select("id", "component"))
-    finally:
-        scratch.close()
-        try:
-            spark.catalog.dropTempView(und_view)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-        und.unpersist()
-        verts.unpersist()
-    return result
+        labels, _ = ss.run(
+            labels, step, lambda row: row.get("error") == 0,
+            max_iterations=max_iterations, row={"label_sum": label_sum},
+            start=start, checkpoint=checkpoint,
+        )
+        return materialize(labels.select("id", "component"))

@@ -20,11 +20,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import StateScratch, materialize
+from cassovary_spark.checkpoint import materialize
 from cassovary_spark.graph import vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 @dataclass
@@ -33,6 +35,12 @@ class HitsResult:
     error: float
     iterations: int
     history: list[dict] = field(default_factory=list)
+
+
+def _empty(spark) -> HitsResult:
+    return HitsResult(
+        spark.createDataFrame([], "id long, hub double, authority double"), 0.0, 0
+    )
 
 
 def hits(
@@ -44,25 +52,13 @@ def hits(
     engine: str = "auto",
 ) -> HitsResult:
     spark = edges.sparkSession
-    from cassovary_spark.plans import (
-        LOCAL_EDGE_THRESHOLD,
-        choose_partitions,
-        superstep_conf,
-        update_join_hint,
-    )
-
-    _upd = update_join_hint().lower()
-
     m0 = edges.count()
-    if engine == "auto":
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    if choose_engine(m0, engine) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
         if len(ids) == 0:
-            empty = spark.createDataFrame([], "id long, hub double, authority double")
-            return HitsResult(empty, 0.0, 0)
+            return _empty(spark)
         hub, auth, error, its, history = LE.hits_numpy(
             ids, si, di, max_iterations, tolerance
         )
@@ -76,117 +72,86 @@ def hits(
         )
         return HitsResult(scores, error, its, history)
 
-    p = choose_partitions(spark, m0, num_partitions)
+    with Superstep(spark, m0, num_partitions) as ss:
+        p = ss.p
+        verts = ss.persist(vertices_of(edges), "id")
+        n = verts.count()
+        if n == 0:
+            return _empty(spark)
+        # dual orientation: gather-for-auth joins on src, gather-for-hub on dst
+        by_src = ss.persist(edges.select("src", "dst"), "src")
+        by_dst = ss.persist(edges.select("src", "dst"), "dst")
+        upd = update_join_hint().lower()
 
-    verts = vertices_of(edges).repartition(p, "id").sortWithinPartitions("id").persist()
-    n = verts.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "id long, hub double, authority double")
-        return HitsResult(empty, 0.0, 0)
-
-    # dual orientation: gather-for-auth joins on src, gather-for-hub on dst
-    by_src = edges.select("src", "dst").repartition(p, "src").sortWithinPartitions("src").persist()
-    by_dst = edges.select("src", "dst").repartition(p, "dst").sortWithinPartitions("dst").persist()
-
-    # state feeds TWO branches of each superstep's join tree (auth gather +
-    # hub gather over the fresh auth), so per-superstep stats must be RESET,
-    # not just lineage-truncated — see checkpoint.StateScratch.
-    scratch = StateScratch(spark)
-    state = scratch.roundtrip(
-        verts.select(
-            "id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("authority")
-        ),
-        bucket_by="id", num_buckets=p,
-    )
-    error = 100.0 + tolerance
-    iteration = 0
-    history: list[dict] = []
-
-    def terminated(it: int, err: float) -> bool:
-        if max_iterations is not None and it >= max_iterations:
-            return True
-        return err <= tolerance
-
-    with superstep_conf(spark, p, m0):
-      while not terminated(iteration, error):
-          auth_raw = (
-              by_src.hint("merge").join(state.select(F.col("id").alias("src"), "hub"), "src")
-              .groupBy(F.col("dst").alias("id"))
-              .agg(F.sum("hub").alias("a_raw"))
-          )
-          auth_full = (
-              verts.join(auth_raw.hint(_upd), "id", "left")
-              .select("id", F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"))
-              .repartition(p, "id")
-          )
-          auth_full = materialize(auth_full)
-
-          hub_raw = (
-              by_dst.hint("merge").join(auth_full.select(F.col("id").alias("dst"), "a_raw"), "dst")
-              .groupBy(F.col("src").alias("id"))
-              .agg(F.sum("a_raw").alias("h_raw"))
-          )
-          # carry the previous (normalized) hub along and collect the per-side
-          # maxes via ``observe`` DURING the materialization — the reference's
-          # scale-by-max pass (Hits.scala:53-56,101) without its own scan
-          # both non-state sides hash-build (update_join_hint): hub_raw is a
-          # fresh aggregate and the first join's SHJ output loses the sort
-          # order SMJ would have needed from the second
-          joined = (
-              state.select("id", F.col("hub").alias("prev_hub"))
-              .join(hub_raw.hint(_upd), "id", "left")
-              .join(auth_full.hint(_upd), "id")
-              .select(
-                  "id", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
-                  "a_raw", "prev_hub",
-              )
-              .repartition(p, "id")
-          )
-          obs_max = Observation()
-          joined = scratch.roundtrip(
-              joined.observe(
-                  obs_max, F.max("h_raw").alias("hmax"), F.max("a_raw").alias("amax")
-              ),
-              bucket_by="id", num_buckets=p,
-          )
-          maxes = obs_max.get
-          hmax = maxes["hmax"] if (maxes["hmax"] or 0) > 0 else 1.0
-          amax = maxes["amax"] if (maxes["amax"] or 0) > 0 else 1.0
-
-          # normalization write doubles as the T1-error scan (observe again)
-          obs_err = Observation()
-          new_state = scratch.roundtrip(
-              joined.select(
-                  "id",
-                  (F.col("h_raw") / F.lit(hmax)).alias("hub"),
-                  (F.col("a_raw") / F.lit(amax)).alias("authority"),
-                  "prev_hub",
-              )
-              .observe(
-                  obs_err,
-                  F.sum(F.abs(F.col("prev_hub") - F.col("hub"))).alias("e"),
-              )
-              .drop("prev_hub"),
-              bucket_by="id", num_buckets=p,
-          )
-          error = obs_err.get["e"]
-          iteration += 1
-          history.append({"iteration": iteration, "error": error})
-          state = new_state
-
-    if normalize:
-        sums = state.agg(F.sum("hub").alias("hs"), F.sum("authority").alias("as_")).first()
-        hs = sums["hs"] if (sums["hs"] or 0) > 0 else 1.0
-        as_ = sums["as_"] if (sums["as_"] or 0) > 0 else 1.0
-        state = state.select(
-            "id",
-            (F.col("hub") / F.lit(hs)).alias("hub"),
-            (F.col("authority") / F.lit(as_)).alias("authority"),
+        # state feeds TWO branches of each superstep's join tree (auth gather
+        # + hub gather over the fresh auth), so per-superstep stats must be
+        # RESET, not just lineage-truncated — see checkpoint.StateScratch.
+        state, _ = ss.write(
+            verts.select("id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("authority"))
         )
 
-    result = materialize(state.select("id", "hub", "authority"))
-    scratch.close()
-    verts.unpersist()
-    by_src.unpersist()
-    by_dst.unpersist()
-    return HitsResult(result, error, iteration, history)
+        def step(state, _last):
+            auth_raw = (
+                by_src.hint("merge").join(state.select(F.col("id").alias("src"), "hub"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("hub").alias("a_raw"))
+            )
+            auth_full = ss.local_checkpoint(
+                verts.join(auth_raw.hint(upd), "id", "left")
+                .select("id", F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"))
+                .repartition(p, "id")
+            )
+            hub_raw = (
+                by_dst.hint("merge").join(auth_full.select(F.col("id").alias("dst"), "a_raw"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("a_raw").alias("h_raw"))
+            )
+            # carry the previous (normalized) hub along and collect the
+            # per-side maxes via ``observe`` DURING the materialization — the
+            # reference's scale-by-max pass (Hits.scala:53-56,101) without its
+            # own scan. Both non-state sides hash-build (update_join_hint):
+            # hub_raw is a fresh aggregate and the first join's SHJ output
+            # loses the sort order SMJ would have needed from the second
+            joined, maxes = ss.write(
+                state.select("id", F.col("hub").alias("prev_hub"))
+                .join(hub_raw.hint(upd), "id", "left")
+                .join(auth_full.hint(upd), "id")
+                .select(
+                    "id", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
+                    "a_raw", "prev_hub",
+                )
+                .repartition(p, "id"),
+                F.max("h_raw").alias("hmax"), F.max("a_raw").alias("amax"),
+            )
+            hmax = maxes["hmax"] if (maxes["hmax"] or 0) > 0 else 1.0
+            amax = maxes["amax"] if (maxes["amax"] or 0) > 0 else 1.0
+            # normalization write doubles as the T1-error scan (observe again)
+            new_state, got = ss.write(
+                joined.select(
+                    "id",
+                    (F.col("h_raw") / F.lit(hmax)).alias("hub"),
+                    (F.col("a_raw") / F.lit(amax)).alias("authority"),
+                    "prev_hub",
+                ),
+                F.sum(F.abs(F.col("prev_hub") - F.col("hub"))).alias("e"),
+                drop=("prev_hub",),
+            )
+            return new_state, {"error": got["e"]}
+
+        state, history = ss.run(
+            state, step, lambda row: row["error"] <= tolerance,
+            max_iterations=max_iterations, row={"error": 100.0 + tolerance},
+        )
+        error = history[-1]["error"] if history else 100.0 + tolerance
+
+        if normalize:
+            sums = state.agg(F.sum("hub").alias("hs"), F.sum("authority").alias("as_")).first()
+            hs = sums["hs"] if (sums["hs"] or 0) > 0 else 1.0
+            as_ = sums["as_"] if (sums["as_"] or 0) > 0 else 1.0
+            state = state.select(
+                "id",
+                (F.col("hub") / F.lit(hs)).alias("hub"),
+                (F.col("authority") / F.lit(as_)).alias("authority"),
+            )
+        result = materialize(state.select("id", "hub", "authority"))
+    return HitsResult(result, error, len(history), history)

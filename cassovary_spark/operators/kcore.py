@@ -29,8 +29,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import StateScratch, materialize
+from cassovary_spark.checkpoint import materialize
 from cassovary_spark.graph import mutualize
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 def k_core(
@@ -50,12 +51,8 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
-    from cassovary_spark.plans import LOCAL_EDGE_THRESHOLD, choose_partitions, superstep_conf
-
     m0 = edges.count()
-    if engine == "auto":
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    if choose_engine(m0, engine) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -68,47 +65,37 @@ def k_core(
             spark, core_ids, {"degree": core_deg}, "id long, degree long"
         )
 
-    p = choose_partitions(spark, m0, num_partitions)
-    und = mutualize(edges).repartition(p, "src").sortWithinPartitions("src")
-    scratch = StateScratch(spark)
-    import time as _time
+    with Superstep(spark, m0, num_partitions, stats) as ss:
+        p = ss.p
+        cur_edges, _ = ss.write(
+            mutualize(edges).repartition(p, "src").sortWithinPartitions("src"),
+            bucket_by="src",
+        )
 
-    try:
-      with superstep_conf(spark, p, m0):
-        cur_edges = scratch.roundtrip(und, bucket_by="src", num_buckets=p)
-        prev_alive: int | None = None
-        iteration = 0
-        survivors = None
-        while max_iterations is None or iteration < max_iterations:
-            t0 = _time.time()
+        def step(state, last):
+            cur_edges, _ = state
             deg = cur_edges.groupBy(F.col("src").alias("id")).agg(
                 F.count("*").alias("degree")
             )
-            survivors, alive = scratch.roundtrip(
-                deg.filter(F.col("degree") >= k),
-                bucket_by="id", num_buckets=p, with_count=True,
+            survivors, got = ss.write(
+                deg.filter(F.col("degree") >= k), F.count(F.lit(1)).alias("alive")
             )
-            iteration += 1
-            if stats is not None:
-                stats.setdefault("superstep_walls", []).append(
-                    round(_time.time() - t0, 3)
+            alive = got["alive"]
+            converged = alive == 0 or alive == last.get("alive")
+            if not converged:
+                # keep only edges with BOTH endpoints alive; the src join is
+                # bucket-co-located, the dst join exchanges the (shrunk) edges
+                cur_edges, _ = ss.write(
+                    cur_edges.join(survivors.select(F.col("id").alias("src")), "src", "semi")
+                    .join(survivors.select(F.col("id").alias("dst")), "dst", "semi")
+                    .select("src", "dst")
+                    .repartition(p, "src"),
+                    bucket_by="src",
                 )
-                stats["iterations"] = iteration
-            if alive == 0 or alive == prev_alive:
-                break
-            prev_alive = alive
-            # keep only edges with BOTH endpoints alive; the src join is
-            # bucket-co-located, the dst join exchanges the (shrunk) edges
-            cur_edges = scratch.roundtrip(
-                cur_edges.join(
-                    survivors.select(F.col("id").alias("src")), "src", "semi"
-                )
-                .join(survivors.select(F.col("id").alias("dst")), "dst", "semi")
-                .select("src", "dst")
-                .repartition(p, "src"),
-                bucket_by="src", num_buckets=p,
-            )
-        result = materialize(survivors.select("id", "degree"))
-    finally:
-        scratch.close()
-    return result
+            return (cur_edges, survivors), {"alive": alive, "converged": converged}
+
+        (_, survivors), _ = ss.run(
+            (cur_edges, None), step, lambda row: row.get("converged", False),
+            max_iterations=max_iterations,
+        )
+        return materialize(survivors.select("id", "degree"))

@@ -23,11 +23,13 @@ per vertex (<< neighbor count after the pre-aggregation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import CheckpointStore, StateScratch, materialize
+from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import mutualize, vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 def label_propagation(
@@ -46,24 +48,8 @@ def label_propagation(
     the scaling harness's instrumentation (scripts/scaling_run.py); the
     numpy twin records ``iterations`` only."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import (
-        LOCAL_EDGE_THRESHOLD,
-        choose_partitions,
-        superstep_conf,
-        update_join_hint,
-    )
-
-    _UPD = update_join_hint()
-
     m0 = edges.count()
-    if engine == "local" and (checkpoint is not None or resume):
-        raise ValueError(
-            "engine='local' cannot honor checkpoint/resume; "
-            "use engine='distributed' (or 'auto', which routes around it)"
-        )
-    if engine == "auto" and checkpoint is None:
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    if choose_engine(m0, engine, checkpoint=checkpoint, resume=resume) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -74,135 +60,53 @@ def label_propagation(
             stats["iterations"] = rounds_run
         return LE.result_df(spark, ids, {"label": lab}, "id long, label long")
 
-    p = choose_partitions(spark, m0, num_partitions)
+    with Superstep(spark, m0, num_partitions, stats) as ss:
+        # join keys on dst each superstep -> partition+sort the static edge
+        # table by dst (see components.py rationale)
+        und = ss.name(ss.persist(mutualize(edges), "dst"))
+        verts = ss.persist(vertices_of(edges), "id")
+        upd = update_join_hint()
 
-    # join keys on dst each superstep -> partition+sort the static edge table
-    # by dst (see components.py rationale)
-    und = mutualize(edges).repartition(p, "dst").sortWithinPartitions("dst").persist()
-    verts = vertices_of(edges).repartition(p, "id").sortWithinPartitions("id").persist()
+        start, labels, _meta = ss.latest(checkpoint, resume)
+        if labels is None:
+            labels = verts.select("id", F.col("id").alias("label"))
+        else:
+            labels = labels.repartition(ss.p, "id")
+        # labels feed two branches per superstep (neighbor-mode gather + the
+        # keep-own-label fallback join) — stats must reset per superstep
+        # (checkpoint.StateScratch rationale).
+        labels, _ = ss.write(labels)
 
-    labels = None
-    start_iter = 0
-    if resume and checkpoint is not None:
-        got = checkpoint.latest(spark)
-        if got is not None:
-            start_iter, labels, _ = got
-            labels = labels.repartition(p, "id")
-    # labels feed two branches per superstep (neighbor-mode gather + the
-    # keep-own-label fallback join) — stats must reset per superstep
-    # (checkpoint.StateScratch rationale).
-    scratch = StateScratch(spark)
-    if labels is None:
-        labels = verts.select("id", F.col("id").alias("label"))
-    labels = scratch.roundtrip(labels, bucket_by="id", num_buckets=p)
-
-    iteration = start_iter
-    import uuid as _uuid
-
-    # registered once for the single-SQL superstep build (same policy as
-    # pagerank: one spark.sql() call replaces the py4j DataFrame-building
-    # round-trips when the state is a catalog table)
-    und_view = f"cassovary_lpa_und_{_uuid.uuid4().hex[:12]}"
-    und.createOrReplaceTempView(und_view)
-    state_table = scratch.last_table
-    # try/finally: a failure mid-superstep must not leak the temp view,
-    # scratch tables, or the persisted frames for the session lifetime
-    # (ADVICE r3)
-    try:
-      with superstep_conf(spark, p, m0):
-        import time as _time
-
-        while iteration < max_iterations:
-            t_superstep = _time.time()
-            if state_table is not None:
-                # NO WITH clause (see components.py: Spark 4.1 CTE planning
-                # breaks on merge joins over the persisted sorted view)
-                # mode label via min(struct(-cnt, label)): same winner as the
-                # old row_number window (highest count, ties to the smallest
-                # label) but as a plain aggregation — map-side partial combine
-                # and NO per-partition sort of the (id,label) frame (r4;
-                # measured in BENCH/BASELINE.md)
-                new_labels = spark.sql(f"""
-  SELECT /*+ {_UPD}(ml) */ s.id, coalesce(ml.new_label, s.label) AS label, s.label AS prev
-  FROM {state_table} s LEFT JOIN (
+        def step(labels, last):
+            state = ss.name(labels)
+            # NO WITH clause (see components.py: Spark 4.1 CTE planning breaks
+            # on merge joins over the persisted sorted view). Mode label via
+            # min(struct(-cnt, label)): the highest count, ties to the
+            # smallest label, as a plain aggregation — map-side partial
+            # combine and NO per-partition sort of the (id,label) frame (r4;
+            # measured in BENCH/BASELINE.md). The changed-count is observed
+            # during the state write (the previous label rides along as a
+            # dropped column) — one job/superstep.
+            new_labels, got = ss.write(
+                spark.sql(f"""
+  SELECT /*+ {upd}(ml) */ s.id, coalesce(ml.new_label, s.label) AS label, s.label AS prev
+  FROM {state} s LEFT JOIN (
       SELECT id, t.lab AS new_label FROM (
           SELECT id, min(named_struct('negc', -cnt, 'lab', label)) AS t
           FROM (
               SELECT /*+ MERGE(e) */ e.src AS id, l.label, count(*) AS cnt
-              FROM {und_view} e JOIN {state_table} l ON e.dst = l.id
+              FROM {und} e JOIN {state} l ON e.dst = l.id
               GROUP BY e.src, l.label
           ) GROUP BY id
       )
-  ) ml ON s.id = ml.id""")
-            else:
-                # DataFrame build: first iteration after resume/checkpoint,
-                # or when bucketed catalog writes are unavailable
-                nbr_label_counts = (
-                    und.hint("merge")
-                    .join(labels.select(F.col("id").alias("dst"), "label"), "dst")
-                    .groupBy(F.col("src").alias("id"), "label")
-                    .agg(F.count("*").alias("cnt"))
-                )
-                # min(struct(-cnt, label)) argmax — see the SQL branch
-                mode_label = (
-                    nbr_label_counts.groupBy("id")
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (-F.col("cnt")).alias("negc"),
-                                F.col("label").alias("lab"),
-                            )
-                        ).alias("t")
-                    )
-                    .select("id", F.col("t.lab").alias("new_label"))
-                )
-                new_labels = (
-                    labels.join(mode_label.hint(_UPD.lower()), "id", "left")
-                    .select(
-                        "id",
-                        F.coalesce("new_label", "label").alias("label"),
-                        F.col("label").alias("prev"),
-                    )
-                    .repartition(p, "id")
-                )
-            # changed-count collected via observe during the state write (the
-            # previous label rides along as a dropped column) — one job/superstep
-            obs = Observation()
-            new_labels = scratch.roundtrip(
-                new_labels.observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("prev") != F.col("label"), 1).otherwise(0)
-                    ).alias("changed"),
-                )
-                .drop("prev"),
-                bucket_by="id", num_buckets=p,
+  ) ml ON s.id = ml.id"""),
+                F.sum(F.when(F.col("prev") != F.col("label"), 1).otherwise(0)).alias("changed"),
+                drop=("prev",),
             )
-            state_table = scratch.last_table
-            iteration += 1
+            return new_labels, {"error": float(got["changed"] or 0)}
 
-            changed = obs.get["changed"]
-            if stats is not None:
-                stats.setdefault("superstep_walls", []).append(
-                    round(_time.time() - t_superstep, 3)
-                )
-                stats["iterations"] = iteration
-            labels = new_labels
-            if checkpoint is not None:
-                # the checkpoint store returns a non-catalog frame — the next
-                # iteration must build from the DataFrame, not the stale table
-                labels = checkpoint.save(iteration, labels, {"error": float(changed)})
-                state_table = None
-            if changed == 0:
-                break
-
-      result = materialize(labels.select("id", "label"))
-    finally:
-        scratch.close()
-        try:
-            spark.catalog.dropTempView(und_view)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-        und.unpersist()
-        verts.unpersist()
-    return result
+        labels, _ = ss.run(
+            labels, step, lambda row: row.get("error") == 0,
+            max_iterations=max_iterations, start=start, checkpoint=checkpoint,
+        )
+        return materialize(labels.select("id", "label"))

@@ -1,6 +1,7 @@
 """Adaptive single-node execution for small graphs (COST-aware engine choice).
 
-Below ``plans.LOCAL_EDGE_THRESHOLD`` edges, an iterative graph algorithm's
+Below ``superstep.local_edge_threshold()`` edges (the routing rule is
+``superstep.choose_engine``), an iterative graph algorithm's
 entire state fits in one task's memory and the distributed superstep
 machinery (state round-trips, exchanges, task scheduling) is pure fixed cost
 — measured ~0.5s/superstep at 319k edges where the actual arithmetic is

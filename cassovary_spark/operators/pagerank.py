@@ -38,11 +38,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import CheckpointStore, StateScratch, materialize
+from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import out_degrees, vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 @dataclass
@@ -55,6 +57,12 @@ class PageRankResult:
     history: list[dict] = field(default_factory=list)
 
 
+def _empty(spark) -> PageRankResult:
+    return PageRankResult(
+        spark.createDataFrame([], "id long, pagerank double"), 0.0, 0, 0, 0
+    )
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -64,7 +72,6 @@ def pagerank(
     checkpoint: CheckpointStore | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
-    gather_engine: str = "join",
     engine: str = "auto",
 ) -> PageRankResult:
     """Run PageRank over a directed ``edges(src, dst)`` DataFrame.
@@ -72,248 +79,117 @@ def pagerank(
     Returns per-vertex scores matching the reference recurrence to float64
     precision (fixture tolerance 1e-6, PageRankSpec.scala:22).
 
-    ``gather_engine``: "join" (pure Catalyst join+groupBy) or "pandas"
-    (CSR-block combine in Arrow-vectorized pandas, operators/csr.py) — same
-    results, alternative physical strategy.
-
-    ``engine``: "auto" collapses graphs under plans.LOCAL_EDGE_THRESHOLD
-    edges to one vectorized in-memory power iteration (COST-aware choice —
-    see operators/local_engine.py; equality-tested vs the distributed path);
+    ``engine``: "auto" collapses small graphs to one vectorized in-memory
+    power iteration (COST-aware choice, ``superstep.choose_engine`` — see
+    operators/local_engine.py; equality-tested vs the distributed path);
     "distributed"/"local" force a path. Checkpointed/resumed runs always use
     the distributed path.
     """
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
-    # partition count scales with the edge count (capped by
-    # spark.sql.shuffle.partitions) — one cheap pre-scan buys every superstep
-    # a task count matched to the data (plans.choose_partitions)
-    from cassovary_spark.plans import (
-        LOCAL_EDGE_THRESHOLD,
-        choose_partitions,
-        superstep_conf,
-        update_join_hint,
-    )
-
-    _UPD = update_join_hint()
-
-    m0 = edges.count()
-    if engine == "local" and (checkpoint is not None or resume):
-        # the numpy twin has no durable superstep state — silently dropping
-        # the caller's checkpoint/resume contract would be a wrong-results
-        # trap on restart
-        raise ValueError(
-            "engine='local' cannot honor checkpoint/resume; "
-            "use engine='distributed' (or 'auto', which routes around it)"
-        )
-    if engine == "auto" and checkpoint is None and gather_engine == "join":
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    m = edges.count()
+    if choose_engine(m, engine, checkpoint=checkpoint, resume=resume) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
         if len(ids) == 0:
-            empty = spark.createDataFrame([], "id long, pagerank double")
-            return PageRankResult(empty, 0.0, 0, 0, 0)
+            return _empty(spark)
         pr, error, its, history = LE.pagerank_numpy(
             ids, si, di, damping, max_iterations, tolerance
         )
         ranks = LE.result_df(spark, ids, {"pagerank": pr}, "id long, pagerank double")
-        return PageRankResult(ranks, error, its, len(ids), m0, history)
+        return PageRankResult(ranks, error, its, len(ids), m, history)
 
-    p = choose_partitions(spark, m0, num_partitions)
-    outdeg = out_degrees(edges)
+    with Superstep(spark, m, num_partitions) as ss:
+        outdeg = out_degrees(edges)
+        # vertex table with dangling flag, stationary across supersteps
+        verts = ss.persist(
+            vertices_of(edges)
+            .join(outdeg, "id", "left")
+            .select("id", F.col("out_degree").isNull().alias("is_dangling")),
+            "id",
+        )
+        n = verts.count()
+        if n == 0:
+            return _empty(spark)
+        # static weighted edge table: w = d / outdeg(src); supersteps re-use
+        # its shuffle output AND sort order instead of re-shuffling/re-sorting
+        # the (huge) edge table
+        wedges = ss.persist(
+            edges.join(outdeg.withColumnRenamed("id", "src"), "src")
+            .select("src", "dst", (F.lit(damping) / F.col("out_degree")).alias("w")),
+            "src",
+        )
+        wedges.count()
+        wedges_view = ss.name(wedges)
+        damping_amount = (1.0 - damping) / n
+        upd = update_join_hint()
 
-    # vertex table with dangling flag, stationary across supersteps.
-    # Partitioned AND sorted within partitions: the cached scan reports both
-    # hash-partitioning and ordering, so the per-superstep sort-merge joins
-    # skip exchange + sort on this (static) side entirely.
-    verts = (
-        vertices_of(edges)
-        .join(outdeg, "id", "left")
-        .select("id", F.col("out_degree").isNull().alias("is_dangling"))
-        .repartition(p, "id")
-        .sortWithinPartitions("id")
-        .persist()
-    )
-    n = verts.count()
-    if n == 0:
-        empty = spark.createDataFrame([], "id long, pagerank double")
-        return PageRankResult(empty, 0.0, 0, 0, 0)
-
-    # static weighted edge table: w = d / outdeg(src); partitioned by src,
-    # sorted by src, persisted — supersteps re-use the shuffle output AND the
-    # sort order instead of re-shuffling/re-sorting the (huge) edge table.
-    wedges = (
-        edges.join(outdeg.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(damping) / F.col("out_degree")).alias("w"))
-        .repartition(p, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    wedges.count()
-    m = m0
-
-    damping_amount = (1.0 - damping) / n
-
-    start_iter = 0
-    history: list[dict] = []
-    error = 100.0 + tolerance  # reference initial error (PageRank.scala:82)
-
-    # state materialization is a storage round-trip per superstep (measured
-    # 3-4x faster than localCheckpoint at 16M vertices, frees old state, and
-    # resets Catalyst stats — checkpoint.StateScratch)
-    scratch = StateScratch(spark)
-
-    ranks = None
-    if resume and checkpoint is not None:
-        got = checkpoint.latest(spark)
-        if got is not None:
-            start_iter, ranks, meta = got
-            error = float(meta["metrics"]["error"])
-    if ranks is None:
-        ranks = scratch.roundtrip(
-            verts.select("id", F.lit(1.0 / n).alias("pagerank"), "is_dangling"),
-            bucket_by="id", num_buckets=p,
+        start, ranks, meta = ss.latest(checkpoint, resume)
+        # reference initial error (PageRank.scala:82)
+        error = float(meta["metrics"]["error"]) if meta else 100.0 + tolerance
+        if ranks is None:
+            ranks, _ = ss.write(
+                verts.select("id", F.lit(1.0 / n).alias("pagerank"), "is_dangling")
+            )
+        # dangling mass of the CURRENT ranks (reference recomputes per
+        # iteration, :92-93); after the first superstep it rides the state
+        # write, so each superstep costs exactly one job
+        dangle_mass = (
+            ranks.filter(F.col("is_dangling")).agg(F.sum("pagerank").alias("s")).first()["s"]
+            or 0.0
         )
 
-    def terminated(it: int, err: float) -> bool:
-        if max_iterations is not None and it >= max_iterations:
-            return True
-        return err <= tolerance
-
-    # dangling mass of the CURRENT ranks (reference recomputes per iteration,
-    # :92-93); after the first superstep it's folded into the error job below
-    # so each superstep costs exactly 2 jobs: materialize + one combined agg.
-    dangle_mass = (
-        ranks.filter(F.col("is_dangling")).agg(F.sum("pagerank").alias("s")).first()["s"]
-        or 0.0
-    )
-
-    import time as _time
-    import uuid as _uuid
-
-    iteration = start_iter
-    # registered once for the single-SQL superstep build; unique name so two
-    # concurrent pagerank calls in one session can't collide
-    wedges_view = f"cassovary_pr_wedges_{_uuid.uuid4().hex[:12]}"
-    wedges.createOrReplaceTempView(wedges_view)
-    # catalog table holding the CURRENT state, when there is one (scratch in
-    # bucketed mode); None right after resume/checkpoint frames, which are
-    # not catalog tables — those iterations use the DataFrame build below
-    state_table = scratch.last_table
-    # try/finally: a failure mid-superstep must not leak the temp view,
-    # scratch tables, or the persisted verts/wedges for the session lifetime
-    # (ADVICE r3)
-    try:
-      # small graphs: AQE off + shuffle partitions pinned to p for the loop
-      with superstep_conf(spark, p, m):
-        while not terminated(iteration, error):
-            _t0 = _time.time()
-            dangle_sum = damping * dangle_mass / n
-
+        def step(ranks, last):
+            dangle_sum = damping * last["dangle_mass"] / n
+            state = ss.name(ranks)
             # Join strategy is pinned per role: the GATHER join keeps MERGE
             # (both sides pre-sorted on the key — zero-sort SMJ) and the
             # update join uses plans.update_join_hint() (SHUFFLE_HASH by
             # default: skips sorting the fresh aggregate, r6 measured -13%
             # whole-superstep); neither ever broadcasts the O(V) rank table
-            # (a per-superstep driver roundtrip, fatal at scale).
-            if gather_engine != "pandas" and state_table is not None:
-                # one spark.sql() call instead of ~15 py4j DataFrame-building
-                # round-trips — measured ~10% of the superstep fixed cost at
-                # 319k edges (scripts/profile_superstep7.py); plan and
-                # checksums identical to the DataFrame build below
-                new_ranks = spark.sql(f"""
-  SELECT /*+ {_UPD}(c) */ s.id,
+            # (a per-superstep driver roundtrip, fatal at scale). The rank
+            # table itself is the full vertex set, so the update join is
+            # ranks (not verts) x contribs, and the T1 error + next dangling
+            # mass are observed during the state write: ONE read of the
+            # previous state and ONE write of the new state per superstep.
+            # No explicit repartition: the update join's output already
+            # reports hash(id) partitioning (measured: an explicit exchange
+            # only cost time).
+            new_ranks, got = ss.write(
+                spark.sql(f"""
+  SELECT /*+ {upd}(c) */ s.id,
          coalesce(c.gathered, 0.0d) + {damping_amount!r}d + {dangle_sum!r}d
              AS pagerank,
          s.is_dangling,
          s.pagerank AS prev
-  FROM {state_table} s
+  FROM {state} s
   LEFT JOIN (
       SELECT /*+ MERGE(r) */ e.dst AS id, sum(e.w * r.pagerank) AS gathered
-      FROM {wedges_view} e JOIN {state_table} r ON e.src = r.id
+      FROM {wedges_view} e JOIN {state} r ON e.src = r.id
       GROUP BY e.dst
-  ) c ON s.id = c.id""")
-            else:
-                if gather_engine == "pandas":
-                    from cassovary_spark.operators.csr import pandas_gather_sum
-
-                    contribs = pandas_gather_sum(wedges, ranks)
-                else:
-                    contribs = (
-                        wedges.hint("merge")
-                        .join(ranks.select(F.col("id").alias("src"), "pagerank"), "src")
-                        .groupBy("dst")
-                        .agg(F.sum(F.col("w") * F.col("pagerank")).alias("gathered"))
-                    )
-                # the rank table itself is the full vertex set, so the update
-                # join is ranks (not verts) x contribs — and the T1 error +
-                # next dangling mass are collected via ``observe`` DURING the
-                # state-write job (CollectMetrics runs as the rows stream to
-                # the sink), so each superstep is exactly ONE job with ONE read
-                # of the previous state and ONE write of the new state — no
-                # separate stats scan. No explicit repartition: the update
-                # join's output already reports hash(id) partitioning, and the
-                # bucketed write adds its own exchange if it ever doesn't
-                # (measured: the explicit exchange only cost time,
-                # scripts/profile_superstep4.py).
-                new_ranks = (
-                    ranks.join(
-                        contribs.withColumnRenamed("dst", "id").hint(_UPD.lower()),
-                        "id",
-                        "left",
-                    )
-                    .select(
-                        "id",
-                        (
-                            F.coalesce(F.col("gathered"), F.lit(0.0))
-                            + F.lit(damping_amount)
-                            + F.lit(dangle_sum)
-                        ).alias("pagerank"),
-                        "is_dangling",
-                        F.col("pagerank").alias("prev"),
-                    )
-                )
-            obs = Observation()
-            observed = new_ranks.observe(
-                obs,
+  ) c ON s.id = c.id"""),
                 F.sum(F.abs(F.col("prev") - F.col("pagerank"))).alias("e"),
                 F.sum(F.when(F.col("is_dangling"), F.col("pagerank"))).alias("d"),
-            ).drop("prev")
-            new_ranks = scratch.roundtrip(observed, bucket_by="id", num_buckets=p)
-            state_table = scratch.last_table
-            stats = obs.get
-            error = stats["e"]
-            dangle_mass = stats["d"] or 0.0
-            iteration += 1
-            row = {
-                "iteration": iteration,
-                "error": error,
+                drop=("prev",),
+            )
+            return new_ranks, {
+                "error": got["e"],
                 "dangle_sum": dangle_sum,
                 "node_count": n,
                 "edge_count": m,
-                "wall_sec": round(_time.time() - _t0, 3),
-                "state_bucketed": scratch._bucketing_ok,
+                "dangle_mass": got["d"] or 0.0,
             }
-            history.append(row)
-            if checkpoint is not None and iteration % checkpoint_every == 0:
-                # the checkpoint store returns its own (non-catalog) frame —
-                # the next iteration must build from the DataFrame, not the
-                # now-stale scratch table name
-                new_ranks = checkpoint.save(iteration, new_ranks, row)
-                state_table = None
-            ranks = new_ranks
 
-      # materialize the final state BEFORE closing the scratch (the frame is
-      # backed by the last scratch table); close() frees per-call state dirs
-      # + catalog tables instead of leaking them until process exit
-      result = materialize(ranks.select("id", "pagerank"))
-    finally:
-        scratch.close()
-        try:
-            spark.catalog.dropTempView(wedges_view)
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
-        verts.unpersist()
-        wedges.unpersist()
-    return PageRankResult(result, error, iteration, n, m, history)
+        ranks, history = ss.run(
+            ranks, step, lambda row: row["error"] <= tolerance,
+            max_iterations=max_iterations,
+            row={"error": error, "dangle_mass": dangle_mass},
+            start=start, checkpoint=checkpoint, checkpoint_every=checkpoint_every,
+        )
+        if history:
+            error = history[-1]["error"]
+        # materialize the final state BEFORE the driver frees the scratch
+        # that backs it
+        result = materialize(ranks.select("id", "pagerank"))
+    return PageRankResult(result, error, start + len(history), n, m, history)

@@ -23,11 +23,13 @@ JVM-side via md5-derived uniforms over grouped adjacency arrays (see
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import StateScratch, materialize
 from cassovary_spark.graph import out_degrees, vertices_of
+from cassovary_spark.plans import update_join_hint
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 def _seed_df(spark, seeds, name: str = "id") -> DataFrame:
@@ -67,19 +69,13 @@ def bfs(
     BFS exactly as with random walks.
     """
     spark = edges.sparkSession
-    from cassovary_spark.plans import LOCAL_EDGE_THRESHOLD, choose_partitions
+    from cassovary_spark.plans import choose_partitions
 
     m0 = edges.count()
-    if engine == "auto":
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-        if engine == "local" and events:
-            # The events twin encodes null-prev as -1; a graph with negative
-            # vertex ids (legal in read_edge_list/DynamicGraph) would alias
-            # real predecessors to NULL — route those to the distributed plan.
-            mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
-            if mn is not None and mn < 0:
-                engine = "distributed"
-    if engine == "local":
+    route = choose_engine(m0, engine)
+    if route == "local" and events and engine != "local" and _has_negative_ids(edges):
+        route = "distributed"
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
         import numpy as np
 
@@ -303,24 +299,25 @@ def _adjacency_lists(edges: DataFrame, p: int) -> DataFrame:
 
 
 
+def _has_negative_ids(edges) -> bool:
+    """The event-log twins encode null-prev as -1; a graph with negative
+    vertex ids (legal in read_edge_list/DynamicGraph) would alias real
+    predecessors to NULL, so auto routing sends it to the distributed plan."""
+    mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
+    return mn is not None and mn < 0
+
+
+# walks' local twin holds the whole (walker, step) event log in driver memory
+WALK_LOCAL_MAX_EVENTS = 5_000_000
+
+
 def _walk_local_ok(edges, num_walkers: int, num_steps: int, engine: str) -> bool:
     """Route a walk to the in-memory twin: small graph, bounded event-log
-    size, and non-negative vertex ids (the twin encodes null-prev as -1)."""
-    if engine == "local":
-        return True
-    if engine != "auto":
-        return False
-    from pyspark.sql import functions as F  # noqa: F811 — local import parity
-
-    from cassovary_spark.plans import LOCAL_EDGE_THRESHOLD
-
-    if num_walkers * (num_steps + 1) > 5_000_000:
-        return False
-    m = edges.count()
-    if m > LOCAL_EDGE_THRESHOLD:
-        return False
-    mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
-    return mn is None or mn >= 0
+    size, and non-negative vertex ids."""
+    route = choose_engine(
+        edges, engine, local_ok=num_walkers * (num_steps + 1) <= WALK_LOCAL_MAX_EVENTS
+    )
+    return route == "local" and (engine == "local" or not _has_negative_ids(edges))
 
 
 def _walk_uniform(tag: str, step: int, seed: int):
@@ -640,19 +637,8 @@ def personalized_pagerank(
     if not seeds:
         raise ValueError("seeds must be non-empty")
     spark = edges.sparkSession
-    from cassovary_spark.plans import (
-        LOCAL_EDGE_THRESHOLD,
-        choose_partitions,
-        superstep_conf,
-        update_join_hint,
-    )
-
-    _upd = update_join_hint().lower()
-
     m0 = edges.count()
-    if engine == "auto":
-        engine = "local" if m0 <= LOCAL_EDGE_THRESHOLD else "distributed"
-    if engine == "local":
+    if choose_engine(m0, engine) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -666,90 +652,70 @@ def personalized_pagerank(
         )
         return LE.result_df(spark, ids, {"score": score}, "id long, score double")
 
-    p = choose_partitions(spark, m0, num_partitions)
     alpha = float(reset_prob)
     d = 1.0 - alpha
+    with Superstep(spark, m0, num_partitions) as ss:
+        p = ss.p
+        outdeg = out_degrees(edges)
+        verts = ss.persist(
+            vertices_of(edges)
+            .join(outdeg, "id", "left")
+            .select("id", F.col("out_degree").isNull().alias("is_dangling")),
+            "id",
+        )
+        # mass divides over UNIQUE seeds (matching _seed_df's dedupe) so the
+        # initial distribution always sums to 1
+        n_seeds = len({int(s) for s in seeds})
+        seed_df = _seed_df(spark, seeds).withColumn("seed_mass", F.lit(1.0 / n_seeds))
+        verts_s = ss.persist(
+            verts.join(seed_df, "id", "left").select(
+                "id", "is_dangling", F.coalesce("seed_mass", F.lit(0.0)).alias("seed_mass")
+            )
+        )
+        wedges = ss.persist(
+            edges.join(outdeg.withColumnRenamed("id", "src"), "src")
+            .select("src", "dst", (F.lit(d) / F.col("out_degree")).alias("w")),
+            "src",
+        )
+        upd = update_join_hint().lower()
 
-    outdeg = out_degrees(edges)
-    verts = (
-        vertices_of(edges)
-        .join(outdeg, "id", "left")
-        .select("id", F.col("out_degree").isNull().alias("is_dangling"))
-        .repartition(p, "id")
-        .sortWithinPartitions("id")
-        .persist()
-    )
-    # mass divides over UNIQUE seeds (matching _seed_df's dedupe) so the
-    # initial distribution always sums to 1
-    n_seeds = len({int(s) for s in seeds})
-    seed_df = _seed_df(spark, seeds).withColumn(
-        "seed_mass", F.lit(1.0 / n_seeds)
-    )
-    verts_s = verts.join(seed_df, "id", "left").select(
-        "id", "is_dangling", F.coalesce("seed_mass", F.lit(0.0)).alias("seed_mass")
-    ).persist()
+        ranks, _ = ss.write(
+            verts_s.select("id", F.col("seed_mass").alias("score"), "is_dangling", "seed_mass")
+        )
+        # initial dangling mass (one scan); afterwards collected by observe
+        # during each state write — one job per superstep total
+        dangle = (
+            ranks.filter(F.col("is_dangling")).agg(F.sum("score").alias("s")).first()["s"]
+            or 0.0
+        )
 
-    wedges = (
-        edges.join(outdeg.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.lit(d) / F.col("out_degree")).alias("w"))
-        .repartition(p, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+        def step(ranks, last):
+            contribs = (
+                wedges.hint("merge").join(ranks.select(F.col("id").alias("src"), "score"), "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("w") * F.col("score")).alias("gathered"))
+            )
+            new_ranks, got = ss.write(
+                ranks.join(contribs.withColumnRenamed("dst", "id").hint(upd), "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.coalesce(F.col("gathered"), F.lit(0.0))
+                        + (F.lit(alpha) + F.lit(d) * F.lit(last["dangle"])) * F.col("seed_mass")
+                    ).alias("score"),
+                    "is_dangling",
+                    "seed_mass",
+                    F.col("score").alias("prev"),
+                )
+                .repartition(p, "id"),
+                F.sum(F.abs(F.col("prev") - F.col("score"))).alias("e"),
+                F.sum(F.when(F.col("is_dangling"), F.col("score"))).alias("d"),
+                drop=("prev",),
+            )
+            return new_ranks, {"error": got["e"], "dangle": got["d"] or 0.0}
 
-    scratch = StateScratch(spark)
-    ranks = scratch.roundtrip(
-        verts_s.select("id", F.col("seed_mass").alias("score"), "is_dangling", "seed_mass"),
-        bucket_by="id", num_buckets=p,
-    )
-    # initial dangling mass (one scan); afterwards collected by observe
-    # during each state write — one job per superstep total
-    dangle = (
-        ranks.filter(F.col("is_dangling")).agg(F.sum("score").alias("s")).first()["s"]
-        or 0.0
-    )
-    with superstep_conf(spark, p, m0):
-      for _ in range(max_iterations):
-          contribs = (
-              wedges.hint("merge").join(ranks.select(F.col("id").alias("src"), "score"), "src")
-              .groupBy("dst")
-              .agg(F.sum(F.col("w") * F.col("score")).alias("gathered"))
-          )
-          new_ranks = (
-              ranks.join(
-                  contribs.withColumnRenamed("dst", "id").hint(_upd), "id", "left"
-              )
-              .select(
-                  "id",
-                  (
-                      F.coalesce(F.col("gathered"), F.lit(0.0))
-                      + (F.lit(alpha) + F.lit(d) * F.lit(dangle)) * F.col("seed_mass")
-                  ).alias("score"),
-                  "is_dangling",
-                  "seed_mass",
-                  F.col("score").alias("prev"),
-              )
-              .repartition(p, "id")
-          )
-          obs = Observation()
-          new_ranks = scratch.roundtrip(
-              new_ranks.observe(
-                  obs,
-                  F.sum(F.abs(F.col("prev") - F.col("score"))).alias("e"),
-                  F.sum(F.when(F.col("is_dangling"), F.col("score"))).alias("d"),
-              ).drop("prev"),
-              bucket_by="id", num_buckets=p,
-          )
-          stats = obs.get
-          err = stats["e"]
-          dangle = stats["d"] or 0.0
-          ranks = new_ranks
-          if err <= tolerance:
-              break
-
-    result = materialize(ranks.select("id", "score"))
-    scratch.close()
-    verts.unpersist()
-    verts_s.unpersist()
-    wedges.unpersist()
-    return result
+        ranks, _ = ss.run(
+            ranks, step, lambda row: row["error"] <= tolerance,
+            max_iterations=max_iterations, row={"error": float("inf"), "dangle": dangle},
+        )
+        return materialize(ranks.select("id", "score"))

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassovary_spark.graph import canonicalize_undirected, mutualize
+from cassovary_spark.superstep import choose_engine
 
 
 def _oriented(edges: DataFrame) -> DataFrame:
@@ -57,24 +58,26 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
+# edge count alone is not a safe in-memory gate: the twin's wedge self-merge
+# materializes sum(oriented_deg^2) rows, ~7e8 for a dense 1M-edge
+# near-clique — so auto routing caps the edges AND re-checks the exact wedge
+# volume (O(m), from the already-collected edges) before committing
+TRIANGLES_LOCAL_CAP = 1_000_000
+TRIANGLES_LOCAL_MAX_WEDGES = 50_000_000
+
+
 def triangle_count(edges: DataFrame, engine: str = "auto") -> int:
     """Exact number of triangles in the undirected view of ``edges``."""
-    auto = engine == "auto"
-    if auto:
-        # edge count alone is not a safe in-memory gate: the twin's wedge
-        # self-merge materializes sum(oriented_deg^2) rows, ~7e8 for a dense
-        # 1M-edge near-clique — so auto routing re-checks the exact wedge
-        # volume (O(m), from the already-collected edges) before committing
-        engine = "local" if edges.count() <= 1_000_000 else "distributed"
-    if engine == "local":
+    if choose_engine(edges, engine, cap=TRIANGLES_LOCAL_CAP) == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
         if len(ids) == 0:
             return 0
-        if auto and LE.oriented_wedge_volume(ids, si, di) > 50_000_000:
-            engine = "distributed"
-        else:
+        if (
+            engine == "local"
+            or LE.oriented_wedge_volume(ids, si, di) <= TRIANGLES_LOCAL_MAX_WEDGES
+        ):
             return LE.triangle_count_numpy(ids, si, di)
     o = _oriented(edges).persist()
     # wedges at the low-degree apex: (a->b, a->c); order the two spokes by the

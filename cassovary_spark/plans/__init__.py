@@ -1,15 +1,11 @@
-"""Physical layout planning: dual-orientation edge copies, hub salting,
-degree bucketing, and the reference's Partitioner family — the engine-level
+"""Physical layout planning: partition counts, the superstep join hint and
+conf scope, and the reference's Partitioner family — the engine-level
 layout decisions Catalyst doesn't make."""
 
 from cassovary_spark.plans.layout import (
-    DualOrientationEdges,
-    LOCAL_EDGE_THRESHOLD,
     choose_partitions,
-    salted_gather_sum,
     superstep_conf,
     update_join_hint,
-    degree_buckets,
 )
 from cassovary_spark.plans.partitioners import (
     random_node_mapper,
@@ -20,13 +16,9 @@ from cassovary_spark.plans.partitioners import (
 )
 
 __all__ = [
-    "DualOrientationEdges",
-    "LOCAL_EDGE_THRESHOLD",
     "choose_partitions",
     "superstep_conf",
     "update_join_hint",
-    "salted_gather_sum",
-    "degree_buckets",
     "random_node_mapper",
     "hash_source_mapper",
     "hash_dest_mapper",

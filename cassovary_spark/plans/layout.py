@@ -1,57 +1,18 @@
-"""Engine-level physical layout decisions.
-
-Reference analogs:
-- dual orientation = HashSourceAndDestMapper's 2-replica edge placement
-  (graph/distributed/Partitioner.scala:55-65) and the reference's
-  direction-aware gather/scatter choice (LinkAnalysis.scala:52-55): keep the
-  edge table hash-partitioned (and in-partition sorted) by BOTH src and dst so
-  either gather direction joins without exchanging the big side.
-- hub salting = the walk-time hub-degree threshold (graph/Traverser.scala:96-99)
-  generalized: a vertex whose degree dwarfs the partition average makes one
-  reducer the straggler; splitting its edges across salt sub-keys, partially
-  aggregating, then merging bounds every reducer's key group.
-- degree bucketing = sparse-vs-dense index choice
-  (graph/ArrayBasedDirectedGraph.scala:81-91) mapped to planning metadata.
-"""
+"""Engine-level physical layout decisions: the partition count of an
+operator's stationary tables, the join hint of the per-superstep state
+update, and the session conf scope of a superstep loop."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
+from contextlib import contextmanager
 
 ROWS_PER_PARTITION = 2_000_000
 SMALL_ROWS_PER_PARTITION = 40_000
 
-# Below this edge count an iterative operator collapses to a single
-# vectorized in-memory pass (the COST-paper-aware adaptive engine,
-# operators/local_engine.py — the reference's own execution model), with
-# semantics equality-tested against the distributed path.
-#
-# The bound is DRIVER-MEMORY-derived, not a compute crossover: r6
-# measurement at 6M edges put the numpy engine at ~50ms/PageRank iteration
-# (8ns/edge) vs ~0.7s/distributed superstep at local[32] (57ns/edge + 0.35s
-# fixed), so on compute alone the local path wins far beyond any reasonable
-# single-process size and the honest limit is the edge arrays + their
-# sort/unique workspace (~4x the 16 B/edge payload) fitting a bounded slice
-# of driver memory. CASSOVARY_LOCAL_EDGE_BUDGET_MB (default 256 MB of edge
-# payload => ~16.7M edges, peak workspace ~1 GB) sizes it per deployment;
-# graphs past it run the distributed supersteps.
-
-
-def _local_edge_threshold() -> int:
-    import os
-
-    budget_mb = int(os.environ.get("CASSOVARY_LOCAL_EDGE_BUDGET_MB", "256"))
-    return (budget_mb * (1 << 20)) // 16
-
-
-LOCAL_EDGE_THRESHOLD = _local_edge_threshold()
-
-
-from contextlib import contextmanager
+# superstep_conf turns AQE off below this many edge rows. Its own constant:
+# it equals the local engine's default budget (256 MB of 16 B/edge payload)
+# but must not move when a deployment changes that budget.
+AQE_OFF_MAX_ROWS = 16_777_216
 
 
 def update_join_hint() -> str:
@@ -80,9 +41,9 @@ def superstep_conf(spark, num_partitions: int, rows: int):
     per-query re-planning is ~0.07s/superstep of pure overhead when every
     stage is already tiny — measured r2) and ``spark.sql.shuffle.partitions``
     pinned to the operator's partition count so intermediate exchanges match
-    the bucketed state layout. No-op at scale (rows >= LOCAL_EDGE_THRESHOLD),
+    the bucketed state layout. No-op at scale (rows >= AQE_OFF_MAX_ROWS),
     where AQE skew-splitting is worth its planning cost."""
-    if rows >= LOCAL_EDGE_THRESHOLD:
+    if rows >= AQE_OFF_MAX_ROWS:
         yield
         return
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -122,82 +83,3 @@ def choose_partitions(spark, edges, requested: int | None = None) -> int:
     )
     need = max(floor, -(-int(n_rows) // ROWS_PER_PARTITION))
     return max(1, min(cap, need))
-
-
-@dataclass
-class DualOrientationEdges:
-    """Both orientations of an edge table, each co-partitioned + sorted on its
-    join key and persisted. ``gather('dst')`` answers "sum something from my
-    in-neighbors"; ``gather('src')`` the out-direction."""
-
-    by_src: DataFrame
-    by_dst: DataFrame
-    num_partitions: int
-
-    @classmethod
-    def build(cls, edges: DataFrame, num_partitions: int | None = None) -> "DualOrientationEdges":
-        p = num_partitions or int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        e = edges.select("src", "dst")
-        by_src = e.repartition(p, "src").sortWithinPartitions("src").persist()
-        by_dst = e.repartition(p, "dst").sortWithinPartitions("dst").persist()
-        return cls(by_src, by_dst, p)
-
-    def oriented(self, key: str) -> DataFrame:
-        return self.by_src if key == "src" else self.by_dst
-
-    def unpersist(self) -> None:
-        self.by_src.unpersist()
-        self.by_dst.unpersist()
-
-
-def degree_buckets(edges: DataFrame, boundaries: tuple[int, ...] = (10, 100, 10_000)) -> DataFrame:
-    """Per-vertex degree bucket metadata ``(id, out_degree, bucket)`` where
-    bucket 0 holds the smallest degrees. Planning input for salting and for
-    walk hub-thresholds."""
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_degree"))
-    b = F.lit(len(boundaries))
-    for i, bound in enumerate(reversed(boundaries)):
-        b = F.when(F.col("out_degree") <= bound, len(boundaries) - 1 - i).otherwise(b)
-    return deg.select("id", "out_degree", b.cast("int").alias("bucket"))
-
-
-def salted_gather_sum(
-    edges: DataFrame,
-    values: DataFrame,
-    num_salts: int = 8,
-    hub_threshold: int = 100_000,
-    value_col: str = "value",
-) -> DataFrame:
-    """Skew-safe gather: ``sum of values[src] grouped by dst`` where hub
-    destinations (in-degree > hub_threshold) are split across ``num_salts``
-    sub-keys, partially aggregated, then merged.
-
-    Semantically identical to
-    ``edges.join(values, src).groupBy(dst).sum(value)`` — proven by the
-    equality test — but no reducer ever sees more than
-    ``max(hub_threshold, in_degree/num_salts)`` rows for one key.
-
-    Note: Spark's hash aggregate already does map-side partial aggregation,
-    which handles most skew for algebraic aggregates; salting matters when the
-    aggregate is non-algebraic (collect_list/top-k) or when AQE skew handling
-    is unavailable. This operator is the explicit, engine-controlled form.
-    """
-    indeg = edges.groupBy("dst").agg(F.count("*").alias("in_deg"))
-    hubs = indeg.filter(F.col("in_deg") > hub_threshold).select("dst").persist()
-
-    v = values.select(F.col("id").alias("src"), F.col(value_col).alias("_v"))
-    joined = edges.join(v, "src")
-
-    normal = joined.join(hubs, "dst", "left_anti")
-    hubbed = joined.join(F.broadcast(hubs), "dst", "left_semi").withColumn(
-        "_salt", F.pmod(F.xxhash64("src"), F.lit(num_salts))
-    )
-
-    normal_agg = normal.groupBy("dst").agg(F.sum("_v").alias("gathered"))
-    hub_partial = hubbed.groupBy("dst", "_salt").agg(F.sum("_v").alias("_pg"))
-    hub_agg = hub_partial.groupBy("dst").agg(F.sum("_pg").alias("gathered"))
-
-    out = normal_agg.union(hub_agg)
-    return out

@@ -46,8 +46,7 @@ def hash_dest_mapper(edges: DataFrame, k: int) -> DataFrame:
 def hash_source_and_dest_mapper(edges: DataFrame, k: int) -> DataFrame:
     """2-replica layout (Partitioner.scala:55-65): each edge appears on its
     source's instance AND its destination's instance, so any instance can
-    resolve both endpoints locally — the storage-level form of
-    ``plans.layout.DualOrientationEdges``. Rows tagged with ``orientation``
+    resolve both endpoints locally. Rows tagged with ``orientation``
     ('src'/'dst'); edges whose endpoints hash together emit one row per
     orientation all the same (the reference overwrites by-dest with
     by-source; keeping the tag preserves which copy serves which join)."""

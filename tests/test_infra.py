@@ -1,5 +1,4 @@
-"""Checkpoint/resume, transcript round-trip invariant, readers/writers,
-layout (salting / dual orientation) equivalence."""
+"""Checkpoint/resume, transcript round-trip invariant, readers/writers."""
 
 from __future__ import annotations
 
@@ -96,52 +95,6 @@ def test_partitioned_writer(spark, tmp_path):
     # bucket pruning: reading one bucket reads a subset
     one = spark.read.parquet(path).filter(F.col("bucket") == 0)
     assert one.count() < len(G6)
-
-
-def test_salted_gather_equivalence(spark):
-    from cassovary_spark.plans import salted_gather_sum
-
-    from cassovary_spark.sources.generators import random_graph
-
-    e = random_graph(spark, 100, 0.2, seed=21)
-    vals = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst")))
-        .distinct()
-        .withColumn("value", (F.col("id") % 7 + 1).cast("double"))
-    )
-    plain = (
-        e.join(vals.select(F.col("id").alias("src"), "value"), "src")
-        .groupBy("dst")
-        .agg(F.sum("value").alias("gathered"))
-    )
-    # hub_threshold=5 forces most vertices down the salted path
-    salted = salted_gather_sum(e, vals, num_salts=4, hub_threshold=5)
-    a = {r["dst"]: r["gathered"] for r in plain.collect()}
-    b = {r["dst"]: r["gathered"] for r in salted.collect()}
-    assert a.keys() == b.keys()
-    for k in a:
-        assert a[k] == pytest.approx(b[k], abs=1e-9)
-
-
-def test_dual_orientation(spark):
-    from cassovary_spark.plans import DualOrientationEdges
-
-    e = edges_df(spark, G6)
-    dual = DualOrientationEdges.build(e, num_partitions=4)
-    assert dual.by_src.count() == dual.by_dst.count() == len(G6)
-    assert sorted((r["src"], r["dst"]) for r in dual.oriented("dst").collect()) == sorted(G6)
-    dual.unpersist()
-
-
-def test_degree_buckets(spark):
-    from cassovary_spark.plans import degree_buckets
-
-    e = edges_df(spark, G6)
-    got = {r["id"]: (r["out_degree"], r["bucket"]) for r in degree_buckets(e, (1, 2)).collect()}
-    assert got[10] == (3, 2)  # degree 3 > 2 -> last bucket
-    assert got[12] == (1, 0)
-    assert got[11] == (2, 1)
 
 
 def test_oracle_queries_importable():

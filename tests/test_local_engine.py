@@ -6,7 +6,6 @@ integer/label outputs)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -17,20 +16,63 @@ def graph(spark):
     return random_graph(spark, 150, 0.02, seed=23).persist()
 
 
-def _score_map(df, col):
-    return {r["id"]: r[col] for r in df.collect()}
+def _first_src(g):
+    return g.select("src").first()["src"]
 
 
-def test_pagerank_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import pagerank
+def _three_srcs(g):
+    return [r["src"] for r in g.select("src").distinct().limit(3).collect()]
 
-    loc = pagerank(graph, max_iterations=12, engine="local")
-    dist = pagerank(graph, max_iterations=12, engine="distributed")
-    assert loc.iterations == dist.iterations
-    assert abs(loc.error - dist.error) < 1e-9
-    lm, dm = _score_map(loc.ranks, "pagerank"), _score_map(dist.ranks, "pagerank")
+
+def _rows(res, cols):
+    """``{id: (col values)}`` of an operator result (a frame, or a result
+    object carrying one), or the scalar result itself."""
+    if cols is None:
+        return res
+    df = getattr(res, "ranks", getattr(res, "scores", res))
+    return {r["id"]: tuple(r[c] for c in cols) for r in df.collect()}
+
+
+TWINS = [
+    ("pagerank", {"max_iterations": 12}, ("pagerank",)),
+    ("hits", {"max_iterations": 8}, ("hub", "authority")),
+    ("connected_components", {}, ("component",)),
+    ("label_propagation", {"max_iterations": 5}, ("label",)),
+    ("personalized_pagerank", {"seeds": _three_srcs, "max_iterations": 10}, ("score",)),
+    ("bfs", {"seeds": lambda g: [_first_src(g), 999_999]}, ("depth",)),
+    ("bfs", {"seeds": lambda g: [_first_src(g), 999_999], "max_depth": 2}, ("depth",)),
+    ("bfs", {"seeds": lambda g: [_first_src(g), 999_999], "max_degree": 2}, ("depth",)),
+    ("triangle_count", {}, None),
+]
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, cols", TWINS, ids=[f"{op}-{i}" for i, (op, _, _) in enumerate(TWINS)]
+)
+def test_local_matches_distributed(spark, graph, op, kwargs, cols):
+    """One call checked on both engines: equal iteration counts and errors
+    where the result carries them, equal vertex sets, and values within
+    1e-9 (float summation order is the only allowed difference)."""
+    from cassovary_spark import operators
+    from cassovary_spark.sources.generators import random_undirected_graph
+
+    if op == "triangle_count":  # denser undirected graph: ~100 triangles
+        graph = random_undirected_graph(spark, 60, 0.15, seed=5)
+    kw = {k: v(graph) if callable(v) else v for k, v in kwargs.items()}
+    fn = getattr(operators, op)
+    loc = fn(graph, engine="local", **kw)
+    dist = fn(graph, engine="distributed", **kw)
+    if hasattr(loc, "iterations"):
+        assert loc.iterations == dist.iterations
+    if hasattr(loc, "error"):
+        assert abs(loc.error - dist.error) < 1e-9
+    lm, dm = _rows(loc, cols), _rows(dist, cols)
+    if cols is None:
+        assert lm == dm
+        return
     assert lm.keys() == dm.keys()
-    assert all(abs(lm[k] - dm[k]) < 1e-9 for k in lm)
+    for k in lm:
+        assert all(abs(a - b) < 1e-9 for a, b in zip(lm[k], dm[k])), (k, lm[k], dm[k])
 
 
 def test_pagerank_auto_uses_local_on_small_graph(spark, graph):
@@ -38,70 +80,3 @@ def test_pagerank_auto_uses_local_on_small_graph(spark, graph):
 
     res = pagerank(graph, max_iterations=3)
     assert res.history and res.history[0].get("engine") == "local"
-
-
-def test_hits_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import hits
-
-    loc = hits(graph, max_iterations=8, engine="local")
-    dist = hits(graph, max_iterations=8, engine="distributed")
-    assert loc.iterations == dist.iterations
-    for col in ("hub", "authority"):
-        lm, dm = _score_map(loc.scores, col), _score_map(dist.scores, col)
-        assert lm.keys() == dm.keys()
-        assert all(abs(lm[k] - dm[k]) < 1e-9 for k in lm), col
-
-
-def test_cc_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import connected_components
-
-    loc = _score_map(connected_components(graph, engine="local"), "component")
-    dist = _score_map(connected_components(graph, engine="distributed"), "component")
-    assert loc == dist
-
-
-def test_lpa_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import label_propagation
-
-    loc = _score_map(label_propagation(graph, max_iterations=5, engine="local"), "label")
-    dist = _score_map(
-        label_propagation(graph, max_iterations=5, engine="distributed"), "label"
-    )
-    assert loc == dist
-
-
-def test_ppr_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import personalized_pagerank
-
-    seeds = [r["src"] for r in graph.select("src").distinct().limit(3).collect()]
-    loc = _score_map(
-        personalized_pagerank(graph, seeds, max_iterations=10, engine="local"), "score"
-    )
-    dist = _score_map(
-        personalized_pagerank(graph, seeds, max_iterations=10, engine="distributed"),
-        "score",
-    )
-    assert loc.keys() == dist.keys()
-    assert all(abs(loc[k] - dist[k]) < 1e-9 for k in loc)
-
-
-def test_bfs_local_matches_distributed(spark, graph):
-    from cassovary_spark.operators import bfs
-
-    seed = graph.select("src").first()["src"]
-    for kwargs in ({}, {"max_depth": 2}, {"max_degree": 2}):
-        loc = {(r["id"], r["depth"])
-               for r in bfs(graph, [seed, 999_999], engine="local", **kwargs).collect()}
-        dist = {(r["id"], r["depth"])
-                for r in bfs(graph, [seed, 999_999], engine="distributed", **kwargs).collect()}
-        assert loc == dist, kwargs
-
-
-def test_triangles_local_matches_distributed(spark):
-    from cassovary_spark.operators import triangle_count
-    from cassovary_spark.sources.generators import random_undirected_graph, complete_graph
-
-    er = random_undirected_graph(spark, 60, 0.15, seed=5)
-    assert triangle_count(er, engine="local") == triangle_count(er, engine="distributed")
-    k6 = complete_graph(spark, 6)
-    assert triangle_count(k6, engine="local") == 20

@@ -1,0 +1,183 @@
+"""The superstep driver's contracts: the steady-state plan shape of the
+SQL-built supersteps, cleanup after a failed superstep, and routing that
+reads its memory budget at call time."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import SparkSession
+
+from tests.conftest import G6, TWO_CLIQUES_BRIDGED, edges_df
+
+
+def _plan_nodes(plan) -> tuple[str, list]:
+    """``(simpleString, children)`` tree of a physical plan. Children are
+    ``plan.children()``, so cached relations (an ``InMemoryTableScan``'s
+    inner ``InMemoryRelation``) are not descended into."""
+    kids = plan.children()
+    return (plan.simpleString(100), [_plan_nodes(kids.apply(i)) for i in range(kids.size())])
+
+
+def _walk(node):
+    yield node
+    for child in node[1]:
+        yield from _walk(child)
+
+
+def _name(node) -> str:
+    s = node[0].lstrip("*(0123456789) ")
+    return s.split(" ", 1)[0]
+
+
+def _paths_to_state_scans(join, path=()):
+    """Node-name paths from a join down to each scan of superstep state that
+    feeds it directly (not through another join or an aggregate)."""
+    path = path + (_name(join),)
+    if not join[1] and "cassovary_state_" in join[0]:
+        yield path
+    for child in join[1]:
+        if len(path) == 1 or not any(w in _name(child) for w in ("Join", "Aggregate")):
+            yield from _paths_to_state_scans(child, path)
+
+
+@pytest.fixture
+def superstep_sql(monkeypatch):
+    """Spy on ``SparkSession.sql``: records ``(query, plan tree)`` of every
+    query containing ``marker``, planned while the superstep runs (its
+    scratch tables are dropped when the operator returns)."""
+    captured: list[tuple[str, tuple]] = []
+    orig = SparkSession.sql
+
+    def spy(self, query, *a, **k):
+        df = orig(self, query, *a, **k)
+        if spy.marker in query:
+            captured.append((query, _plan_nodes(df._jdf.queryExecution().executedPlan())))
+        return df
+
+    monkeypatch.setattr(SparkSession, "sql", spy)
+
+    def arm(marker):
+        spy.marker = marker
+        return captured
+
+    return arm
+
+
+def _run_pagerank(e):
+    from cassovary_spark.operators import pagerank
+
+    pagerank(e, max_iterations=3, engine="distributed")
+
+
+def _run_cc(e):
+    from cassovary_spark.operators import connected_components
+
+    connected_components(e, max_iterations=3, engine="distributed")
+
+
+def _run_lpa(e):
+    from cassovary_spark.operators import label_propagation
+
+    label_propagation(e, max_iterations=3, engine="distributed")
+
+
+@pytest.mark.parametrize(
+    "run, marker, pairs",
+    [
+        (_run_pagerank, "gathered", G6),
+        (_run_cc, "nbr_component", TWO_CLIQUES_BRIDGED),
+        (_run_lpa, "new_label", TWO_CLIQUES_BRIDGED),
+    ],
+    ids=["pagerank", "cc", "lpa"],
+)
+def test_steady_state_superstep_plan_shape(spark, superstep_sql, run, marker, pairs):
+    """Gather = sort-free SortMergeJoin over the bucketed state; update =
+    ShuffledHashJoin building the fresh aggregate; nothing broadcast-nested."""
+    captured = superstep_sql(marker)
+    run(edges_df(spark, pairs))
+    assert len(captured) >= 2, "no steady-state superstep SQL was captured"
+    _query, tree = captured[-1]
+    nodes = list(_walk(tree))
+
+    smjs = [n for n in nodes if _name(n) == "SortMergeJoin"]
+    assert smjs, "gather is not a SortMergeJoin"
+    state_paths = [p for smj in smjs for p in _paths_to_state_scans(smj)]
+    assert state_paths, "the gather does not read the superstep state"
+    for path in state_paths:
+        assert "Sort" not in path, f"the gather sorts the state: {path}"
+
+    assert any(
+        _name(n) == "ShuffledHashJoin" and "BuildRight" in n[0] for n in nodes
+    ), "update join is not ShuffledHashJoin ... BuildRight"
+    assert not any(_name(n) == "BroadcastNestedLoopJoin" for n in nodes)
+
+
+def _seeds(e):
+    return [r["src"] for r in e.select("src").distinct().limit(2).collect()]
+
+
+def _leak_cases():
+    from cassovary_spark import operators as O
+
+    return {
+        "pagerank": lambda e: O.pagerank(e, max_iterations=3, engine="distributed"),
+        "ppr": lambda e: O.personalized_pagerank(
+            e, _seeds(e), max_iterations=3, engine="distributed"
+        ),
+        "hits": lambda e: O.hits(e, max_iterations=3, engine="distributed"),
+        "cc": lambda e: O.connected_components(e, engine="distributed"),
+        "lpa": lambda e: O.label_propagation(e, max_iterations=3, engine="distributed"),
+        "kcore": lambda e: O.k_core(e, k=2, engine="distributed"),
+        "anf": lambda e: O.neighborhood_function(e, iterations=2),
+        "effective_diameter": lambda e: O.effective_diameter(e, iterations=2),
+        "harmonic": lambda e: O.harmonic_centrality_sketch(e, iterations=2),
+        "bipartite": lambda e: O.bipartite_link_analysis(
+            e, e.select(e.src.alias("id")).distinct().selectExpr("id", "1.0 AS weight"),
+            engine="distributed",
+        ),
+    }
+
+
+def _session_residue(spark):
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    tables = spark.catalog.listTables()
+    views = {t.name for t in tables if t.isTemporary and t.name.startswith("cassovary_")}
+    scratch = {t.name for t in tables if not t.isTemporary and t.name.startswith("cassovary_state_")}
+    return rdds, views, scratch
+
+
+@pytest.mark.parametrize("op", sorted(_leak_cases()))
+def test_failed_superstep_frees_session_state(spark, monkeypatch, op):
+    """A superstep that raises leaves no persisted frame, temp view or
+    scratch table behind."""
+    from cassovary_spark.checkpoint import StateScratch
+
+    e = edges_df(spark, G6)
+    rdds0, views0, scratch0 = _session_residue(spark)
+    orig = StateScratch.roundtrip
+    calls = []
+
+    def failing(self, *a, **k):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected superstep failure")
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(StateScratch, "roundtrip", failing)
+    with pytest.raises(RuntimeError, match="injected superstep failure"):
+        _leak_cases()[op](e)
+    rdds1, views1, scratch1 = _session_residue(spark)
+    assert rdds1 - rdds0 == set(), "persisted frames leaked"
+    assert views1 - views0 == set(), "temp views leaked"
+    assert scratch1 - scratch0 == set(), "scratch tables leaked"
+
+
+def test_local_budget_is_read_at_call_time(spark, monkeypatch):
+    from cassovary_spark.operators import pagerank
+
+    e = edges_df(spark, G6)
+    assert pagerank(e, max_iterations=2).history[0].get("engine") == "local"
+    monkeypatch.setenv("CASSOVARY_LOCAL_EDGE_BUDGET_MB", "0")
+    res = pagerank(e, max_iterations=2)
+    assert res.history[0].get("engine") != "local"
+    assert all("wall_sec" in row for row in res.history)
