@@ -324,25 +324,13 @@ def minhash_signatures(
     (32-bit); ``hash_i(g) = (A_i * x + B_i) mod p`` with per-i constants and
     p the smallest prime > 2^32 — signature element i is the MIN over the
     doc's shingles. One md5 per shingle instead of num_hashes md5s, and every
-    product stays < 2^62 so the arithmetic is exact int64 in BOTH Spark
-    (``conv(substr(md5,..),16,10)``) and DuckDB (``('0x'||substr)::BIGINT``)
-    — the oracle stays bit-for-bit portable. The per-i constants are
+    product stays < 2^62 so the arithmetic is exact int64 in BOTH the kernel
+    below and DuckDB (``('0x'||substr)::BIGINT``) — the oracle stays
+    bit-for-bit portable. The per-i constants are
     essential: the tempting ``h_i = a + i*b`` two-hash trick makes the
     minima CORRELATED across i (the same low-a shingle wins every slot), so
     band collisions approach single-hash probability — measured 4.6M
     candidate pairs vs 1.0M for this family on the same 5k docs.
-
-    Physical strategy: the whole signature is ONE narrow projection —
-    ``array_min(transform(...))`` per hash over the per-doc shingle array —
-    no explode, no shuffle, no 16-buffer hash aggregate; a doc never leaves
-    its input partition. (Rejected, measured at sf0.1: explode +
-    groupBy(doc_id).agg(16 x min) was equal-cost only because 16 md5s
-    dominated both plans; hashing the distinct-shingle dictionary +
-    broadcast-join back was 2x worse — the probe side re-runs the shingle
-    build to derive the dictionary.)
-
-    Docs whose normalized text is empty produce no shingles and are omitted
-    (same contract as the exploded form).
 
     Physical strategy (r6): the signature kernel is an Arrow-batched
     ``mapInArrow`` — per batch, Python builds each doc's DISTINCT shingle
@@ -350,114 +338,83 @@ def minhash_signatures(
     shingle once with hashlib.md5, and computes all ``num_hashes`` minima as
     one numpy ``(H, N) -> minimum.reduceat`` pass. Exact int64 arithmetic
     (A < 2^30, x < 2^32 => A*x + B < 2^63), so values are bit-identical to
-    the Catalyst formulation (equality-tested at sf1.0: 50k docs, 0
+    the former pure-Catalyst formulation (``array_min(transform(...))`` over
+    the per-doc shingle array; equality-tested at sf1.0: 50k docs, 0
     mismatches, plus unicode probes) and the DuckDB oracle is untouched.
     Measured 2.9s vs 30s at sf1.0/local[32]: the interpreted per-element
     HOF lambdas — and substr's O(position) UTF8String boundary seek — were
-    ~85% of the old plan (guide §4.2: batch native kernels beat chains of
-    JVM expressions). Set CASSOVARY_MINHASH_STRATEGY=catalyst for the pure
-    Catalyst plan (sessions where Python workers are unavailable)."""
-    import os
+    ~85% of the Catalyst plan (guide §4.2: batch native kernels beat chains
+    of JVM expressions).
 
-    # normalized text materialized first — see char_shingles for why the
-    # norm expression must NOT be inlined into the gram build. The
-    # empty-doc guard is length(t) > 0 (equivalent to "has shingles"), NOT
-    # size(grams) > 0: a size predicate gets pushdown-inlined below the
-    # projection and rebuilds the whole per-element shingle array just to
-    # test emptiness (measured 11s of the 13s total at sf0.1).
+    Docs whose normalized text is empty produce no shingles and are omitted
+    (same contract as ``char_shingles``)."""
     base = docs.select(
         F.col(id_col).alias("doc_id"), _norm(text_col).alias("t")
     ).filter(F.length("t") > 0)
 
-    if os.environ.get("CASSOVARY_MINHASH_STRATEGY", "arrow") != "catalyst":
-        spark = docs.sparkSession
-        # the kernel is CPU-bound: widen narrow scans (a handful of parquet
-        # files) to the core count. At real corpus scale the scan already has
-        # >> defaultParallelism partitions and this never fires — no shuffle
-        # of the text.
-        dp = spark.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < dp:
-            base = base.repartition(dp)
-        consts = minhash_constants(num_hashes)
-        id_type = base.schema["doc_id"].dataType.simpleString()
-        p_mod = MINHASH_P
-        n_ = shingle_n
+    spark = docs.sparkSession
+    # the kernel is CPU-bound: widen narrow scans (a handful of parquet
+    # files) to the core count. At real corpus scale the scan already has
+    # >> defaultParallelism partitions and this never fires — no shuffle
+    # of the text.
+    dp = spark.sparkContext.defaultParallelism
+    if base.rdd.getNumPartitions() < dp:
+        base = base.repartition(dp)
+    consts = minhash_constants(num_hashes)
+    id_type = base.schema["doc_id"].dataType.simpleString()
+    p_mod = MINHASH_P
+    n_ = shingle_n
 
-        def kernel(batches):
-            import hashlib
+    def kernel(batches):
+        import hashlib
 
-            import numpy as np
-            import pyarrow as pa
+        import numpy as np
+        import pyarrow as pa
 
-            A = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
-            B = np.array([b for _, b in consts], dtype=np.int64)[:, None]
-            md5 = hashlib.md5
-            for batch in batches:
-                ids = batch.column("doc_id")
-                ts = batch.column("t").to_pylist()
-                xs_all, offs, tot = [], [0], 0
-                for t in ts:
-                    g = (
-                        {t[i : i + n_] for i in range(len(t) - n_ + 1)}
-                        if len(t) >= n_
-                        else {t}
+        A = np.array([a for a, _ in consts], dtype=np.int64)[:, None]
+        B = np.array([b for _, b in consts], dtype=np.int64)[:, None]
+        md5 = hashlib.md5
+        for batch in batches:
+            ids = batch.column("doc_id")
+            ts = batch.column("t").to_pylist()
+            xs_all, offs, tot = [], [0], 0
+            for t in ts:
+                g = (
+                    {t[i : i + n_] for i in range(len(t) - n_ + 1)}
+                    if len(t) >= n_
+                    else {t}
+                )
+                xs_all.append(
+                    np.fromiter(
+                        (
+                            int.from_bytes(md5(s.encode()).digest()[:4], "big")
+                            for s in g
+                        ),
+                        dtype=np.int64,
+                        count=len(g),
                     )
-                    xs_all.append(
-                        np.fromiter(
-                            (
-                                int.from_bytes(md5(s.encode()).digest()[:4], "big")
-                                for s in g
-                            ),
-                            dtype=np.int64,
-                            count=len(g),
-                        )
-                    )
-                    tot += len(g)
-                    offs.append(tot)
-                flat = (
-                    np.concatenate(xs_all) if xs_all else np.empty(0, np.int64)
                 )
-                h = (A * flat[None, :] + B) % p_mod
-                starts = np.array(offs[:-1], dtype=np.int64)
-                mins = (
-                    np.minimum.reduceat(h, starts, axis=1)
-                    if tot
-                    else np.empty((len(consts), 0), np.int64)
-                )
-                sig = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(len(ts) + 1) * num_hashes, type=pa.int32()
-                    ),
-                    pa.array(mins.T.reshape(-1), type=pa.int64()),
-                )
-                yield pa.RecordBatch.from_arrays([ids, sig], ["doc_id", "sig"])
-
-        return base.mapInArrow(kernel, f"doc_id {id_type}, sig array<bigint>")
-
-    grams = F.filter(
-        F.array_distinct(_gram_array(F.col("t"), shingle_n)),
-        lambda g: g != "",
-    )
-    with_grams = base.select("doc_id", grams.alias("grams"))
-    xs = with_grams.select(
-        "doc_id",
-        F.transform(
-            F.transform(F.col("grams"), F.md5),
-            lambda h: F.conv(F.substring(h, 1, 8), 16, 10).cast("long"),
-        ).alias("xs"),
-    )
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    F.col("xs"),
-                    lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P),
-                )
+                tot += len(g)
+                offs.append(tot)
+            flat = (
+                np.concatenate(xs_all) if xs_all else np.empty(0, np.int64)
             )
-            for a, b in minhash_constants(num_hashes)
-        ]
-    )
-    return xs.select("doc_id", sig.alias("sig"))
+            h = (A * flat[None, :] + B) % p_mod
+            starts = np.array(offs[:-1], dtype=np.int64)
+            mins = (
+                np.minimum.reduceat(h, starts, axis=1)
+                if tot
+                else np.empty((len(consts), 0), np.int64)
+            )
+            sig = pa.ListArray.from_arrays(
+                pa.array(
+                    np.arange(len(ts) + 1) * num_hashes, type=pa.int32()
+                ),
+                pa.array(mins.T.reshape(-1), type=pa.int64()),
+            )
+            yield pa.RecordBatch.from_arrays([ids, sig], ["doc_id", "sig"])
+
+    return base.mapInArrow(kernel, f"doc_id {id_type}, sig array<bigint>")
 
 
 def minhash_lsh_buckets(

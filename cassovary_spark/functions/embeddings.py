@@ -69,13 +69,9 @@ def cosine_top_k(
             vec_col=vec_col,
             max_bucket_size=max_bucket_size,
         )
-    import os
-
-    if (
-        queries is not None
-        and os.environ.get("CASSOVARY_COSINE_STRATEGY", "arrow") != "catalyst"
-        and embeddings.schema[id_col].dataType.simpleString()
-        in ("bigint", "int", "smallint")
+    # the Arrow kernel emits int64 ids; other id types keep the crossJoin plan
+    if queries is not None and embeddings.schema[id_col].dataType.simpleString() in (
+        "bigint", "int", "smallint"
     ):
         return _cosine_top_k_arrow(embeddings, queries, k, id_col, vec_col)
 

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cassovary_spark.graph import mutualize, vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep
 
 # FM bias correction (Flajolet-Martin 1985): E[2^R] = phi * n
@@ -92,8 +92,8 @@ def _gather_step(und, state, regs):
         for r in regs
     ]
     # state-update join: hash-build the fresh aggregate instead of sorting it
-    # (plans.update_join_hint rationale)
-    return state.join(gathered.hint(update_join_hint().lower()), "id", "left"), merged
+    # (plans.layout.UPDATE_JOIN_HINT rationale)
+    return state.join(gathered.hint(UPDATE_JOIN_HINT), "id", "left"), merged
 
 
 def neighborhood_function(

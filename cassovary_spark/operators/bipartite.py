@@ -145,113 +145,78 @@ def bipartite_link_analysis(
             .join(ldeg.withColumnRenamed("src", "id"), "id", "left")
             .fillna(0, subset=["ldeg"])
         )
-        lw, _ = ss.write(
-            lw0.select("id", F.col("init").alias("weight"), "init", "ldeg"), bucket_by=None
-        )
-        rw, _ = ss.write(
-            rdeg.select(F.col("dst").alias("id"), F.lit(0.0).alias("weight"), "rdeg"),
-            bucket_by=None,
+        # per side: the state (id, weight, [init,] degree), the side's id
+        # column in ``e``, its degree column and reset probability. Only the
+        # left side carries ``init``: the right side's reset target is 0.
+        state = {
+            "left": ss.write(
+                lw0.select("id", F.col("init").alias("weight"), "init", "ldeg"),
+                bucket_by=None,
+            )[0],
+            "right": ss.write(
+                rdeg.select(F.col("dst").alias("id"), F.lit(0.0).alias("weight"), "rdeg"),
+                bucket_by=None,
+            )[0],
+        }
+        col = {"left": "src", "right": "dst"}
+        deg = {"left": "ldeg", "right": "rdeg"}
+        reset = {"left": reset_prob_left, "right": reset_prob_right}
+        contrib = {"left": None, "right": None}
+        rank_w = (
+            F.round("src_weight", contributor_weight_rounding)
+            if contributor_weight_rounding is not None
+            else F.col("src_weight")
         )
 
-        l_contrib = r_contrib = None
+        # odd iterations flow left -> right, even ones right -> left
         for it in range(1, num_iterations + 1):
-            last = it >= num_iterations - 1
-            if it % 2 == 1:  # left -> right, reset prob on right (init 0)
-                flows = (
-                    e.join(
-                        lw.select(F.col("id").alias("src"), "weight", "ldeg"), "src"
-                    )
-                    .select(
-                        "src",
-                        "dst",
-                        (
-                            (F.col("weight") / F.col("ldeg"))
-                            * F.lit(1.0 - reset_prob_right)
-                        ).alias("flow"),
-                        F.col("weight").alias("src_weight"),
-                    )
+            frm, to = ("left", "right") if it % 2 == 1 else ("right", "left")
+            flows = (
+                e.join(
+                    state[frm].select(F.col("id").alias(col[frm]), "weight", deg[frm]),
+                    col[frm],
                 )
-                agg = flows.groupBy("dst").agg(F.sum("flow").alias("gathered"))
-                rw, _ = ss.write(
-                    rw.select("id", "rdeg")
-                    .join(agg.withColumnRenamed("dst", "id"), "id", "left")
-                    .select(
-                        "id",
-                        F.coalesce("gathered", F.lit(0.0)).alias("weight"),
-                        "rdeg",
-                    ),
-                    bucket_by=None,
+                .select(
+                    "src",
+                    "dst",
+                    (
+                        (F.col("weight") / F.col(deg[frm]))
+                        * F.lit(1.0 - reset[to])
+                    ).alias("flow"),
+                    F.col("weight").alias("src_weight"),
                 )
-                if last:
-                    rank_w = (
-                        F.round("src_weight", contributor_weight_rounding)
-                        if contributor_weight_rounding is not None
-                        else F.col("src_weight")
-                    )
-                    w = Window.partitionBy("dst").orderBy(
-                        rank_w.desc(), F.asc("src")
-                    )
-                    r_contrib = ss.local_checkpoint(
-                        flows.withColumn("rn", F.row_number().over(w))
-                        .filter(F.col("rn") <= num_top_contributors)
-                        .groupBy(F.col("dst").alias("id"))
-                        .agg(_ranked_list("src").alias("contributors"))
-                    )
-            else:  # right -> left, reset prob on left
-                flows = (
-                    e.join(
-                        rw.select(F.col("id").alias("dst"), "weight", "rdeg"), "dst"
-                    )
-                    .select(
-                        "src",
-                        "dst",
-                        (
-                            (F.col("weight") / F.col("rdeg"))
-                            * F.lit(1.0 - reset_prob_left)
-                        ).alias("flow"),
-                        F.col("weight").alias("src_weight"),
-                    )
+            )
+            agg = flows.groupBy(col[to]).agg(F.sum("flow").alias("gathered"))
+            kept = [c for c in state[to].columns if c not in ("id", "weight")]
+            gathered = F.coalesce("gathered", F.lit(0.0))
+            if "init" in kept:
+                gathered = F.lit(reset[to]) * F.col("init") + gathered
+            state[to], _ = ss.write(
+                state[to].select("id", *kept)
+                .join(agg.withColumnRenamed(col[to], "id"), "id", "left")
+                .select("id", gathered.alias("weight"), *kept),
+                bucket_by=None,
+            )
+            if it >= num_iterations - 1:
+                w = Window.partitionBy(col[to]).orderBy(
+                    rank_w.desc(), F.asc(col[frm])
                 )
-                agg = flows.groupBy("src").agg(F.sum("flow").alias("gathered"))
-                lw, _ = ss.write(
-                    lw.select("id", "init", "ldeg")
-                    .join(agg.withColumnRenamed("src", "id"), "id", "left")
-                    .select(
-                        "id",
-                        (
-                            F.lit(reset_prob_left) * F.col("init")
-                            + F.coalesce("gathered", F.lit(0.0))
-                        ).alias("weight"),
-                        "init",
-                        "ldeg",
-                    ),
-                    bucket_by=None,
+                contrib[to] = ss.local_checkpoint(
+                    flows.withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") <= num_top_contributors)
+                    .groupBy(F.col(col[to]).alias("id"))
+                    .agg(_ranked_list(col[frm]).alias("contributors"))
                 )
-                if last:
-                    rank_w = (
-                        F.round("src_weight", contributor_weight_rounding)
-                        if contributor_weight_rounding is not None
-                        else F.col("src_weight")
-                    )
-                    w = Window.partitionBy("src").orderBy(
-                        rank_w.desc(), F.asc("dst")
-                    )
-                    l_contrib = ss.local_checkpoint(
-                        flows.withColumn("rn", F.row_number().over(w))
-                        .filter(F.col("rn") <= num_top_contributors)
-                        .groupBy(F.col("src").alias("id"))
-                        .agg(_ranked_list("dst").alias("contributors"))
-                    )
 
         empty = F.array().cast("array<bigint>")
-        left_out = lw.select("id", "weight").join(
-            l_contrib if l_contrib is not None else lw.select("id").withColumn("contributors", empty),
-            "id",
-            "left",
-        ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
-        right_out = rw.select("id", "weight").join(
-            r_contrib if r_contrib is not None else rw.select("id").withColumn("contributors", empty),
-            "id",
-            "left",
-        ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
-        return BipartiteAnalysis(materialize(left_out), materialize(right_out))
+        out = {}
+        for side in ("left", "right"):
+            st, c = state[side], contrib[side]
+            out[side] = materialize(
+                st.select("id", "weight").join(
+                    c if c is not None else st.select("id").withColumn("contributors", empty),
+                    "id",
+                    "left",
+                ).select("id", "weight", F.coalesce("contributors", empty).alias("contributors"))
+            )
+        return BipartiteAnalysis(**out)

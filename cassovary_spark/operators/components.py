@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import mutualize, vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep, choose_engine
 
 
@@ -66,7 +66,6 @@ def connected_components(
         # exchanges or sorts the big side
         und = ss.name(ss.persist(mutualize(edges), "dst"))
         verts = ss.persist(vertices_of(edges), "id")
-        upd = update_join_hint()
 
         start, labels, _meta = ss.latest(checkpoint, resume)
         if labels is None:
@@ -86,7 +85,7 @@ def connected_components(
             # merge join over it ("key not found: dst#N" in SortExec during
             # prepareForExecution) — inline subqueries plan fine and
             # identical subtrees still collapse to ReusedExchange
-            sql = f"""SELECT /*+ {upd}(c) */ s.id,
+            sql = f"""SELECT /*+ {UPDATE_JOIN_HINT}(c) */ s.id,
          least(s.component, coalesce(c.nbr_component, s.component)) AS component
   FROM {state} s
   LEFT JOIN (
@@ -109,7 +108,7 @@ def connected_components(
                 # the cheaper half.
                 nl = ss.name(ss.write(spark.sql(sql))[0])
                 sql = f"""
-  SELECT /*+ {upd}(lut) */ nl.id, coalesce(lut.component, nl.component) AS component
+  SELECT /*+ {UPDATE_JOIN_HINT}(lut) */ nl.id, coalesce(lut.component, nl.component) AS component
   FROM {nl} nl
   LEFT JOIN {nl} lut ON nl.component = lut.id"""
             # convergence metric (Σ labels strictly decreases until fixpoint)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import materialize
 from cassovary_spark.graph import vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep, choose_engine
 
 
@@ -81,7 +81,6 @@ def hits(
         # dual orientation: gather-for-auth joins on src, gather-for-hub on dst
         by_src = ss.persist(edges.select("src", "dst"), "src")
         by_dst = ss.persist(edges.select("src", "dst"), "dst")
-        upd = update_join_hint().lower()
 
         # state feeds TWO branches of each superstep's join tree (auth gather
         # + hub gather over the fresh auth), so per-superstep stats must be
@@ -97,7 +96,7 @@ def hits(
                 .agg(F.sum("hub").alias("a_raw"))
             )
             auth_full = ss.local_checkpoint(
-                verts.join(auth_raw.hint(upd), "id", "left")
+                verts.join(auth_raw.hint(UPDATE_JOIN_HINT), "id", "left")
                 .select("id", F.coalesce("a_raw", F.lit(0.0)).alias("a_raw"))
                 .repartition(p, "id")
             )
@@ -109,13 +108,13 @@ def hits(
             # carry the previous (normalized) hub along and collect the
             # per-side maxes via ``observe`` DURING the materialization — the
             # reference's scale-by-max pass (Hits.scala:53-56,101) without its
-            # own scan. Both non-state sides hash-build (update_join_hint):
+            # own scan. Both non-state sides hash-build (UPDATE_JOIN_HINT):
             # hub_raw is a fresh aggregate and the first join's SHJ output
             # loses the sort order SMJ would have needed from the second
             joined, maxes = ss.write(
                 state.select("id", F.col("hub").alias("prev_hub"))
-                .join(hub_raw.hint(upd), "id", "left")
-                .join(auth_full.hint(upd), "id")
+                .join(hub_raw.hint(UPDATE_JOIN_HINT), "id", "left")
+                .join(auth_full.hint(UPDATE_JOIN_HINT), "id")
                 .select(
                     "id", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw"),
                     "a_raw", "prev_hub",

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import mutualize, vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep, choose_engine
 
 
@@ -65,7 +65,6 @@ def label_propagation(
         # table by dst (see components.py rationale)
         und = ss.name(ss.persist(mutualize(edges), "dst"))
         verts = ss.persist(vertices_of(edges), "id")
-        upd = update_join_hint()
 
         start, labels, _meta = ss.latest(checkpoint, resume)
         if labels is None:
@@ -89,7 +88,7 @@ def label_propagation(
             # dropped column) — one job/superstep.
             new_labels, got = ss.write(
                 spark.sql(f"""
-  SELECT /*+ {upd}(ml) */ s.id, coalesce(ml.new_label, s.label) AS label, s.label AS prev
+  SELECT /*+ {UPDATE_JOIN_HINT}(ml) */ s.id, coalesce(ml.new_label, s.label) AS label, s.label AS prev
   FROM {state} s LEFT JOIN (
       SELECT id, t.lab AS new_label FROM (
           SELECT id, min(named_struct('negc', -cnt, 'lab', label)) AS t

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import CheckpointStore, materialize
 from cassovary_spark.graph import out_degrees, vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep, choose_engine
 
 
@@ -123,7 +123,6 @@ def pagerank(
         wedges.count()
         wedges_view = ss.name(wedges)
         damping_amount = (1.0 - damping) / n
-        upd = update_join_hint()
 
         start, ranks, meta = ss.latest(checkpoint, resume)
         # reference initial error (PageRank.scala:82)
@@ -145,8 +144,8 @@ def pagerank(
             state = ss.name(ranks)
             # Join strategy is pinned per role: the GATHER join keeps MERGE
             # (both sides pre-sorted on the key — zero-sort SMJ) and the
-            # update join uses plans.update_join_hint() (SHUFFLE_HASH by
-            # default: skips sorting the fresh aggregate, r6 measured -13%
+            # update join uses plans.layout.UPDATE_JOIN_HINT (SHUFFLE_HASH:
+            # skips sorting the fresh aggregate, r6 measured -13%
             # whole-superstep); neither ever broadcasts the O(V) rank table
             # (a per-superstep driver roundtrip, fatal at scale). The rank
             # table itself is the full vertex set, so the update join is
@@ -158,7 +157,7 @@ def pagerank(
             # only cost time).
             new_ranks, got = ss.write(
                 spark.sql(f"""
-  SELECT /*+ {upd}(c) */ s.id,
+  SELECT /*+ {UPDATE_JOIN_HINT}(c) */ s.id,
          coalesce(c.gathered, 0.0d) + {damping_amount!r}d + {dangle_sum!r}d
              AS pagerank,
          s.is_dangling,

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import StateScratch, materialize
 from cassovary_spark.graph import out_degrees, vertices_of
-from cassovary_spark.plans import update_join_hint
+from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
 from cassovary_spark.superstep import Superstep, choose_engine
 
 
@@ -44,6 +44,35 @@ def _union_all(dfs) -> DataFrame:
     from functools import reduce
 
     return reduce(lambda a, b: a.union(b), dfs)
+
+
+def _local_event_log(spark, cols: dict, schema: str) -> DataFrame:
+    """An event log from a numpy twin. Its null ``prev`` is a -1 sentinel in
+    plain int64, nulled JVM-side: nullable-Int64 pandas frames only convert
+    under Arrow, and the driver's vanilla session has Arrow off (round-2 red
+    queries)."""
+    import pandas as pd
+
+    out = spark.createDataFrame(pd.DataFrame(cols), schema=schema)
+    return out.withColumn(
+        "prev",
+        F.when(F.col("prev") < 0, F.lit(None).cast("long")).otherwise(F.col("prev")),
+    )
+
+
+def _has_negative_ids(edges) -> bool:
+    mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
+    return mn is not None and mn < 0
+
+
+def _event_log_route(route: str, edges, engine: str) -> str:
+    """``route`` (choose_engine's pick) unless it is an auto-chosen local
+    twin on a graph with negative vertex ids (legal in
+    read_edge_list/DynamicGraph): the twins' -1 null-prev sentinel would
+    alias real predecessors to NULL, so those go to the distributed plan."""
+    if route == "local" and engine != "local" and _has_negative_ids(edges):
+        return "distributed"
+    return route
 
 
 def bfs(
@@ -73,8 +102,8 @@ def bfs(
 
     m0 = edges.count()
     route = choose_engine(m0, engine)
-    if route == "local" and events and engine != "local" and _has_negative_ids(edges):
-        route = "distributed"
+    if events:
+        route = _event_log_route(route, edges, engine)
     if route == "local":
         from cassovary_spark.operators import local_engine as LE
         import numpy as np
@@ -84,20 +113,11 @@ def bfs(
             steps, eids, prevs = LE.bfs_events_numpy(
                 ids, si, di, seeds, max_depth, max_degree
             )
-            import pandas as pd
-
-            # Plain int64 with -1 sentinel, nulled JVM-side: nullable-Int64
-            # pandas frames only convert under Arrow, and the driver's
-            # vanilla session has Arrow off (round-2 red queries).
-            pdf = pd.DataFrame(
+            return _local_event_log(
+                spark,
                 {"step": steps.astype("int32"), "id": eids,
-                 "prev": np.asarray(prevs, dtype="int64")}
-            )
-            out = spark.createDataFrame(pdf, schema="step int, id long, prev long")
-            return out.withColumn(
-                "prev",
-                F.when(F.col("prev") < 0, F.lit(None).cast("long"))
-                .otherwise(F.col("prev")),
+                 "prev": np.asarray(prevs, dtype="int64")},
+                "step int, id long, prev long",
             )
         out_ids, out_depths = LE.bfs_numpy(ids, si, di, seeds, max_depth, max_degree)
         return LE.result_df(
@@ -111,67 +131,8 @@ def bfs(
         adj = adj.join(
             hubs.withColumnRenamed("id", "src"), "src", "left_anti"
         )
-    adj = adj.repartition(p, "src").sortWithinPartitions("src").persist()
-
-    # Frontier state resets per level via parquet (StateScratch): the next
-    # frontier's plan references frontier x adj x visited, so inherited
-    # stats would multiply per level (checkpoint.materialize CAUTION).
-    # ``visited`` is the lazy UNION of the per-level files — levels are
-    # written once and never rewritten, so state writes total O(V), not
-    # O(V * depth) as a rewrite-visited-per-level loop would cost.
-    # keep_last covers every level: files must outlive the whole walk.
-    scratch = StateScratch(spark, keep_last=1_000_000_000)
-    frontier = scratch.roundtrip(_seed_df(spark, seeds).withColumn("depth", F.lit(0)))
-    levels = [frontier]
-    ev_frames = [
-        frontier.select(
-            F.lit(0).alias("step"), "id", F.lit(None).cast("long").alias("prev")
-        )
-    ]
-    vbase = [frontier.select("id")]
-    visited = _union_all(vbase)
-    depth = 0
-    while max_depth is None or depth < max_depth:
-        expand = frontier.join(adj, frontier.id == adj.src)
-        if events:
-            # per-level relaxation log, written once (same per-level-file
-            # pattern as the frontier itself); the next frontier derives
-            # from it so the expansion join runs once either way
-            relax = scratch.roundtrip(
-                expand.select(
-                    F.lit(depth + 1).alias("step"),
-                    F.col("dst").alias("id"),
-                    F.col("src").alias("prev"),
-                )
-            )
-            ev_frames.append(relax)
-            nxt_ids = relax.select("id")
-        else:
-            nxt_ids = expand.select(F.col("dst").alias("id"))
-        nxt = (
-            nxt_ids
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-        )
-        nxt, n_new = scratch.roundtrip(nxt, with_count=True)
-        if n_new == 0:
-            break
-        levels.append(nxt)
-        vbase.append(nxt.select("id"))
-        # periodic compaction bounds BOTH costs: visited rewrites are
-        # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
-        # a pure lazy union degrades to O(depth^2) scans on deep-narrow
-        # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
-        if len(vbase) > 8:
-            vbase = [scratch.roundtrip(_union_all(vbase))]
-        visited = _union_all(vbase)
-        frontier = nxt
-        depth += 1
-    result = materialize(_union_all(ev_frames if events else levels))
-    scratch.close()
-    adj.unpersist()
-    return result
+    seed_frontier = _seed_df(spark, seeds).withColumn("depth", F.lit(0))
+    return _frontier_levels(spark, adj, p, seed_frontier, [], max_depth, events)
 
 
 def multi_source_bfs(
@@ -184,39 +145,89 @@ def multi_source_bfs(
     from cassovary_spark.plans import choose_partitions
 
     p = choose_partitions(spark, edges, num_partitions)
-    adj = edges.select("src", "dst").repartition(p, "src").sortWithinPartitions("src").persist()
-
-    # per-level files + lazy union (see bfs: O(V) total writes, reset stats)
-    scratch = StateScratch(spark, keep_last=1_000_000_000)
-    frontier = scratch.roundtrip(
+    seed_frontier = (
         sources.select("source", F.col("source").alias("id"))
         .dropDuplicates(["source"])
         .withColumn("depth", F.lit(0))
         .repartition(p, "id")
     )
+    return _frontier_levels(
+        spark, edges.select("src", "dst"), p, seed_frontier, ["source"], None, False,
+        repartition_levels=True,
+    )
+
+
+def _frontier_levels(
+    spark, adj: DataFrame, p: int, frontier: DataFrame, keys: list[str],
+    max_depth: int | None, events: bool, repartition_levels: bool = False,
+) -> DataFrame:
+    """The visit-once frontier loop of ``bfs`` (``keys=[]``) and
+    ``multi_source_bfs`` (``keys=["source"]``): one BFS per distinct
+    ``keys`` value, all advanced by one join per level. ``frontier`` is the
+    seed level ``(*keys, id, depth=0)``; returns the union of every level,
+    or with ``events`` the relaxation log ``(step, *keys, id, prev)``.
+    ``repartition_levels`` hash-partitions each new level on ``id`` into
+    ``p`` partitions before its write."""
+    adj = adj.repartition(p, "src").sortWithinPartitions("src").persist()
+    # Frontier state resets per level via parquet (StateScratch): the next
+    # frontier's plan references frontier x adj x visited, so inherited
+    # stats would multiply per level (checkpoint.materialize CAUTION).
+    # ``visited`` is the lazy UNION of the per-level files — levels are
+    # written once and never rewritten, so state writes total O(V), not
+    # O(V * depth) as a rewrite-visited-per-level loop would cost.
+    # keep_last covers every level: files must outlive the whole walk.
+    scratch = StateScratch(spark, keep_last=1_000_000_000)
+    frontier = scratch.roundtrip(frontier)
     levels = [frontier]
-    vbase = [frontier.select("source", "id")]
+    ev_frames = [
+        frontier.select(
+            F.lit(0).alias("step"), *keys, "id", F.lit(None).cast("long").alias("prev")
+        )
+    ]
+    vbase = [frontier.select(*keys, "id")]
     visited = _union_all(vbase)
     depth = 0
-    while True:
+    while max_depth is None or depth < max_depth:
+        expand = frontier.join(adj, frontier.id == adj.src)
+        if events:
+            # per-level relaxation log, written once (same per-level-file
+            # pattern as the frontier itself); the next frontier derives
+            # from it so the expansion join runs once either way
+            relax = scratch.roundtrip(
+                expand.select(
+                    F.lit(depth + 1).alias("step"),
+                    *keys,
+                    F.col("dst").alias("id"),
+                    F.col("src").alias("prev"),
+                )
+            )
+            ev_frames.append(relax)
+            nxt_ids = relax.select(*keys, "id")
+        else:
+            nxt_ids = expand.select(*keys, F.col("dst").alias("id"))
         nxt = (
-            frontier.join(adj, frontier.id == adj.src)
-            .select("source", F.col("dst").alias("id"))
+            nxt_ids
             .distinct()
-            .join(visited, ["source", "id"], "left_anti")
+            .join(visited, [*keys, "id"], "left_anti")
             .withColumn("depth", F.lit(depth + 1))
         )
-        nxt, n_new = scratch.roundtrip(nxt.repartition(p, "id"), with_count=True)
+        if repartition_levels:
+            nxt = nxt.repartition(p, "id")
+        nxt, n_new = scratch.roundtrip(nxt, with_count=True)
         if n_new == 0:
             break
         levels.append(nxt)
-        vbase.append(nxt.select("source", "id"))
-        if len(vbase) > 8:  # compaction: see bfs
+        vbase.append(nxt.select(*keys, "id"))
+        # periodic compaction bounds BOTH costs: visited rewrites are
+        # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
+        # a pure lazy union degrades to O(depth^2) scans on deep-narrow
+        # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
+        if len(vbase) > 8:
             vbase = [scratch.roundtrip(_union_all(vbase))]
         visited = _union_all(vbase)
         frontier = nxt
         depth += 1
-    result = materialize(_union_all(levels))
+    result = materialize(_union_all(ev_frames if events else levels))
     scratch.close()
     adj.unpersist()
     return result
@@ -298,15 +309,6 @@ def _adjacency_lists(edges: DataFrame, p: int) -> DataFrame:
     )
 
 
-
-def _has_negative_ids(edges) -> bool:
-    """The event-log twins encode null-prev as -1; a graph with negative
-    vertex ids (legal in read_edge_list/DynamicGraph) would alias real
-    predecessors to NULL, so auto routing sends it to the distributed plan."""
-    mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
-    return mn is not None and mn < 0
-
-
 # walks' local twin holds the whole (walker, step) event log in driver memory
 WALK_LOCAL_MAX_EVENTS = 5_000_000
 
@@ -317,7 +319,7 @@ def _walk_local_ok(edges, num_walkers: int, num_steps: int, engine: str) -> bool
     route = choose_engine(
         edges, engine, local_ok=num_walkers * (num_steps + 1) <= WALK_LOCAL_MAX_EVENTS
     )
-    return route == "local" and (engine == "local" or not _has_negative_ids(edges))
+    return _event_log_route(route, edges, engine) == "local"
 
 
 def _walk_uniform(tag: str, step: int, seed: int):
@@ -367,7 +369,6 @@ def random_walk_visits(
     if not start_nodes:
         raise ValueError("start_nodes must be non-empty")
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
 
     if _walk_local_ok(edges, num_walkers, num_steps, engine):
         import numpy as np
@@ -383,51 +384,11 @@ def random_walk_visits(
             spark, uniq, {"visits": cnt.astype(np.int64)}, "id long, visits long"
         )
 
-    p = choose_partitions(spark, edges, num_partitions)
-    adj = _adjacency_lists(edges, p).persist()
-
-    homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]
-    walkers = spark.createDataFrame(
-        [(i, h, h) for i, h in enumerate(homes)], "walker long, home long, cur long"
-    ).repartition(p, "cur")
-
-    visit_frames = [walkers.select(F.col("cur").alias("id"))]
-    for step in range(num_steps):
-        stepped = (
-            walkers.join(adj, walkers.cur == adj.src, "left")
-            .withColumn("_r", _walk_uniform("r", step, seed))
-            .select(
-                "walker",
-                "home",
-                F.when(
-                    (F.col("_r") < F.lit(reset_prob)) | F.col("nbrs").isNull(),
-                    F.col("home"),
-                )
-                .otherwise(
-                    F.element_at(
-                        "nbrs",
-                        (
-                            F.floor(
-                                _walk_uniform("n", step, seed) * F.size("nbrs")
-                            ).cast("int")
-                            + 1
-                        ),
-                    )
-                )
-                .alias("cur"),
-            )
-            .repartition(p, "cur")
-        )
-        walkers = materialize(stepped)
-        visit_frames.append(walkers.select(F.col("cur").alias("id")))
-
-    out = visit_frames[0]
-    for f in visit_frames[1:]:
-        out = out.union(f)
-    result = out.groupBy("id").agg(F.count("*").alias("visits"))
-    result = materialize(result)
-    adj.unpersist()
-    return result
+    events = _walk_steps(
+        edges, start_nodes, num_steps, reset_prob, num_walkers, seed, False,
+        num_partitions,
+    )
+    return materialize(events.groupBy("id").agg(F.count("*").alias("visits")))
 
 
 def random_walk_events(
@@ -457,11 +418,9 @@ def random_walk_events(
     if not start_nodes:
         raise ValueError("start_nodes must be non-empty")
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
 
     if not track_paths and _walk_local_ok(edges, num_walkers, num_steps, engine):
         import numpy as np
-        import pandas as pd
 
         from cassovary_spark.operators import local_engine as LE
 
@@ -469,20 +428,37 @@ def random_walk_events(
         w, st, cur, prev = LE.random_walk_events_numpy(
             ids, si, di, start_nodes, num_steps, reset_prob, num_walkers, seed
         )
-        # -1 sentinel nulled JVM-side: nullable-Int64 frames crash the
-        # non-Arrow createDataFrame fallback (round-2 red queries).
-        pdf = pd.DataFrame(
+        return _local_event_log(
+            spark,
             {"walker": w, "step": st.astype("int32"), "id": cur,
-             "prev": np.asarray(prev, dtype="int64")}
+             "prev": np.asarray(prev, dtype="int64")},
+            "walker long, step int, id long, prev long",
         )
-        out = spark.createDataFrame(
-            pdf, schema="walker long, step int, id long, prev long"
+
+    return materialize(
+        _walk_steps(
+            edges, start_nodes, num_steps, reset_prob, num_walkers, seed,
+            track_paths, num_partitions,
         )
-        return out.withColumn(
-            "prev",
-            F.when(F.col("prev") < 0, F.lit(None).cast("long"))
-            .otherwise(F.col("prev")),
-        )
+    )
+
+
+def _walk_steps(
+    edges: DataFrame,
+    start_nodes: list[int],
+    num_steps: int,
+    reset_prob: float,
+    num_walkers: int,
+    seed: int,
+    track_paths: bool,
+    num_partitions: int | None,
+) -> DataFrame:
+    """The distributed walk shared by ``random_walk_visits`` and
+    ``random_walk_events``: the lazy union of the per-step walker positions
+    ``(walker, step, id, prev[, path])``, each step's walker table a local
+    checkpoint."""
+    spark = edges.sparkSession
+    from cassovary_spark.plans import choose_partitions
 
     p = choose_partitions(spark, edges, num_partitions)
     adj = _adjacency_lists(edges, p).persist()
@@ -536,13 +512,8 @@ def random_walk_events(
         walkers = materialize(stepped)
         frames.append(ev(walkers, step + 1, F.col("_prev")))
         walkers = walkers.drop("_prev")
-
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.union(f)
-    result = materialize(out)
     adj.unpersist()
-    return result
+    return _union_all(frames)
 
 
 def dfs_times(
@@ -677,7 +648,6 @@ def personalized_pagerank(
             .select("src", "dst", (F.lit(d) / F.col("out_degree")).alias("w")),
             "src",
         )
-        upd = update_join_hint().lower()
 
         ranks, _ = ss.write(
             verts_s.select("id", F.col("seed_mass").alias("score"), "is_dangling", "seed_mass")
@@ -696,7 +666,9 @@ def personalized_pagerank(
                 .agg(F.sum(F.col("w") * F.col("score")).alias("gathered"))
             )
             new_ranks, got = ss.write(
-                ranks.join(contribs.withColumnRenamed("dst", "id").hint(upd), "id", "left")
+                ranks.join(
+                    contribs.withColumnRenamed("dst", "id").hint(UPDATE_JOIN_HINT), "id", "left"
+                )
                 .select(
                     "id",
                     (

@@ -1,11 +1,11 @@
-"""Physical layout planning: partition counts, the superstep join hint and
-conf scope, and the reference's Partitioner family — the engine-level
-layout decisions Catalyst doesn't make."""
+"""Physical layout planning: partition counts, the superstep conf scope
+(``layout`` also holds the state-update join hint constant), and the
+reference's Partitioner family — the engine-level layout decisions Catalyst
+doesn't make."""
 
 from cassovary_spark.plans.layout import (
     choose_partitions,
     superstep_conf,
-    update_join_hint,
 )
 from cassovary_spark.plans.partitioners import (
     random_node_mapper,
@@ -18,7 +18,6 @@ from cassovary_spark.plans.partitioners import (
 __all__ = [
     "choose_partitions",
     "superstep_conf",
-    "update_join_hint",
     "random_node_mapper",
     "hash_source_mapper",
     "hash_dest_mapper",

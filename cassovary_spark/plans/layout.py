@@ -1,6 +1,7 @@
 """Engine-level physical layout decisions: the partition count of an
 operator's stationary tables, the join hint of the per-superstep state
-update, and the session conf scope of a superstep loop."""
+update (a constant, ``UPDATE_JOIN_HINT``), and the session conf scope of a
+superstep loop."""
 
 from __future__ import annotations
 
@@ -15,24 +16,18 @@ SMALL_ROWS_PER_PARTITION = 40_000
 AQE_OFF_MAX_ROWS = 16_777_216
 
 
-def update_join_hint() -> str:
-    """Join hint for the per-superstep STATE-UPDATE join (bucketed state x
-    the superstep's fresh aggregate, both hash(id)-partitioned, so neither
-    side exchanges either way). SHUFFLE_HASH skips the per-superstep SORT of
-    the fresh aggregated side that sort-merge would insert (the bucketed
-    state side is pre-sorted and is the streamed side in both strategies, so
-    row order — and thus every observed FP sum — is unchanged); measured
-    -13% whole-superstep at 3.2M edges, r6. The build side is the aggregate:
-    <= V/p rows with p sized at ~ROWS_PER_PARTITION, so the per-task hash
-    table is bounded at any scale. CASSOVARY_UPDATE_JOIN=merge pins
-    sort-merge (graceful spill) for clusters with tight executor memory.
-    GATHER joins (edge table x state, both pre-sorted on the join key) stay
-    MERGE: their SMJ sorts nothing and a hash build of the state would be
-    pure overhead."""
-    import os
-
-    v = os.environ.get("CASSOVARY_UPDATE_JOIN", "shuffle_hash").lower()
-    return "MERGE" if v == "merge" else "SHUFFLE_HASH"
+# Join hint for the per-superstep STATE-UPDATE join (bucketed state x the
+# superstep's fresh aggregate, both hash(id)-partitioned, so neither side
+# exchanges either way). SHUFFLE_HASH skips the per-superstep SORT of the
+# fresh aggregated side that sort-merge would insert (the bucketed state side
+# is pre-sorted and is the streamed side in both strategies, so row order —
+# and thus every observed FP sum — is unchanged); measured -13%
+# whole-superstep at 3.2M edges, r6. The build side is the aggregate: <= V/p
+# rows with p sized at ~ROWS_PER_PARTITION, so the per-task hash table is
+# bounded at any scale. GATHER joins (edge table x state, both pre-sorted on
+# the join key) stay MERGE: their SMJ sorts nothing and a hash build of the
+# state would be pure overhead.
+UPDATE_JOIN_HINT = "SHUFFLE_HASH"
 
 
 @contextmanager

@@ -10,7 +10,7 @@ the round-start commit and the _after.txt files from HEAD:
 Artifacts (names match bench.py workload keys):
 - pagerank_turns_dist_1e6: the per-superstep SQL (captured via a
   SparkSession.sql spy while pagerank(engine="distributed") runs — the same
-  machinery CC/LPA/HITS/ANF/PPR supersteps share via plans.update_join_hint)
+  state-update join hint CC/LPA/HITS/ANF/PPR supersteps use)
 - dedup_docs_minhash / dedup_docs_lsh: minhash_signatures / lsh candidates
 - embeddings_top10: cosine_top_k with an explicit 50-query frame
 - stream_edges_incremental: the executed streaming plan (explainInternal)
@@ -82,8 +82,12 @@ def main() -> None:
         pagerank(tedges, max_iterations=1, engine="distributed")
     finally:
         SparkSession.sql = orig_sql
-    if captured:
-        write("pagerank_turns_dist_1e6", captured[0])
+    if not captured:
+        raise RuntimeError(
+            "sql() spy captured no superstep query containing 'gathered'; "
+            "the pagerank plan would be silently missing from the dump"
+        )
+    write("pagerank_turns_dist_1e6", captured[0])
 
     # --- dedup: minhash signatures + LSH candidates -----------------------
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -116,8 +120,12 @@ def main() -> None:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        write("stream_edges_incremental", q._jsq.explainInternal(True))
+        try:
+            if not q.awaitTermination(120):
+                raise RuntimeError("streaming query did not finish within 120 s")
+            write("stream_edges_incremental", q._jsq.explainInternal(True))
+        finally:
+            q.stop()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -60,7 +61,7 @@ def main() -> None:
         if i:
             samples.append(round(time.time() - t0, 3))
     print(json.dumps({"tree": repo, "edges": m, "samples": samples,
-                      "median": sorted(samples)[len(samples) // 2]}),
+                      "median": statistics.median(samples)}),
           flush=True)
     spark.stop()
 

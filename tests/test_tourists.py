@@ -166,20 +166,22 @@ def _oracle_walk(edge_list, start_nodes, num_steps, reset_prob, num_walkers, see
     return events
 
 
-def test_walk_events_exact_oracle(spark):
+@pytest.mark.parametrize("engine", ["local", "distributed"])
+def test_walk_events_exact_oracle(spark, engine):
     e = edges_df(spark, G6)
     got = {
         (r["walker"], r["step"], r["id"], r["prev"])
         for r in random_walk_events(
             e, start_nodes=[10, 11], num_steps=6, reset_prob=0.25,
-            num_walkers=9, seed=17,
+            num_walkers=9, seed=17, engine=engine,
         ).collect()
     }
     want = set(_oracle_walk(G6, [10, 11], 6, 0.25, 9, 17))
     assert got == want
 
 
-def test_walk_visits_exact_oracle_and_partition_independence(spark):
+@pytest.mark.parametrize("engine", ["local", "distributed"])
+def test_walk_visits_exact_oracle_and_partition_independence(spark, engine):
     from cassovary_spark.operators import random_walk_visits
     from collections import Counter
 
@@ -187,7 +189,8 @@ def test_walk_visits_exact_oracle_and_partition_independence(spark):
     got = {
         r["id"]: r["visits"]
         for r in random_walk_visits(
-            e, [10], num_steps=5, reset_prob=0.3, num_walkers=11, seed=29
+            e, [10], num_steps=5, reset_prob=0.3, num_walkers=11, seed=29,
+            engine=engine,
         ).collect()
     }
     want = Counter(ev[2] for ev in _oracle_walk(G6, [10], 5, 0.3, 11, 29))
@@ -197,7 +200,7 @@ def test_walk_visits_exact_oracle_and_partition_independence(spark):
         r["id"]: r["visits"]
         for r in random_walk_visits(
             e.repartition(5), [10], num_steps=5, reset_prob=0.3,
-            num_walkers=11, seed=29, num_partitions=3,
+            num_walkers=11, seed=29, num_partitions=3, engine=engine,
         ).collect()
     }
     assert got2 == got
