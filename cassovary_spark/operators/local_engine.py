@@ -14,7 +14,11 @@ CSR), so this path is also the closest semantic mirror.
 Recurrences here are line-for-line twins of the distributed operators
 (operators/pagerank.py etc.) and are equality-tested against them
 (tests/test_local_engine.py); all distributed-vs-local differences are
-floating-point summation order, within fixture tolerance.
+floating-point summation order, within fixture tolerance. As in the
+distributed engine, PageRank and personalized PageRank are one power
+iteration (``pagerank_numpy`` and ``ppr_numpy`` are its two entry points),
+and ``bfs_numpy`` serves both outputs of ``bfs``; the twins share one
+source-sorted CSR builder and one sorted-id lookup.
 
 The distributed path remains the default above the threshold and can always
 be forced with ``engine='distributed'`` — scale correctness does not ride on
@@ -105,26 +109,37 @@ def pagerank_numpy(
     algorithms/linkanalysis/PageRank.scala:80-113) vectorized over numpy.
 
     Returns (pr, error, iterations, history)."""
+    return _power_iteration_numpy(
+        ids, si, di, damping, 1.0 - damping, None, max_iterations, tolerance
+    )
+
+
+def _power_iteration_numpy(
+    ids: np.ndarray, si: np.ndarray, di: np.ndarray, damping: float, teleport: float,
+    seed_mass: np.ndarray | None, max_iterations: int | None, tolerance: float,
+):
+    """The power iteration of operators/pagerank.py: ``seed_mass`` None
+    spreads the teleport and the dangling mass uniformly (PageRank), else
+    over the per-vertex ``seed_mass`` (personalized PageRank), which is also
+    the start vector. Returns (pr, error, iterations, history)."""
     n = len(ids)
     outdeg = np.bincount(si, minlength=n)
     dangling = outdeg == 0
-    w = damping / np.maximum(outdeg, 1).astype(np.float64)
-    pr = np.full(n, 1.0 / n)
-    damping_amount = (1.0 - damping) / n
+    ws = (damping / np.maximum(outdeg, 1).astype(np.float64))[si]
+    pr = np.full(n, 1.0 / n) if seed_mass is None else seed_mass.copy()
+    damping_amount = teleport / n
     error = 100.0 + tolerance  # reference initial error (PageRank.scala:82)
     history: list[dict] = []
     it = 0
-
-    def terminated(i: int, err: float) -> bool:
-        if max_iterations is not None and i >= max_iterations:
-            return True
-        return err <= tolerance
-
-    ws = w[si]
-    while not terminated(it, error):
-        dangle_sum = damping * float(pr[dangling].sum()) / n
+    while (max_iterations is None or it < max_iterations) and error > tolerance:
+        dangle_mass = float(pr[dangling].sum())
         gathered = np.bincount(di, weights=pr[si] * ws, minlength=n)
-        new_pr = gathered + damping_amount + dangle_sum
+        if seed_mass is None:
+            dangle_sum = damping * dangle_mass / n
+            new_pr = gathered + damping_amount + dangle_sum
+        else:
+            dangle_sum = damping * dangle_mass
+            new_pr = gathered + (teleport + dangle_sum) * seed_mass
         error = float(np.abs(new_pr - pr).sum())
         pr = new_pr
         it += 1
@@ -154,13 +169,7 @@ def hits_numpy(
     it = 0
     history: list[dict] = []
     auth = np.zeros(n)
-
-    def terminated(i: int, err: float) -> bool:
-        if max_iterations is not None and i >= max_iterations:
-            return True
-        return err <= tolerance
-
-    while not terminated(it, error):
+    while (max_iterations is None or it < max_iterations) and error > tolerance:
         a_raw = np.bincount(di, weights=hub[si], minlength=n)
         h_raw = np.bincount(si, weights=a_raw[di], minlength=n)
         hmax = h_raw.max() if n and h_raw.max() > 0 else 1.0
@@ -285,6 +294,23 @@ def label_propagation_numpy(
     return ids[labels], rounds
 
 
+def _lookup(ids: np.ndarray, x: np.ndarray):
+    """``(pos, found)``: positions of ``x`` in the sorted ``ids``, and which
+    of them are present (``pos`` is meaningless where not found)."""
+    pos = np.searchsorted(ids, x)
+    if len(ids) == 0:
+        return pos, np.zeros(len(x), dtype=bool)
+    return pos, (pos < len(ids)) & (ids[np.minimum(pos, len(ids) - 1)] == x)
+
+
+def _csr_by_src(si: np.ndarray, di: np.ndarray, n: int):
+    """``(indptr, nbrs)``: CSR rows by source position, each row's
+    neighbors sorted ascending (the walk twin draws by index into them)."""
+    order = np.lexsort((di, si))
+    s_sorted = si[order]
+    return np.searchsorted(s_sorted, np.arange(n + 1)), di[order]
+
+
 def bfs_numpy(
     ids: np.ndarray,
     si: np.ndarray,
@@ -292,75 +318,27 @@ def bfs_numpy(
     seeds,
     max_depth: int | None,
     max_degree: int | None,
+    events: bool = False,
 ):
     """Visit-once BFS twin of operators/traversals.py:bfs (reference:
     graph/Traverser.scala:426-450): first-visit depth from the deduped seed
     set; hub nodes (out-degree > max_degree) are visited but not expanded;
     seeds absent from the graph still appear at depth 0.
 
-    Returns (out_ids, out_depths) as external-id / depth arrays."""
+    Returns (out_ids, out_depths) as external-id / depth arrays, or with
+    ``events`` the twin of bfs(events=True): one row per edge RELAXATION
+    (frontier node u at depth d scanning edge u->v emits (d+1, v, u) whether
+    or not v is new — PrevNbrCounter records every previous-neighbor
+    encounter, GraphUtils.scala:46-67) plus (0, seed, null) rows, as
+    (steps, out_ids, prevs) with prev < 0 encoding null."""
     n = len(ids)
     seeds = np.unique(np.asarray(list(seeds), dtype=np.int64))
-    spos_all = np.searchsorted(ids, seeds)
-    in_graph = (spos_all < n) & (ids[np.minimum(spos_all, max(n - 1, 0))] == seeds) if n else np.zeros(len(seeds), bool)
-    # CSR by src
-    order = np.argsort(si, kind="stable")
-    s_sorted, d_sorted = si[order], di[order]
-    indptr = np.searchsorted(s_sorted, np.arange(n + 1))
+    spos, in_graph = _lookup(ids, seeds)
+    indptr, d_sorted = _csr_by_src(si, di, n)
     outdeg = np.diff(indptr)
     expandable = np.ones(n, dtype=bool) if max_degree is None else (outdeg <= max_degree)
     depth_of = np.full(n, -1, dtype=np.int64)
-    frontier = spos_all[in_graph]
-    depth_of[frontier] = 0
-    depth = 0
-    while frontier.size and (max_depth is None or depth < max_depth):
-        f = frontier[expandable[frontier]]
-        starts, counts = indptr[f], outdeg[f]
-        tot = int(counts.sum())
-        if tot == 0:
-            break
-        seg = np.cumsum(counts) - counts
-        pos = (np.arange(tot, dtype=np.int64) - np.repeat(seg, counts)
-               + np.repeat(starts, counts))
-        nbrs = d_sorted[pos]
-        new = np.unique(nbrs[depth_of[nbrs] < 0])
-        if new.size == 0:
-            break
-        depth += 1
-        depth_of[new] = depth
-        frontier = new
-    vis = depth_of >= 0
-    out_ids = np.concatenate([ids[vis], seeds[~in_graph]])
-    out_depths = np.concatenate(
-        [depth_of[vis], np.zeros(int((~in_graph).sum()), dtype=np.int64)]
-    )
-    return out_ids, out_depths
-
-
-def bfs_events_numpy(
-    ids: np.ndarray,
-    si: np.ndarray,
-    di: np.ndarray,
-    seeds,
-    max_depth: int | None,
-    max_degree: int | None,
-):
-    """Event-log twin of operators/traversals.py:bfs(events=True): one row
-    per edge RELAXATION (frontier node u at depth d scanning edge u->v emits
-    (d+1, v, u) whether or not v is new — PrevNbrCounter records every
-    previous-neighbor encounter, GraphUtils.scala:46-67), plus (0, seed,
-    null) rows. Returns (steps, out_ids, prevs) with prev < 0 encoding null."""
-    n = len(ids)
-    seeds = np.unique(np.asarray(list(seeds), dtype=np.int64))
-    spos_all = np.searchsorted(ids, seeds)
-    in_graph = (spos_all < n) & (ids[np.minimum(spos_all, max(n - 1, 0))] == seeds) if n else np.zeros(len(seeds), bool)
-    order = np.argsort(si, kind="stable")
-    s_sorted, d_sorted = si[order], di[order]
-    indptr = np.searchsorted(s_sorted, np.arange(n + 1))
-    outdeg = np.diff(indptr)
-    expandable = np.ones(n, dtype=bool) if max_degree is None else (outdeg <= max_degree)
-    depth_of = np.full(n, -1, dtype=np.int64)
-    frontier = spos_all[in_graph]
+    frontier = spos[in_graph]
     depth_of[frontier] = 0
     steps = [np.zeros(len(seeds), dtype=np.int64)]
     evs = [seeds]
@@ -376,17 +354,21 @@ def bfs_events_numpy(
         pos = (np.arange(tot, dtype=np.int64) - np.repeat(seg, counts)
                + np.repeat(starts, counts))
         nbrs = d_sorted[pos]
-        prev = np.repeat(f, counts)
         depth += 1
-        steps.append(np.full(tot, depth, dtype=np.int64))
-        evs.append(ids[nbrs])
-        prevs.append(ids[prev])
-        new = np.unique(nbrs[depth_of[nbrs] < 0])
-        depth_of[new] = depth
-        frontier = new
-        if new.size == 0:
-            break
-    return np.concatenate(steps), np.concatenate(evs), np.concatenate(prevs)
+        if events:
+            steps.append(np.full(tot, depth, dtype=np.int64))
+            evs.append(ids[nbrs])
+            prevs.append(ids[np.repeat(f, counts)])
+        frontier = np.unique(nbrs[depth_of[nbrs] < 0])
+        depth_of[frontier] = depth
+    if events:
+        return np.concatenate(steps), np.concatenate(evs), np.concatenate(prevs)
+    vis = depth_of >= 0
+    out_ids = np.concatenate([ids[vis], seeds[~in_graph]])
+    out_depths = np.concatenate(
+        [depth_of[vis], np.zeros(int((~in_graph).sum()), dtype=np.int64)]
+    )
+    return out_ids, out_depths
 
 
 def random_walk_events_numpy(
@@ -407,18 +389,14 @@ def random_walk_events_numpy(
     import hashlib
 
     n = len(ids)
-    # CSR with sorted neighbor lists (sort by (src, dst) then slice)
-    order = np.lexsort((di, si))
-    s_sorted, d_sorted = si[order], di[order]
-    indptr = np.searchsorted(s_sorted, np.arange(n + 1))
+    indptr, d_sorted = _csr_by_src(si, di, n)
     outdeg = np.diff(indptr)
 
     homes_ext = np.array(
         [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)],
         dtype=np.int64,
     )
-    hp = np.searchsorted(ids, homes_ext)
-    home_in = (hp < n) & (ids[np.minimum(hp, max(n - 1, 0))] == homes_ext) if n else np.zeros(num_walkers, bool)
+    hp, home_in = _lookup(ids, homes_ext)
     # positions; -1 = a home that is not a graph vertex (never has neighbors)
     home_pos = np.where(home_in, hp, -1)
     cur = home_pos.copy()
@@ -453,8 +431,7 @@ def random_walk_events_numpy(
         nxt_ext = np.where(reset, homes_ext, picked_ext)
         prev_ext = np.where(reset, -1, cur_ext)
         # new positions (next step's adjacency lookup)
-        np_pos = np.searchsorted(ids, nxt_ext) if n else np.full(num_walkers, -1)
-        ok = (np_pos < n) & (ids[np.minimum(np_pos, max(n - 1, 0))] == nxt_ext) if n else np.zeros(num_walkers, bool)
+        np_pos, ok = _lookup(ids, nxt_ext)
         cur = np.where(ok, np_pos, -1)
         cur_ext = nxt_ext
         walkers_out.append(np.arange(num_walkers, dtype=np.int64))
@@ -526,32 +503,20 @@ def ppr_numpy(
     max_iterations: int,
     tolerance: float,
 ):
-    """Exact personalized-PageRank power iteration twin of
+    """Exact personalized-PageRank twin of
     operators/traversals.py:personalized_pagerank (reference semantics of
-    calculatePersonalizedReputation, GraphUtils.scala): teleport mass goes to
-    the source set uniformly; dangling mass also returns to the sources."""
-    n = len(ids)
+    calculatePersonalizedReputation, GraphUtils.scala): PageRank's power
+    iteration with the teleport mass and the dangling mass going to the
+    source set uniformly. Returns (pr, error, iterations)."""
     sources = np.unique(np.asarray(sources, dtype=np.int64))
-    spos = np.searchsorted(ids, sources)
+    spos, in_graph = _lookup(ids, sources)
     # seeds absent from the graph keep their mass share but receive none
-    # (matching the distributed left-join onto the vertex table)
-    in_graph = (spos < n) & (ids[np.minimum(spos, n - 1)] == sources)
-    reset = np.zeros(n)
-    reset[spos[in_graph]] = 1.0 / len(sources)
-    outdeg = np.bincount(si, minlength=n)
-    dangling = outdeg == 0
-    w = (1.0 - reset_prob) / np.maximum(outdeg, 1).astype(np.float64)
-    pr = reset.copy()
-    ws = w[si]
-    it = 0
-    error = 100.0 + tolerance
-    while it < max_iterations and error > tolerance:
-        dangle = (1.0 - reset_prob) * float(pr[dangling].sum())
-        gathered = np.bincount(di, weights=pr[si] * ws, minlength=n)
-        new_pr = gathered + (reset_prob + dangle) * reset
-        error = float(np.abs(new_pr - pr).sum())
-        pr = new_pr
-        it += 1
+    # (matching the distributed vertex table's seed_mass column)
+    seed_mass = np.zeros(len(ids))
+    seed_mass[spos[in_graph]] = 1.0 / len(sources)
+    pr, error, it, _history = _power_iteration_numpy(
+        ids, si, di, 1.0 - reset_prob, reset_prob, seed_mass, max_iterations, tolerance
+    )
     return pr, error, it
 
 
@@ -611,8 +576,7 @@ def bipartite_numpy(
     init = lw_init[order].astype(np.float64)
     nl = len(l_ids)
     # subgraph restriction: edges whose left endpoint was supplied
-    pos = np.searchsorted(l_ids, src)
-    valid = (pos < nl) & (l_ids[np.minimum(pos, max(nl - 1, 0))] == src) if nl else np.zeros(len(src), bool)
+    pos, valid = _lookup(l_ids, src)
     sl = pos[valid]
     dkeep = dst[valid]
     r_ids = np.unique(dkeep)

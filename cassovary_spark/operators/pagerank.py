@@ -1,4 +1,6 @@
-"""PageRank as iterative DataFrame gather-scatter.
+"""PageRank and personalized PageRank: one power iteration, as iterative
+DataFrame gather-scatter (and its numpy twin, local_engine.pagerank_numpy /
+ppr_numpy).
 
 Semantics match the reference exactly
 (algorithms/linkanalysis/PageRank.scala, LinkAnalysis.scala):
@@ -15,6 +17,11 @@ Semantics match the reference exactly
   tolerance=1e-8 (PageRankParams, PageRank.scala:28-31)
 - the reference's "stored OnlyIn" mode treats stored edges as the transpose;
   callers reproduce it by passing ``reverse_edges(edges)``.
+- personalized PageRank (``traversals.personalized_pagerank``) is the same
+  recurrence with the teleport and the dangling mass sent to the seeds:
+    pr'[v] = gather + (t + d * sum(pr[dangling])) * seed_mass[v]
+  with t = reset_prob, d = 1 - reset_prob, seed_mass = 1/|seeds| on seeds,
+  starting from pr = seed_mass. With every vertex a seed it is PageRank.
 
 Scale design (100 TB edge table, 1000 executors):
 - the edge table is joined with out-degrees ONCE into a static
@@ -85,6 +92,20 @@ def pagerank(
     "distributed"/"local" force a path. Checkpointed/resumed runs always use
     the distributed path.
     """
+    return _power_iteration(
+        edges, damping, 1.0 - damping, None, max_iterations, tolerance,
+        num_partitions, engine, checkpoint, checkpoint_every, resume,
+    )
+
+
+def _power_iteration(
+    edges: DataFrame, damping: float, teleport: float, seeds: list[int] | None,
+    max_iterations: int | None, tolerance: float, num_partitions: int | None, engine: str,
+    checkpoint: CheckpointStore | None = None, checkpoint_every: int = 1, resume: bool = False,
+) -> PageRankResult:
+    """The power iteration of ``pagerank`` (``seeds`` None: the teleport
+    and the dangling mass spread over all vertices) and of personalized
+    PageRank (both go to the de-duplicated ``seeds``, 1/len(seeds) each)."""
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
     m = edges.count()
@@ -94,21 +115,29 @@ def pagerank(
         ids, si, di = LE.edges_to_numpy(edges)
         if len(ids) == 0:
             return _empty(spark)
-        pr, error, its, history = LE.pagerank_numpy(
-            ids, si, di, damping, max_iterations, tolerance
-        )
+        # separate entry points, so a trace can tell the two kernels apart
+        if seeds is None:
+            pr, error, its, history = LE.pagerank_numpy(
+                ids, si, di, damping, max_iterations, tolerance
+            )
+        else:
+            pr, error, its = LE.ppr_numpy(
+                ids, si, di, seeds, teleport, max_iterations, tolerance
+            )
+            history = []
         ranks = LE.result_df(spark, ids, {"pagerank": pr}, "id long, pagerank double")
         return PageRankResult(ranks, error, its, len(ids), m, history)
 
     with Superstep(spark, m, num_partitions) as ss:
         outdeg = out_degrees(edges)
-        # vertex table with dangling flag, stationary across supersteps
-        verts = ss.persist(
-            vertices_of(edges)
-            .join(outdeg, "id", "left")
-            .select("id", F.col("out_degree").isNull().alias("is_dangling")),
-            "id",
-        )
+        # vertex table with dangling flag (and seed mass), stationary across
+        # supersteps
+        cols = [F.col("out_degree").isNull().alias("is_dangling")]
+        if seeds is not None:
+            cols.append(
+                F.when(F.col("id").isin(seeds), 1.0 / len(seeds)).otherwise(0.0).alias("seed_mass")
+            )
+        verts = ss.persist(vertices_of(edges).join(outdeg, "id", "left").select("id", *cols), "id")
         n = verts.count()
         if n == 0:
             return _empty(spark)
@@ -122,15 +151,14 @@ def pagerank(
         )
         wedges.count()
         wedges_view = ss.name(wedges)
-        damping_amount = (1.0 - damping) / n
+        damping_amount = teleport / n
 
         start, ranks, meta = ss.latest(checkpoint, resume)
         # reference initial error (PageRank.scala:82)
         error = float(meta["metrics"]["error"]) if meta else 100.0 + tolerance
         if ranks is None:
-            ranks, _ = ss.write(
-                verts.select("id", F.lit(1.0 / n).alias("pagerank"), "is_dangling")
-            )
+            init = F.lit(1.0 / n) if seeds is None else F.col("seed_mass")
+            ranks, _ = ss.write(verts.select("id", init.alias("pagerank"), *verts.columns[1:]))
         # dangling mass of the CURRENT ranks (reference recomputes per
         # iteration, :92-93); after the first superstep it rides the state
         # write, so each superstep costs exactly one job
@@ -140,7 +168,16 @@ def pagerank(
         )
 
         def step(ranks, last):
-            dangle_sum = damping * last["dangle_mass"] / n
+            # the teleport and the dangling mass go to every vertex equally,
+            # or to the seeds in proportion to their seed mass
+            if seeds is None:
+                dangle_sum = damping * last["dangle_mass"] / n
+                teleport_sql = f"{damping_amount!r}d + {dangle_sum!r}d"
+                seed_col = ""
+            else:
+                dangle_sum = damping * last["dangle_mass"]
+                teleport_sql = f"({teleport!r}d + {dangle_sum!r}d) * s.seed_mass"
+                seed_col = "\n         s.seed_mass,"
             state = ss.name(ranks)
             # Join strategy is pinned per role: the GATHER join keeps MERGE
             # (both sides pre-sorted on the key — zero-sort SMJ) and the
@@ -158,9 +195,9 @@ def pagerank(
             new_ranks, got = ss.write(
                 spark.sql(f"""
   SELECT /*+ {UPDATE_JOIN_HINT}(c) */ s.id,
-         coalesce(c.gathered, 0.0d) + {damping_amount!r}d + {dangle_sum!r}d
+         coalesce(c.gathered, 0.0d) + {teleport_sql}
              AS pagerank,
-         s.is_dangling,
+         s.is_dangling,{seed_col}
          s.pagerank AS prev
   FROM {state} s
   LEFT JOIN (

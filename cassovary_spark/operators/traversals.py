@@ -19,6 +19,10 @@ cumulative DataFrame, lineage cut each level. Random walks keep one row per
 walker (millions of walkers = one modest DataFrame) and sample neighbors
 JVM-side via md5-derived uniforms over grouped adjacency arrays (see
 ``_walk_uniform``) — no per-row Python, reproducible under any partitioning.
+Every traversal frees its persisted adjacency and state scratch on failure
+as well as on success. Exact personalized PageRank is ``pagerank``'s power
+iteration (operators/pagerank.py) with a seed teleport; this module only
+validates its seeds and names its output column.
 """
 
 from __future__ import annotations
@@ -27,16 +31,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassovary_spark.checkpoint import StateScratch, materialize
-from cassovary_spark.graph import out_degrees, vertices_of
-from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
-from cassovary_spark.superstep import Superstep, choose_engine
+from cassovary_spark.graph import out_degrees
+from cassovary_spark.operators.pagerank import _power_iteration
+from cassovary_spark.superstep import choose_engine
 
 
-def _seed_df(spark, seeds, name: str = "id") -> DataFrame:
+def _seed_df(spark, seeds) -> DataFrame:
     # de-duplicated: a repeated seed must not yield duplicate frontier rows
-    # (bfs output is one (id, depth) per id) or double PPR seed mass
+    # (bfs output is one (id, depth) per id)
     uniq = sorted({int(s) for s in seeds})
-    return spark.createDataFrame([(s,) for s in uniq], f"{name} long")
+    return spark.createDataFrame([(s,) for s in uniq], "id long")
 
 
 def _union_all(dfs) -> DataFrame:
@@ -106,20 +110,17 @@ def bfs(
         route = _event_log_route(route, edges, engine)
     if route == "local":
         from cassovary_spark.operators import local_engine as LE
-        import numpy as np
 
         ids, si, di = LE.edges_to_numpy(edges)
+        out = LE.bfs_numpy(ids, si, di, seeds, max_depth, max_degree, events)
         if events:
-            steps, eids, prevs = LE.bfs_events_numpy(
-                ids, si, di, seeds, max_depth, max_degree
-            )
+            steps, eids, prevs = out
             return _local_event_log(
                 spark,
-                {"step": steps.astype("int32"), "id": eids,
-                 "prev": np.asarray(prevs, dtype="int64")},
+                {"step": steps.astype("int32"), "id": eids, "prev": prevs},
                 "step int, id long, prev long",
             )
-        out_ids, out_depths = LE.bfs_numpy(ids, si, di, seeds, max_depth, max_degree)
+        out_ids, out_depths = out
         return LE.result_df(
             spark, out_ids, {"depth": out_depths.astype("int32")}, "id long, depth int"
         )
@@ -177,60 +178,61 @@ def _frontier_levels(
     # O(V * depth) as a rewrite-visited-per-level loop would cost.
     # keep_last covers every level: files must outlive the whole walk.
     scratch = StateScratch(spark, keep_last=1_000_000_000)
-    frontier = scratch.roundtrip(frontier)
-    levels = [frontier]
-    ev_frames = [
-        frontier.select(
-            F.lit(0).alias("step"), *keys, "id", F.lit(None).cast("long").alias("prev")
-        )
-    ]
-    vbase = [frontier.select(*keys, "id")]
-    visited = _union_all(vbase)
-    depth = 0
-    while max_depth is None or depth < max_depth:
-        expand = frontier.join(adj, frontier.id == adj.src)
-        if events:
-            # per-level relaxation log, written once (same per-level-file
-            # pattern as the frontier itself); the next frontier derives
-            # from it so the expansion join runs once either way
-            relax = scratch.roundtrip(
-                expand.select(
-                    F.lit(depth + 1).alias("step"),
-                    *keys,
-                    F.col("dst").alias("id"),
-                    F.col("src").alias("prev"),
-                )
+    try:
+        frontier = scratch.roundtrip(frontier)
+        levels = [frontier]
+        ev_frames = [
+            frontier.select(
+                F.lit(0).alias("step"), *keys, "id", F.lit(None).cast("long").alias("prev")
             )
-            ev_frames.append(relax)
-            nxt_ids = relax.select(*keys, "id")
-        else:
-            nxt_ids = expand.select(*keys, F.col("dst").alias("id"))
-        nxt = (
-            nxt_ids
-            .distinct()
-            .join(visited, [*keys, "id"], "left_anti")
-            .withColumn("depth", F.lit(depth + 1))
-        )
-        if repartition_levels:
-            nxt = nxt.repartition(p, "id")
-        nxt, n_new = scratch.roundtrip(nxt, with_count=True)
-        if n_new == 0:
-            break
-        levels.append(nxt)
-        vbase.append(nxt.select(*keys, "id"))
-        # periodic compaction bounds BOTH costs: visited rewrites are
-        # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
-        # a pure lazy union degrades to O(depth^2) scans on deep-narrow
-        # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
-        if len(vbase) > 8:
-            vbase = [scratch.roundtrip(_union_all(vbase))]
+        ]
+        vbase = [frontier.select(*keys, "id")]
         visited = _union_all(vbase)
-        frontier = nxt
-        depth += 1
-    result = materialize(_union_all(ev_frames if events else levels))
-    scratch.close()
-    adj.unpersist()
-    return result
+        depth = 0
+        while max_depth is None or depth < max_depth:
+            expand = frontier.join(adj, frontier.id == adj.src)
+            if events:
+                # per-level relaxation log, written once (same per-level-file
+                # pattern as the frontier itself); the next frontier derives
+                # from it so the expansion join runs once either way
+                relax = scratch.roundtrip(
+                    expand.select(
+                        F.lit(depth + 1).alias("step"),
+                        *keys,
+                        F.col("dst").alias("id"),
+                        F.col("src").alias("prev"),
+                    )
+                )
+                ev_frames.append(relax)
+                nxt_ids = relax.select(*keys, "id")
+            else:
+                nxt_ids = expand.select(*keys, F.col("dst").alias("id"))
+            nxt = (
+                nxt_ids
+                .distinct()
+                .join(visited, [*keys, "id"], "left_anti")
+                .withColumn("depth", F.lit(depth + 1))
+            )
+            if repartition_levels:
+                nxt = nxt.repartition(p, "id")
+            nxt, n_new = scratch.roundtrip(nxt, with_count=True)
+            if n_new == 0:
+                break
+            levels.append(nxt)
+            vbase.append(nxt.select(*keys, "id"))
+            # periodic compaction bounds BOTH costs: visited rewrites are
+            # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
+            # a pure lazy union degrades to O(depth^2) scans on deep-narrow
+            # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
+            if len(vbase) > 8:
+                vbase = [scratch.roundtrip(_union_all(vbase))]
+            visited = _union_all(vbase)
+            frontier = nxt
+            depth += 1
+        return materialize(_union_all(ev_frames if events else levels))
+    finally:
+        scratch.close()
+        adj.unpersist()
 
 
 def all_paths_walk(
@@ -259,40 +261,42 @@ def all_paths_walk(
     p = choose_partitions(spark, edges, num_partitions)
     adj = edges.select("src", "dst").repartition(p, "src").sortWithinPartitions("src").persist()
 
-    # levels checkpointed once each; the total is a lazy union at the end —
-    # no per-level rewrite of the accumulated counts
-    level = materialize(_seed_df(spark, seeds).withColumn("cnt", F.lit(1).cast("long")))
-    levels = [level]
-    ev_frames = [
-        level.select(
-            F.lit(0).alias("step"), "id",
-            F.lit(None).cast("long").alias("prev"), "cnt",
-        )
-    ]
-    step = 0
-    for _ in range(max_depth):
-        step += 1
-        expand = level.join(adj, level.id == adj.src)
-        if events:
-            hops = materialize(
-                expand.groupBy(F.col("dst").alias("id"), F.col("src").alias("prev"))
-                .agg(F.sum("cnt").alias("cnt"))
+    try:
+        # levels checkpointed once each; the total is a lazy union at the end —
+        # no per-level rewrite of the accumulated counts
+        level = materialize(_seed_df(spark, seeds).withColumn("cnt", F.lit(1).cast("long")))
+        levels = [level]
+        ev_frames = [
+            level.select(
+                F.lit(0).alias("step"), "id",
+                F.lit(None).cast("long").alias("prev"), "cnt",
             )
-            if hops.isEmpty():
-                break
-            ev_frames.append(
-                hops.select(F.lit(step).alias("step"), "id", "prev", "cnt")
-            )
-            level = materialize(hops.groupBy("id").agg(F.sum("cnt").alias("cnt")))
-        else:
-            level = materialize(
-                expand.groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-            if level.isEmpty():
-                break
-        levels.append(level)
-    adj.unpersist()
+        ]
+        step = 0
+        for _ in range(max_depth):
+            step += 1
+            expand = level.join(adj, level.id == adj.src)
+            if events:
+                hops = materialize(
+                    expand.groupBy(F.col("dst").alias("id"), F.col("src").alias("prev"))
+                    .agg(F.sum("cnt").alias("cnt"))
+                )
+                if hops.isEmpty():
+                    break
+                ev_frames.append(
+                    hops.select(F.lit(step).alias("step"), "id", "prev", "cnt")
+                )
+                level = materialize(hops.groupBy("id").agg(F.sum("cnt").alias("cnt")))
+            else:
+                level = materialize(
+                    expand.groupBy(F.col("dst").alias("id"))
+                    .agg(F.sum("cnt").alias("cnt"))
+                )
+                if level.isEmpty():
+                    break
+            levels.append(level)
+    finally:
+        adj.unpersist()
     if events:
         return _union_all(ev_frames)
     return _union_all(levels).groupBy("id").agg(F.sum("cnt").alias("visits"))
@@ -462,57 +466,58 @@ def _walk_steps(
 
     p = choose_partitions(spark, edges, num_partitions)
     adj = _adjacency_lists(edges, p).persist()
-
-    homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]
-    walkers = spark.createDataFrame(
-        [(i, h, h) for i, h in enumerate(homes)], "walker long, home long, cur long"
-    )
-    if track_paths:
-        walkers = walkers.withColumn("path", F.array("cur"))
-    walkers = walkers.repartition(p, "cur")
-
-    def ev(df: DataFrame, step: int, prev_col) -> DataFrame:
-        cols = [
-            "walker",
-            F.lit(step).alias("step"),
-            F.col("cur").alias("id"),
-            prev_col.alias("prev"),
-        ]
-        if track_paths:
-            cols.append("path")
-        return df.select(*cols)
-
-    frames = [ev(walkers, 0, F.lit(None).cast("long"))]
-    for step in range(num_steps):
-        reset = (F.col("_r") < F.lit(reset_prob)) | F.col("nbrs").isNull()
-        nxt = F.element_at(
-            "nbrs",
-            (F.floor(_walk_uniform("n", step, seed) * F.size("nbrs")).cast("int") + 1),
+    try:
+        homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]
+        walkers = spark.createDataFrame(
+            [(i, h, h) for i, h in enumerate(homes)], "walker long, home long, cur long"
         )
-        cols = [
-            "walker",
-            "home",
-            F.when(reset, F.col("home")).otherwise(nxt).alias("cur"),
-            F.when(reset, F.lit(None).cast("long"))
-            .otherwise(F.col("cur"))
-            .alias("_prev"),
-        ]
         if track_paths:
-            cols.append(
-                F.when(reset, F.array("home"))
-                .otherwise(F.concat("path", F.array(nxt)))
-                .alias("path")
+            walkers = walkers.withColumn("path", F.array("cur"))
+        walkers = walkers.repartition(p, "cur")
+
+        def ev(df: DataFrame, step: int, prev_col) -> DataFrame:
+            cols = [
+                "walker",
+                F.lit(step).alias("step"),
+                F.col("cur").alias("id"),
+                prev_col.alias("prev"),
+            ]
+            if track_paths:
+                cols.append("path")
+            return df.select(*cols)
+
+        frames = [ev(walkers, 0, F.lit(None).cast("long"))]
+        for step in range(num_steps):
+            reset = (F.col("_r") < F.lit(reset_prob)) | F.col("nbrs").isNull()
+            nxt = F.element_at(
+                "nbrs",
+                (F.floor(_walk_uniform("n", step, seed) * F.size("nbrs")).cast("int") + 1),
             )
-        stepped = (
-            walkers.join(adj, walkers.cur == adj.src, "left")
-            .withColumn("_r", _walk_uniform("r", step, seed))
-            .select(*cols)
-            .repartition(p, "cur")
-        )
-        walkers = materialize(stepped)
-        frames.append(ev(walkers, step + 1, F.col("_prev")))
-        walkers = walkers.drop("_prev")
-    adj.unpersist()
+            cols = [
+                "walker",
+                "home",
+                F.when(reset, F.col("home")).otherwise(nxt).alias("cur"),
+                F.when(reset, F.lit(None).cast("long"))
+                .otherwise(F.col("cur"))
+                .alias("_prev"),
+            ]
+            if track_paths:
+                cols.append(
+                    F.when(reset, F.array("home"))
+                    .otherwise(F.concat("path", F.array(nxt)))
+                    .alias("path")
+                )
+            stepped = (
+                walkers.join(adj, walkers.cur == adj.src, "left")
+                .withColumn("_r", _walk_uniform("r", step, seed))
+                .select(*cols)
+                .repartition(p, "cur")
+            )
+            walkers = materialize(stepped)
+            frames.append(ev(walkers, step + 1, F.col("_prev")))
+            walkers = walkers.drop("_prev")
+    finally:
+        adj.unpersist()
     return _union_all(frames)
 
 
@@ -603,91 +608,14 @@ def personalized_pagerank(
 
     pr' = reset_prob * seed_indicator/|seeds|
           + (1-reset_prob) * (gather + dangling mass redistributed to seeds).
-    Returns ``(id, score)`` summing to 1 over reachable vertices.
+    Returns ``(id, score)`` summing to 1 over reachable vertices. This is
+    ``pagerank``'s power iteration (operators/pagerank.py) with the teleport
+    sent to the de-duplicated seeds instead of to every vertex.
     """
     if not seeds:
         raise ValueError("seeds must be non-empty")
-    spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine) == "local":
-        from cassovary_spark.operators import local_engine as LE
-
-        ids, si, di = LE.edges_to_numpy(edges)
-        if len(ids) == 0:
-            return spark.createDataFrame([], "id long, score double")
-        import numpy as np
-
-        score, _err, _its = LE.ppr_numpy(
-            ids, si, di, np.asarray(list(seeds), dtype=np.int64),
-            reset_prob, max_iterations, tolerance,
-        )
-        return LE.result_df(spark, ids, {"score": score}, "id long, score double")
-
-    alpha = float(reset_prob)
-    d = 1.0 - alpha
-    with Superstep(spark, m0, num_partitions) as ss:
-        p = ss.p
-        outdeg = out_degrees(edges)
-        verts = ss.persist(
-            vertices_of(edges)
-            .join(outdeg, "id", "left")
-            .select("id", F.col("out_degree").isNull().alias("is_dangling")),
-            "id",
-        )
-        # mass divides over UNIQUE seeds (matching _seed_df's dedupe) so the
-        # initial distribution always sums to 1
-        n_seeds = len({int(s) for s in seeds})
-        seed_df = _seed_df(spark, seeds).withColumn("seed_mass", F.lit(1.0 / n_seeds))
-        verts_s = ss.persist(
-            verts.join(seed_df, "id", "left").select(
-                "id", "is_dangling", F.coalesce("seed_mass", F.lit(0.0)).alias("seed_mass")
-            )
-        )
-        wedges = ss.persist(
-            edges.join(outdeg.withColumnRenamed("id", "src"), "src")
-            .select("src", "dst", (F.lit(d) / F.col("out_degree")).alias("w")),
-            "src",
-        )
-
-        ranks, _ = ss.write(
-            verts_s.select("id", F.col("seed_mass").alias("score"), "is_dangling", "seed_mass")
-        )
-        # initial dangling mass (one scan); afterwards collected by observe
-        # during each state write — one job per superstep total
-        dangle = (
-            ranks.filter(F.col("is_dangling")).agg(F.sum("score").alias("s")).first()["s"]
-            or 0.0
-        )
-
-        def step(ranks, last):
-            contribs = (
-                wedges.hint("merge").join(ranks.select(F.col("id").alias("src"), "score"), "src")
-                .groupBy("dst")
-                .agg(F.sum(F.col("w") * F.col("score")).alias("gathered"))
-            )
-            new_ranks, got = ss.write(
-                ranks.join(
-                    contribs.withColumnRenamed("dst", "id").hint(UPDATE_JOIN_HINT), "id", "left"
-                )
-                .select(
-                    "id",
-                    (
-                        F.coalesce(F.col("gathered"), F.lit(0.0))
-                        + (F.lit(alpha) + F.lit(d) * F.lit(last["dangle"])) * F.col("seed_mass")
-                    ).alias("score"),
-                    "is_dangling",
-                    "seed_mass",
-                    F.col("score").alias("prev"),
-                )
-                .repartition(p, "id"),
-                F.sum(F.abs(F.col("prev") - F.col("score"))).alias("e"),
-                F.sum(F.when(F.col("is_dangling"), F.col("score"))).alias("d"),
-                drop=("prev",),
-            )
-            return new_ranks, {"error": got["e"], "dangle": got["d"] or 0.0}
-
-        ranks, _ = ss.run(
-            ranks, step, lambda row: row["error"] <= tolerance,
-            max_iterations=max_iterations, row={"error": float("inf"), "dangle": dangle},
-        )
-        return materialize(ranks.select("id", "score"))
+    res = _power_iteration(
+        edges, 1.0 - reset_prob, reset_prob, sorted({int(s) for s in seeds}),
+        max_iterations, tolerance, num_partitions, engine,
+    )
+    return res.ranks.withColumnRenamed("pagerank", "score")

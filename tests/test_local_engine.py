@@ -75,6 +75,40 @@ def test_local_matches_distributed(spark, graph, op, kwargs, cols):
         assert all(abs(a - b) < 1e-9 for a, b in zip(lm[k], dm[k])), (k, lm[k], dm[k])
 
 
+@pytest.mark.parametrize("engine", ["local", "distributed"])
+def test_pagerank_is_ppr_seeded_with_every_vertex(spark, graph, monkeypatch, engine):
+    """PageRank is personalized PageRank whose teleport is uniform: same
+    iteration count, scores within 1e-12."""
+    from cassovary_spark.operators import local_engine as LE
+    from cassovary_spark.operators import pagerank, personalized_pagerank
+    from cassovary_spark.superstep import Superstep
+
+    pr = pagerank(graph, damping=0.85, max_iterations=30, tolerance=1e-6, engine=engine)
+    want = {r["id"]: r["pagerank"] for r in pr.ranks.collect()}
+
+    # PPR's iteration count, read where each engine's loop returns it
+    ppr_its = []
+    owner, name, its = (
+        (LE, "ppr_numpy", lambda out: out[2]) if engine == "local"
+        else (Superstep, "run", lambda out: len(out[1]))
+    )
+    fn = getattr(owner, name)
+
+    def counted(*a, **k):
+        out = fn(*a, **k)
+        ppr_its.append(its(out))
+        return out
+
+    monkeypatch.setattr(owner, name, counted)
+    ppr = personalized_pagerank(
+        graph, list(want), reset_prob=0.15, max_iterations=30, tolerance=1e-6, engine=engine
+    )
+    assert ppr_its == [pr.iterations] and pr.iterations < 30
+    got = {r["id"]: r["score"] for r in ppr.collect()}
+    assert got.keys() == want.keys()
+    assert max(abs(got[k] - want[k]) for k in want) < 1e-12
+
+
 def test_pagerank_auto_uses_local_on_small_graph(spark, graph):
     from cassovary_spark.operators import pagerank
 

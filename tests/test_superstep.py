@@ -81,14 +81,21 @@ def _run_lpa(e):
     label_propagation(e, max_iterations=3, engine="distributed")
 
 
+def _run_ppr(e):
+    from cassovary_spark.operators import personalized_pagerank
+
+    personalized_pagerank(e, _seeds(e), max_iterations=3, engine="distributed")
+
+
 @pytest.mark.parametrize(
     "run, marker, pairs",
     [
         (_run_pagerank, "gathered", G6),
         (_run_cc, "nbr_component", TWO_CLIQUES_BRIDGED),
         (_run_lpa, "new_label", TWO_CLIQUES_BRIDGED),
+        (_run_ppr, "gathered", G6),
     ],
-    ids=["pagerank", "cc", "lpa"],
+    ids=["pagerank", "cc", "lpa", "ppr"],
 )
 def test_steady_state_superstep_plan_shape(spark, superstep_sql, run, marker, pairs):
     """Gather = sort-free SortMergeJoin over the bucketed state; update =
@@ -135,7 +142,17 @@ def _leak_cases():
             e, e.select(e.src.alias("id")).distinct().selectExpr("id", "1.0 AS weight"),
             engine="distributed",
         ),
+        "bfs": lambda e: O.bfs(e, _seeds(e), engine="distributed"),
+        "multi_source_bfs": lambda e: O.multi_source_bfs(
+            e, e.select(e.src.alias("source")).distinct()
+        ),
     }
+
+
+# the state roundtrip that raises: the 2nd by default; for the BFS loops the
+# 3rd, after the first level is written (their persisted adjacency is only
+# materialized by that write)
+FAIL_AT = {"bfs": 3, "multi_source_bfs": 3}
 
 
 def _session_residue(spark):
@@ -159,7 +176,7 @@ def test_failed_superstep_frees_session_state(spark, monkeypatch, op):
 
     def failing(self, *a, **k):
         calls.append(1)
-        if len(calls) == 2:
+        if len(calls) == FAIL_AT.get(op, 2):
             raise RuntimeError("injected superstep failure")
         return orig(self, *a, **k)
 
