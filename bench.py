@@ -139,7 +139,7 @@ def build_workloads(spark, sf_dir: str, sf: float):
         exact_dedup(docs).count()
         # the documented scale configuration: the synthetic documents corpus
         # is template-heavy (uncapped: 1.19M candidate pairs from 5000 docs —
-        # ~10% of ALL pairs; measured scripts/dedup_scale_probe.py rationale),
+        # ~10% of ALL pairs; PLANS.md training-pipeline scale probe rationale),
         # so the hot-bucket cap is part of the workload being measured
         minhash_lsh_candidates(
             docs, num_hashes=16, bands=4, max_bucket_size=100

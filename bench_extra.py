@@ -21,6 +21,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -66,7 +67,7 @@ def main() -> None:
                 samples.append(round(time.time() - t0, 3))
             release_caches()
         spark.sparkContext.setJobDescription(None)
-        med = sorted(samples)[len(samples) // 2]
+        med = statistics.median(samples)
         times[name] = med
         print(json.dumps({"query": name, "samples": samples, "median": med}),
               flush=True)

@@ -225,8 +225,8 @@ class StateScratch:
         medium that is RAM in this sandbox and node-local SSD on a cluster,
         and lives at most keep_last supersteps. Snappy there is pure CPU:
         measured ~6-12% whole-superstep cost at 319k-2.4M edges with
-        bit-identical checksums (scripts/profile_superstep8.py). Durable
-        CheckpointStore artifacts keep the session codec.
+        bit-identical checksums (PLANS.md, superstep fixed-cost round 3).
+        Durable CheckpointStore artifacts keep the session codec.
         """
         import contextlib
 

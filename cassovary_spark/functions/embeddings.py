@@ -251,8 +251,8 @@ def lsh_bucketed_ann(
     candidate volume is bounded by cap * n * num_tables, so size the cap
     near the expected same-bucket group size (~10-100 for near-dup
     corpora), not orders above it — measured at 10^6 clustered vectors, a
-    loose cap's candidate shuffle is the dominant cost (see
-    scripts/ann_scale_probe.py).
+    loose cap's candidate shuffle is the dominant cost (PLANS.md, ANN
+    scale probe).
 
     Scale shape: buckets hold IDS ONLY — candidate (q, v) pairs are
     generated and deduped as 16-byte rows, and the (wide) embedding vectors

@@ -28,7 +28,7 @@ questions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cassovary_spark.graph import mutualize, vertices_of
@@ -40,11 +40,6 @@ _FM_PHI = 0.77351
 # cap the initial bit position so OR-chains and the +1 in the lowest-zero
 # scan stay far from the sign bit of a 64-bit long on both engines
 _MAX_POS = 50
-
-
-def _md5long(col):
-    """52-bit BIGINT from the md5 prefix — DuckDB-replayable hash contract."""
-    return F.conv(F.substring(F.md5(col), 1, 13), 16, 10).cast("long")
 
 
 def _init_sketch_cols(registers: int) -> list[Column]:
@@ -96,6 +91,36 @@ def _gather_step(und, state, regs):
     return state.join(gathered.hint(UPDATE_JOIN_HINT), "id", "left"), merged
 
 
+def _nf_curve(
+    edges: DataFrame, iterations: int, registers: int, num_partitions: int | None
+) -> dict[int, float]:
+    """``{t: NF(t)}`` for t = 0..iterations. NF(0) is the FM estimate of the
+    singleton balls (not the exact vertex count), so the curve is monotone
+    by construction and replays in the SQL oracle. Each NF(t) rides its
+    state write as an observed aggregate — one job per superstep, no
+    separate estimate pass."""
+    spark = edges.sparkSession
+    regs = list(range(registers))
+    nf_col = F.round(F.sum(_est_col(registers)), 4).alias("nf")
+    with Superstep(spark, edges.count(), num_partitions) as ss:
+        und = ss.persist(mutualize(edges), "dst")
+        state, got = ss.write(
+            vertices_of(edges).select("id", *_init_sketch_cols(registers))
+            .repartition(ss.p, "id"),
+            nf_col,
+        )
+        nf = {0: float(got["nf"])}
+
+        def step(state, _last):
+            joined, merged = _gather_step(und, state, regs)
+            state, got = ss.write(joined.select("id", *merged), nf_col)
+            return state, {"nf": float(got["nf"])}
+
+        _, history = ss.run(state, step, max_iterations=iterations)
+    nf.update((row["iteration"], row["nf"]) for row in history)
+    return nf
+
+
 def neighborhood_function(
     edges: DataFrame,
     iterations: int = 3,
@@ -105,28 +130,9 @@ def neighborhood_function(
     """``(t, nf)`` for t = 1..iterations: the estimated number of (ordered)
     vertex pairs within distance t on the undirected closure, including
     the trivial pair (v, v)."""
-    spark = edges.sparkSession
-    regs = list(range(registers))
-    with Superstep(spark, edges.count(), num_partitions) as ss:
-        und = ss.persist(mutualize(edges), "dst")
-        state, _ = ss.write(
-            vertices_of(edges).select("id", *_init_sketch_cols(registers))
-            .repartition(ss.p, "id")
-        )
-
-        def step(state, _last):
-            joined, merged = _gather_step(und, state, regs)
-            # NF(t) rides the state write as an observed aggregate — one job
-            # per superstep, no separate estimate pass
-            state, got = ss.write(
-                joined.select("id", *merged),
-                F.round(F.sum(_est_col(registers)), 4).alias("nf"),
-            )
-            return state, {"nf": float(got["nf"])}
-
-        _, history = ss.run(state, step, max_iterations=iterations)
-    return spark.createDataFrame(
-        [(row["iteration"], row["nf"]) for row in history], "t int, nf double"
+    nf = _nf_curve(edges, iterations, registers, num_partitions)
+    return edges.sparkSession.createDataFrame(
+        [(t, nf[t]) for t in range(1, iterations + 1)], "t int, nf double"
     )
 
 
@@ -140,34 +146,8 @@ def effective_diameter(
     """HyperANF's headline output: the q-effective diameter — the (linearly
     interpolated) number of hops within which q of all reachable pairs are
     reached, read off the NF curve (Boldi-Rosa-Vigna WWW'11 §2). Returns a
-    1-row ``(eff_diameter double)`` frame.
-
-    NF(0) is the FM estimate of the singleton balls (not the exact vertex
-    count) so the curve is monotone by construction and the whole
-    computation replays in the SQL oracle."""
-    spark = edges.sparkSession
-    regs = list(range(registers))
-    with Superstep(spark, edges.count(), num_partitions) as ss:
-        und = ss.persist(mutualize(edges), "dst")
-        obs0 = Observation()
-        state, _ = ss.write(
-            vertices_of(edges).select("id", *_init_sketch_cols(registers))
-            .observe(obs0, F.round(F.sum(_est_col(registers)), 4).alias("nf"))
-            .repartition(ss.p, "id")
-        )
-        nf = {0: float(obs0.get["nf"])}
-
-        def step(state, _last):
-            joined, merged = _gather_step(und, state, regs)
-            state, got = ss.write(
-                joined.select("id", *merged),
-                F.round(F.sum(_est_col(registers)), 4).alias("nf"),
-            )
-            return state, {"nf": float(got["nf"])}
-
-        _, history = ss.run(state, step, max_iterations=iterations)
-    nf.update((row["iteration"], row["nf"]) for row in history)
-
+    1-row ``(eff_diameter double)`` frame."""
+    nf = _nf_curve(edges, iterations, registers, num_partitions)
     target = q * nf[iterations]
     d = 0.0
     if nf[0] < target:
@@ -175,7 +155,7 @@ def effective_diameter(
             if nf[t] >= target:
                 d = (t - 1) + (target - nf[t - 1]) / (nf[t] - nf[t - 1])
                 break
-    return spark.createDataFrame(
+    return edges.sparkSession.createDataFrame(
         [(round(d, 6),)], "eff_diameter double"
     )
 

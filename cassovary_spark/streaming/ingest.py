@@ -3,8 +3,9 @@
 ``stream_turn_edges`` is a CUSTOM STATEFUL OPERATOR: the batch derivation
 (sources/transcripts.turn_edges) is a `lead()` window per conversation, which
 plain Structured Streaming cannot express — so per-conversation state (the
-last seen turn) lives in the state store via ``applyInPandasWithState`` and
-each arriving turn emits the edge that connects it to its predecessor.
+last seen turn, kept in per-bucket arrays) lives in the state store via
+``applyInPandasWithState`` and each arriving turn emits the edge that
+connects it to its predecessor.
 Arrow-batched pandas, no per-row Python (the UDF policy of this engine).
 
 Delivery assumption (documented): turns of one conversation arrive in
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,14 +39,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from cassovary_spark.sources.transcripts import conv_ordinal, turn_vertex_id
 
 EDGE_SCHEMA = "src long, dst long"
-STATE_SCHEMA = "last_idx long, last_vid long"
 BUCKET_STATE_SCHEMA = (
     "convs array<string>, last_idxs array<long>, last_vids array<long>"
 )
 
 
 def _default_state_buckets() -> int:
-    """Conversation-bucket count for the no-timeout fast path. Size so each
+    """Conversation-bucket count for the no-timeout layout. Size so each
     bucket holds O(100-1000) live conversations: the state row is three
     parallel arrays over the bucket's conversations, and the per-GROUP
     Python-function + state-(de)serialization fixed cost is paid per BUCKET
@@ -52,143 +53,99 @@ def _default_state_buckets() -> int:
     3.4M turns / 200k convs, OPTIMIZATION_r06.md). 1024 is the local-mode
     default; a production deployment tracking 10^9 live conversations sets
     CASSOVARY_STREAM_STATE_BUCKETS ~ n_convs/500 so state rows stay ~10s of
-    KB and load-balance across executors."""
+    KB and load-balance across executors. A value below 1 raises."""
     import os
 
-    return int(os.environ.get("CASSOVARY_STREAM_STATE_BUCKETS", "1024"))
+    nb = int(os.environ.get("CASSOVARY_STREAM_STATE_BUCKETS", "1024"))
+    if nb < 1:
+        raise ValueError(f"CASSOVARY_STREAM_STATE_BUCKETS must be >= 1, got {nb}")
+    return nb
 
 
-def _make_turn_edge_fn(conv_timeout_ms: int | None):
-    def _turn_edge_fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if conv_timeout_ms is not None and state.hasTimedOut:
-            # quiescent conversation: evict its (last_idx, last_vid) entry —
-            # the size bound on the state store
+def _starts(code):
+    """True where a new conversation starts in the sorted codes ``code``."""
+    out = np.ones(len(code), dtype=bool)
+    out[1:] = code[1:] != code[:-1]
+    return out
+
+
+def _turn_edge_fn(conv_timeout_ms: int | None):
+    """The stateful kernel. One state entry holds (conv_id, last_idx,
+    last_vid) for every conversation of its group as three parallel arrays:
+    a conversation BUCKET without a timeout, a single conversation with
+    one. Each turn connects to its predecessor BY ORDER (batch ``lead()``
+    semantics: gaps in turn_idx still chain); rows with idx <= the stored
+    last_idx, and duplicate idx within a batch, are ignored. With
+    ``conv_timeout_ms`` a group quiet for that long is evicted."""
+
+    def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+           ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            # quiescent conversation: evict its entry — the size bound on
+            # the state store
             state.remove()
             yield pd.DataFrame({"src": pd.Series(dtype="int64"),
                                 "dst": pd.Series(dtype="int64")})
             return
         rows = pd.concat(list(pdfs))
-        rows = rows.sort_values("turn_idx")
-        idxs = rows["turn_idx"].to_numpy()
-        vids = rows["vid"].to_numpy()
+        # one code per conversation; rows sorted by (code, turn_idx), stable
+        # so a duplicate keeps its first row
+        code, convs = pd.factorize(rows["conv_id"].to_numpy())
+        idx = rows["turn_idx"].to_numpy(np.int64)
+        vid = rows["vid"].to_numpy(np.int64)
+        order = np.lexsort((idx, code))
+        code, idx, vid = code[order], idx[order], vid[order]
 
         if state.exists:
-            last_idx, last_vid = state.get
+            s_convs, s_idx, s_vid = state.get
+            s_convs = list(s_convs)
         else:
-            last_idx, last_vid = None, None
+            s_convs, s_idx, s_vid = [], [], []
+        # state slot of each batch conversation, -1 for none; slot -1 reads
+        # the appended sentinel (no stored turn)
+        slots = dict(zip(s_convs, range(len(s_convs))))
+        conv_slot = np.array([slots.get(c, -1) for c in convs], dtype=np.int64)
+        s_idx = np.append(np.asarray(s_idx, dtype=np.int64), -(1 << 62))
+        s_vid = np.append(np.asarray(s_vid, dtype=np.int64), -1)
+        slot = conv_slot[code]
 
-        srcs: list[int] = []
-        dsts: list[int] = []
-        for i in range(len(idxs)):
-            idx, vid = int(idxs[i]), int(vids[i])
-            # connect to the predecessor BY ORDER (batch lead() semantics):
-            # gaps in turn_idx still chain; duplicates/reordered-below-state
-            # rows (idx <= last_idx) are ignored
-            if last_idx is not None and idx > last_idx:
-                srcs.append(last_vid)
-                dsts.append(vid)
-            if last_idx is None or idx > last_idx:
-                last_idx, last_vid = idx, vid
+        # duplicate (conv, idx) rows keep only the first; rows at or below
+        # the conversation's stored last_idx are ignored (a batch may keep
+        # no row at all)
+        keep = (_starts(code) | (idx != np.roll(idx, 1))) & (idx > s_idx[slot])
 
-        state.update((last_idx, last_vid))
+        code_k, idx_k, vid_k = code[keep], idx[keep], vid[keep]
+        first_k = _starts(code_k)
+        # predecessor: previous kept row of the same conv, else the stored state
+        prev_vid = np.where(first_k, s_vid[slot[keep]], np.roll(vid_k, 1))
+        has_prev = ~first_k | (slot[keep] >= 0)
+        edges = pd.DataFrame({"src": prev_vid[has_prev], "dst": vid_k[has_prev]})
+
+        # new state: last kept row per conv overrides; untouched convs carry over
+        last_k = np.roll(first_k, -1)
+        upd_code, upd_idx, upd_vid = code_k[last_k], idx_k[last_k], vid_k[last_k]
+        upd_slot = conv_slot[upd_code]
+        seen = upd_slot >= 0
+        s_idx, s_vid = s_idx[:-1], s_vid[:-1]
+        s_idx[upd_slot[seen]] = upd_idx[seen]
+        s_vid[upd_slot[seen]] = upd_vid[seen]
+        state.update(
+            (
+                s_convs + [str(c) for c in convs[upd_code[~seen]]],
+                np.concatenate([s_idx, upd_idx[~seen]]).tolist(),
+                np.concatenate([s_vid, upd_vid[~seen]]).tolist(),
+            )
+        )
         if conv_timeout_ms is not None:
             state.setTimeoutDuration(conv_timeout_ms)
-        yield pd.DataFrame(
-            {"src": pd.Series(srcs, dtype="int64"), "dst": pd.Series(dsts, dtype="int64")}
-        )
+        yield edges
 
-    return _turn_edge_fn
-
-
-def _bucketed_turn_edge_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Vectorized no-timeout variant: one state entry per conversation
-    BUCKET, holding (conv_id, last_idx, last_vid) for every conversation of
-    the bucket as three parallel arrays. Edge semantics are identical to
-    ``_make_turn_edge_fn`` (connect to the predecessor BY ORDER; rows with
-    idx <= the stored last_idx, and duplicate idx within a batch, are
-    ignored) — equality-tested against the batch ``lead()`` derivation and
-    the per-conversation path (tests/test_streaming.py). The difference is
-    purely physical: the per-group Python call and state round-trip amortize
-    over the whole bucket, and the per-row loop becomes numpy."""
-    import numpy as np
-
-    rows = pd.concat(list(pdfs))
-    rows = rows.sort_values(["conv_id", "turn_idx"], kind="mergesort")
-    conv = rows["conv_id"].to_numpy()
-    idx = rows["turn_idx"].to_numpy(np.int64)
-    vid = rows["vid"].to_numpy(np.int64)
-
-    if state.exists:
-        s_convs, s_idx, s_vid = state.get
-        s_convs = list(s_convs)
-        smap = pd.Series(
-            np.arange(len(s_convs), dtype=np.int64), index=s_convs
-        )
-        s_idx = np.asarray(s_idx, dtype=np.int64)
-        s_vid = np.asarray(s_vid, dtype=np.int64)
-    else:
-        s_convs, smap = [], pd.Series(dtype=np.int64)
-        s_idx = np.empty(0, dtype=np.int64)
-        s_vid = np.empty(0, dtype=np.int64)
-
-    n = len(conv)
-    first_of_conv = np.concatenate([[True], conv[1:] != conv[:-1]])
-    prev_idx = np.concatenate([[np.int64(-1)], idx[:-1]])
-    # duplicate (conv, idx) rows keep only the first (idx > last_idx gate)
-    keep = first_of_conv | (idx != prev_idx)
-    # rows at or below the conversation's stored last_idx are ignored
-    pos = smap.reindex(conv).to_numpy()  # float with NaN for unseen convs
-    has_state = ~np.isnan(pos)
-    if s_idx.size:
-        ipos = np.where(has_state, pos, 0).astype(np.int64)
-        stored_idx = np.where(has_state, s_idx[ipos], np.int64(-(1 << 62)))
-        stored_vid = np.where(has_state, s_vid[ipos], np.int64(-1))
-    else:
-        stored_idx = np.full(n, -(1 << 62), dtype=np.int64)
-        stored_vid = np.full(n, -1, dtype=np.int64)
-    keep &= idx > stored_idx
-
-    conv_k, idx_k, vid_k = conv[keep], idx[keep], vid[keep]
-    first_k = np.concatenate([[True], conv_k[1:] != conv_k[:-1]])
-    # predecessor: previous kept row of the same conv, else the stored state
-    prev_vid = np.concatenate([[np.int64(-1)], vid_k[:-1]])
-    prev_vid = np.where(first_k, stored_vid[keep], prev_vid)
-    has_prev = ~first_k | (first_k & has_state[keep])
-    edges = pd.DataFrame(
-        {
-            "src": pd.Series(prev_vid[has_prev], dtype="int64"),
-            "dst": pd.Series(vid_k[has_prev], dtype="int64"),
-        }
-    )
-
-    # new state: last kept row per conv overrides; untouched convs carry over
-    last_k = np.concatenate([conv_k[1:] != conv_k[:-1], [True]])
-    upd_conv, upd_idx, upd_vid = conv_k[last_k], idx_k[last_k], vid_k[last_k]
-    upd_pos = smap.reindex(upd_conv).to_numpy()
-    upd_seen = ~np.isnan(upd_pos)
-    s_idx = s_idx.copy()
-    s_vid = s_vid.copy()
-    s_idx[upd_pos[upd_seen].astype(np.int64)] = upd_idx[upd_seen]
-    s_vid[upd_pos[upd_seen].astype(np.int64)] = upd_vid[upd_seen]
-    new = ~upd_seen
-    state.update(
-        (
-            s_convs + [str(c) for c in upd_conv[new]],
-            np.concatenate([s_idx, upd_idx[new]]).tolist(),
-            np.concatenate([s_vid, upd_vid[new]]).tolist(),
-        )
-    )
-    yield edges
+    return fn
 
 
 def stream_turn_edges(
     transcripts: DataFrame,
     conv_timeout_ms: int | None = None,
-    state_buckets: int | None = None,
 ) -> DataFrame:
     """Streaming ``(src, dst)`` turn-edge deltas from a streaming transcript
     DataFrame (the batch twin of ``sources.transcripts.turn_edges``).
@@ -197,23 +154,23 @@ def stream_turn_edges(
     including pairs that SPAN micro-batches (that's the state) and pairs
     whose turn_idx has gaps (matching the batch ``lead()``).
 
-    ``conv_timeout_ms``: when set, a conversation's state entry is evicted
-    after that much processing-time inactivity — the bound on state-store
-    size for continuous deployments. Left ``None`` (no timeout) the operator
-    is fully deterministic under test; an edge arriving AFTER its
-    conversation's eviction starts a fresh chain (the late turn loses its
-    link to the pre-eviction predecessor — the standard state-TTL trade).
+    Without a timeout, state is grouped by a deterministic conversation
+    BUCKET (``pmod(xxhash64(conv_id), nb)``, nb =
+    $CASSOVARY_STREAM_STATE_BUCKETS, default 1024), so the per-group
+    Python-call + state round-trip fixed cost amortizes over a whole bucket
+    per micro-batch (measured 4.4x end-to-end at 3.4M turns / 200k convs);
+    the operator is fully deterministic under test.
 
-    ``state_buckets``: no-timeout runs group state by a deterministic
-    conversation BUCKET (``pmod(xxhash64(conv_id), state_buckets)``) instead
-    of per conversation — same edges (equality-tested vs the batch twin and
-    the per-conversation path), but the per-group Python-call + state
-    round-trip fixed cost amortizes over a whole bucket per micro-batch
-    (measured 4.4x end-to-end at 3.4M turns / 200k convs). Default
-    ``_default_state_buckets()`` ($CASSOVARY_STREAM_STATE_BUCKETS, 1024);
-    pass 0 to force the per-conversation layout. Timeout mode always keys
-    per conversation: eviction is a per-conversation contract and a bucket
-    only times out when ALL of its conversations are quiescent."""
+    ``conv_timeout_ms``: when set, state is grouped per conversation and a
+    conversation's entry is evicted after that much processing-time
+    inactivity — the bound on state-store size for continuous deployments.
+    Eviction is a per-conversation contract (a bucket would only time out
+    when ALL of its conversations are quiescent); the kernel is the same.
+    A turn arriving AFTER its conversation's eviction starts a fresh chain
+    (it loses its link to the pre-eviction predecessor — the standard
+    state-TTL trade). A processing-time timeout makes Spark ask for a
+    no-data batch after every batch, so an ``availableNow`` run ends only
+    with ``spark.sql.streaming.noDataMicroBatches.enabled=false``."""
     # try_cast: regexp_extract yields '' on no-match, which ANSI cast rejects
     with_vid = transcripts.select(
         "conv_id",
@@ -221,30 +178,17 @@ def stream_turn_edges(
         turn_vertex_id(conv_ordinal(F.col("conv_id")), F.col("turn_idx")).alias("vid"),
     )
     if conv_timeout_ms is None:
-        nb = _default_state_buckets() if state_buckets is None else state_buckets
-        if nb and nb > 0:
-            return (
-                with_vid.withColumn(
-                    "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(nb))
-                )
-                .groupBy("bucket")
-                .applyInPandasWithState(
-                    _bucketed_turn_edge_fn,
-                    outputStructType=EDGE_SCHEMA,
-                    stateStructType=BUCKET_STATE_SCHEMA,
-                    outputMode="append",
-                    timeoutConf=GroupStateTimeout.NoTimeout,
-                )
-            )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if conv_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return with_vid.groupBy("conv_id").applyInPandasWithState(
-        _make_turn_edge_fn(conv_timeout_ms),
+        grouped = with_vid.withColumn(
+            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(_default_state_buckets()))
+        ).groupBy("bucket")
+        timeout = GroupStateTimeout.NoTimeout
+    else:
+        grouped = with_vid.groupBy("conv_id")
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+    return grouped.applyInPandasWithState(
+        _turn_edge_fn(conv_timeout_ms),
         outputStructType=EDGE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
+        stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout,
     )

@@ -367,8 +367,8 @@ single socket's memory bandwidth (state write + shuffle + cached-edge scan
 are bandwidth-bound), so their efficiency is a pessimistic lower bound; the
 2 -> 8 pair runs below saturation and is the closer analog of adding
 executor NODES to a cluster, where each 4x step brings 4x the memory
-bandwidth and disk spindles. Ruled out empirically (scripts/codec_ab.py,
-scripts/parts_ab.py, interleaved A/B at the saturated level): zstd shuffle
+bandwidth and disk spindles. Ruled out empirically (BENCH/BASELINE.md,
+interleaved A/B at the saturated level): zstd shuffle
 compression (median superstep 8.3s vs lz4 7.4-8.1s — the CPU cost exceeds
 the byte savings on RAM-backed shuffle) and 64-partition over-decomposition
 (8.4s vs 7.7s — extra task/bucket-file overhead beats the wave-balance
