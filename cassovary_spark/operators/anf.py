@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from cassovary_spark.graph import mutualize, vertices_of
 from cassovary_spark.plans.layout import UPDATE_JOIN_HINT
-from cassovary_spark.superstep import Superstep
+from cassovary_spark.superstep import Superstep, choose_engine
 
 # FM bias correction (Flajolet-Martin 1985): E[2^R] = phi * n
 _FM_PHI = 0.77351
@@ -102,7 +102,8 @@ def _nf_curve(
     spark = edges.sparkSession
     regs = list(range(registers))
     nf_col = F.round(F.sum(_est_col(registers)), 4).alias("nf")
-    with Superstep(spark, edges.count(), num_partitions) as ss:
+    m = choose_engine(edges, "distributed")[1]
+    with Superstep(spark, m, num_partitions) as ss:
         und = ss.persist(mutualize(edges), "dst")
         state, got = ss.write(
             vertices_of(edges).select("id", *_init_sketch_cols(registers))
@@ -177,7 +178,8 @@ def harmonic_centrality_sketch(
     (reference ClosenessCentrality.scala)."""
     spark = edges.sparkSession
     regs = list(range(registers))
-    with Superstep(spark, edges.count(), num_partitions) as ss:
+    m = choose_engine(edges, "distributed")[1]
+    with Superstep(spark, m, num_partitions) as ss:
         und = ss.persist(mutualize(edges), "dst")
         state, _ = ss.write(
             vertices_of(edges).select("id", *_init_sketch_cols(registers))

@@ -58,21 +58,22 @@ def _bipartite_local(
     rounding: int | None,
 ) -> BipartiteAnalysis:
     """Numpy twin route for sub-threshold graphs (COST-aware engine choice,
-    operators/local_engine.py) — one Arrow transfer of edges + supplied
-    weights, bincount flow passes, equality-tested vs the distributed path
-    (tests/test_bipartite.py). Results return through an arrow Table (+ the
-    scratch-parquet spill past RESULT_SCRATCH_THRESHOLD rows — the
-    LocalTableScan-tax rule): the r5 path built per-row Python tuples,
-    which at 160k-vertex sides cost seconds per downstream action (r6)."""
+    operators/local_engine.py) — the local engine's one Arrow transfer of
+    the edges + the supplied weights, bincount flow passes, equality-tested
+    vs the distributed path (tests/test_bipartite.py). Results return
+    through an arrow Table (+ the scratch-parquet spill past
+    RESULT_SCRATCH_THRESHOLD rows — the LocalTableScan-tax rule): the r5
+    path built per-row Python tuples, which at 160k-vertex sides cost
+    seconds per downstream action (r6)."""
     import numpy as np
 
     from cassovary_spark.operators import local_engine as LE
 
-    epdf = edges.select("src", "dst").toPandas()
+    ids, si, di = LE.edges_to_numpy(edges)
     lpdf = left_weights.select("id", "weight").toPandas()
     l_ids, lw, l_c, r_ids, rw, r_c = LE.bipartite_numpy(
-        epdf["src"].to_numpy(np.int64),
-        epdf["dst"].to_numpy(np.int64),
+        ids[si],
+        ids[di],
         lpdf["id"].to_numpy(np.int64),
         lpdf["weight"].to_numpy(np.float64),
         num_iterations,
@@ -121,8 +122,8 @@ def bipartite_link_analysis(
     comparisons (the reference's priority queue has unspecified tie order,
     so any deterministic refinement is valid)."""
     spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine, cap=BIPARTITE_LOCAL_CAP) == "local":
+    route, m = choose_engine(edges, engine, cap=BIPARTITE_LOCAL_CAP)
+    if route == "local":
         return _bipartite_local(
             spark, edges, left_weights, num_iterations, reset_prob_left,
             reset_prob_right, num_top_contributors, contributor_weight_rounding,
@@ -130,7 +131,7 @@ def bipartite_link_analysis(
     # the alternating left/right passes share the driver's partition count,
     # scratch and cleanup, but not its loop: each pass writes a different
     # side and the last two also record contributors
-    with Superstep(spark, m0, num_partitions) as ss:
+    with Superstep(spark, m, num_partitions) as ss:
         # subgraph restriction: only edges whose left endpoint was supplied
         e = ss.persist(
             edges.select("src", "dst")

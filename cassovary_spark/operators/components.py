@@ -48,8 +48,8 @@ def connected_components(
     the scaling harness's instrumentation (scripts/scaling_run.py); the
     numpy twin records ``iterations`` only."""
     spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine, checkpoint=checkpoint, resume=resume) == "local":
+    route, m = choose_engine(edges, engine, checkpoint=checkpoint, resume=resume)
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -60,7 +60,7 @@ def connected_components(
             stats["iterations"] = 0  # union-find, not superstep-iterative
         return LE.result_df(spark, ids, {"component": comp}, "id long, component long")
 
-    with Superstep(spark, m0, num_partitions, stats) as ss:
+    with Superstep(spark, m, num_partitions, stats) as ss:
         # the superstep join keys on dst (gather neighbor labels), so the
         # static edge table is partitioned AND sorted by dst — SMJ then never
         # exchanges or sorts the big side

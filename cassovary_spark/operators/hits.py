@@ -52,8 +52,8 @@ def hits(
     engine: str = "auto",
 ) -> HitsResult:
     spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine) == "local":
+    route, m = choose_engine(edges, engine)
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -72,7 +72,7 @@ def hits(
         )
         return HitsResult(scores, error, its, history)
 
-    with Superstep(spark, m0, num_partitions) as ss:
+    with Superstep(spark, m, num_partitions) as ss:
         p = ss.p
         verts = ss.persist(vertices_of(edges), "id")
         n = verts.count()

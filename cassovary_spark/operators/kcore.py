@@ -51,8 +51,8 @@ def k_core(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine) == "local":
+    route, m = choose_engine(edges, engine)
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -65,7 +65,7 @@ def k_core(
             spark, core_ids, {"degree": core_deg}, "id long, degree long"
         )
 
-    with Superstep(spark, m0, num_partitions, stats) as ss:
+    with Superstep(spark, m, num_partitions, stats) as ss:
         p = ss.p
         cur_edges, _ = ss.write(
             mutualize(edges).repartition(p, "src").sortWithinPartitions("src"),

@@ -48,8 +48,8 @@ def label_propagation(
     the scaling harness's instrumentation (scripts/scaling_run.py); the
     numpy twin records ``iterations`` only."""
     spark = edges.sparkSession
-    m0 = edges.count()
-    if choose_engine(m0, engine, checkpoint=checkpoint, resume=resume) == "local":
+    route, m = choose_engine(edges, engine, checkpoint=checkpoint, resume=resume)
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -60,7 +60,7 @@ def label_propagation(
             stats["iterations"] = rounds_run
         return LE.result_df(spark, ids, {"label": lab}, "id long, label long")
 
-    with Superstep(spark, m0, num_partitions, stats) as ss:
+    with Superstep(spark, m, num_partitions, stats) as ss:
         # join keys on dst each superstep -> partition+sort the static edge
         # table by dst (see components.py rationale)
         und = ss.name(ss.persist(mutualize(edges), "dst"))

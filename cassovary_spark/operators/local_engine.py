@@ -42,15 +42,9 @@ def edges_to_numpy(edges: DataFrame):
     consolidation + index) that ``toPandas`` pays — measured ~2x on the
     transfer at 6M edges (r6), which dominates the local engine's fixed
     cost."""
-    sel = edges.select("src", "dst")
-    try:
-        tbl = sel.toArrow()
-        src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-        dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-    except Exception:  # pragma: no cover — non-Arrow sessions
-        pdf = sel.toPandas()
-        src = pdf["src"].to_numpy(np.int64)
-        dst = pdf["dst"].to_numpy(np.int64)
+    tbl = edges.select("src", "dst").toArrow()
+    src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+    dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     ids = np.unique(np.concatenate([src, dst]))
     return ids, np.searchsorted(ids, src), np.searchsorted(ids, dst)
 
@@ -330,7 +324,7 @@ def bfs_numpy(
     (frontier node u at depth d scanning edge u->v emits (d+1, v, u) whether
     or not v is new — PrevNbrCounter records every previous-neighbor
     encounter, GraphUtils.scala:46-67) plus (0, seed, null) rows, as
-    (steps, out_ids, prevs) with prev < 0 encoding null."""
+    (steps, out_ids, prevs), prevs a masked array masking the null rows."""
     n = len(ids)
     seeds = np.unique(np.asarray(list(seeds), dtype=np.int64))
     spos, in_graph = _lookup(ids, seeds)
@@ -342,7 +336,7 @@ def bfs_numpy(
     depth_of[frontier] = 0
     steps = [np.zeros(len(seeds), dtype=np.int64)]
     evs = [seeds]
-    prevs = [np.full(len(seeds), -1, dtype=np.int64)]
+    prevs = [np.ma.masked_all(len(seeds), dtype=np.int64)]
     depth = 0
     while frontier.size and (max_depth is None or depth < max_depth):
         f = frontier[expandable[frontier]]
@@ -362,7 +356,7 @@ def bfs_numpy(
         frontier = np.unique(nbrs[depth_of[nbrs] < 0])
         depth_of[frontier] = depth
     if events:
-        return np.concatenate(steps), np.concatenate(evs), np.concatenate(prevs)
+        return np.concatenate(steps), np.concatenate(evs), np.ma.concatenate(prevs)
     vis = depth_of >= 0
     out_ids = np.concatenate([ids[vis], seeds[~in_graph]])
     out_depths = np.concatenate(
@@ -385,7 +379,8 @@ def random_walk_events_numpy(
     md5('tag|walker|step|seed') uniforms (_walk_uniform) consumed against
     the SAME sorted adjacency, stepped with numpy per synchronized step (the
     only per-item Python is the md5 calls, ~2 per walker-step). Returns
-    (walkers, steps, cur_ids, prev_ids) with prev < 0 encoding null."""
+    (walkers, steps, cur_ids, prev_ids), prev_ids a masked array masking
+    the null rows (starts and resets)."""
     import hashlib
 
     n = len(ids)
@@ -416,7 +411,7 @@ def random_walk_events_numpy(
     walkers_out = [np.arange(num_walkers, dtype=np.int64)]
     steps_out = [np.zeros(num_walkers, dtype=np.int64)]
     cur_out = [cur_ext.copy()]
-    prev_out = [np.full(num_walkers, -1, dtype=np.int64)]
+    prev_out = [np.ma.masked_all(num_walkers, dtype=np.int64)]
     for step in range(num_steps):
         r = uniforms("r", step)
         u = uniforms("n", step)
@@ -429,7 +424,7 @@ def random_walk_events_numpy(
         else:
             picked_ext = homes_ext
         nxt_ext = np.where(reset, homes_ext, picked_ext)
-        prev_ext = np.where(reset, -1, cur_ext)
+        prev_ext = np.ma.masked_array(cur_ext, mask=reset)
         # new positions (next step's adjacency lookup)
         np_pos, ok = _lookup(ids, nxt_ext)
         cur = np.where(ok, np_pos, -1)
@@ -442,7 +437,7 @@ def random_walk_events_numpy(
         np.concatenate(walkers_out),
         np.concatenate(steps_out),
         np.concatenate(cur_out),
-        np.concatenate(prev_out),
+        np.ma.concatenate(prev_out),
     )
 
 

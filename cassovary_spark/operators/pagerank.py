@@ -108,8 +108,8 @@ def _power_iteration(
     PageRank (both go to the de-duplicated ``seeds``, 1/len(seeds) each)."""
     spark = edges.sparkSession
     edges = edges.select("src", "dst")
-    m = edges.count()
-    if choose_engine(m, engine, checkpoint=checkpoint, resume=resume) == "local":
+    route, m = choose_engine(edges, engine, checkpoint=checkpoint, resume=resume)
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -126,7 +126,7 @@ def _power_iteration(
             )
             history = []
         ranks = LE.result_df(spark, ids, {"pagerank": pr}, "id long, pagerank double")
-        return PageRankResult(ranks, error, its, len(ids), m, history)
+        return PageRankResult(ranks, error, its, len(ids), len(si), history)
 
     with Superstep(spark, m, num_partitions) as ss:
         outdeg = out_degrees(edges)
@@ -149,7 +149,8 @@ def _power_iteration(
             .select("src", "dst", (F.lit(damping) / F.col("out_degree")).alias("w")),
             "src",
         )
-        wedges.count()
+        # exact edge count for the result: the join keeps every edge once
+        edge_count = wedges.count()
         wedges_view = ss.name(wedges)
         damping_amount = teleport / n
 
@@ -213,7 +214,7 @@ def _power_iteration(
                 "error": got["e"],
                 "dangle_sum": dangle_sum,
                 "node_count": n,
-                "edge_count": m,
+                "edge_count": edge_count,
                 "dangle_mass": got["d"] or 0.0,
             }
 
@@ -228,4 +229,4 @@ def _power_iteration(
         # materialize the final state BEFORE the driver frees the scratch
         # that backs it
         result = materialize(ranks.select("id", "pagerank"))
-    return PageRankResult(result, error, start + len(history), n, m, history)
+    return PageRankResult(result, error, start + len(history), n, edge_count, history)

@@ -51,32 +51,14 @@ def _union_all(dfs) -> DataFrame:
 
 
 def _local_event_log(spark, cols: dict, schema: str) -> DataFrame:
-    """An event log from a numpy twin. Its null ``prev`` is a -1 sentinel in
-    plain int64, nulled JVM-side: nullable-Int64 pandas frames only convert
-    under Arrow, and the driver's vanilla session has Arrow off (round-2 red
-    queries)."""
-    import pandas as pd
+    """An event log from a numpy twin, as one Arrow table: the twin's
+    ``prev`` is a masked array whose mask is the null ``prev`` rows, so
+    every vertex id, negative ones included, stays a real predecessor."""
+    import pyarrow as pa
 
-    out = spark.createDataFrame(pd.DataFrame(cols), schema=schema)
-    return out.withColumn(
-        "prev",
-        F.when(F.col("prev") < 0, F.lit(None).cast("long")).otherwise(F.col("prev")),
-    )
+    from cassovary_spark.operators import local_engine as LE
 
-
-def _has_negative_ids(edges) -> bool:
-    mn = edges.agg(F.least(F.min("src"), F.min("dst")).alias("m")).first()["m"]
-    return mn is not None and mn < 0
-
-
-def _event_log_route(route: str, edges, engine: str) -> str:
-    """``route`` (choose_engine's pick) unless it is an auto-chosen local
-    twin on a graph with negative vertex ids (legal in
-    read_edge_list/DynamicGraph): the twins' -1 null-prev sentinel would
-    alias real predecessors to NULL, so those go to the distributed plan."""
-    if route == "local" and engine != "local" and _has_negative_ids(edges):
-        return "distributed"
-    return route
+    return LE.arrow_result_df(spark, pa.table(cols), schema)
 
 
 def bfs(
@@ -104,10 +86,7 @@ def bfs(
     spark = edges.sparkSession
     from cassovary_spark.plans import choose_partitions
 
-    m0 = edges.count()
-    route = choose_engine(m0, engine)
-    if events:
-        route = _event_log_route(route, edges, engine)
+    route, m = choose_engine(edges, engine)
     if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
@@ -125,7 +104,7 @@ def bfs(
             spark, out_ids, {"depth": out_depths.astype("int32")}, "id long, depth int"
         )
 
-    p = choose_partitions(spark, m0, num_partitions)
+    p = choose_partitions(spark, m, num_partitions)
     adj = edges.select("src", "dst")
     if max_degree is not None:
         hubs = out_degrees(edges).filter(F.col("out_degree") > max_degree)
@@ -317,13 +296,12 @@ def _adjacency_lists(edges: DataFrame, p: int) -> DataFrame:
 WALK_LOCAL_MAX_EVENTS = 5_000_000
 
 
-def _walk_local_ok(edges, num_walkers: int, num_steps: int, engine: str) -> bool:
-    """Route a walk to the in-memory twin: small graph, bounded event-log
-    size, and non-negative vertex ids."""
-    route = choose_engine(
+def _walk_route(edges, num_walkers: int, num_steps: int, engine: str):
+    """``choose_engine`` for a walk: the in-memory twin also needs a bounded
+    event-log size."""
+    return choose_engine(
         edges, engine, local_ok=num_walkers * (num_steps + 1) <= WALK_LOCAL_MAX_EVENTS
     )
-    return _event_log_route(route, edges, engine) == "local"
 
 
 def _walk_uniform(tag: str, step: int, seed: int):
@@ -374,7 +352,8 @@ def random_walk_visits(
         raise ValueError("start_nodes must be non-empty")
     spark = edges.sparkSession
 
-    if _walk_local_ok(edges, num_walkers, num_steps, engine):
+    route, m = _walk_route(edges, num_walkers, num_steps, engine)
+    if route == "local":
         import numpy as np
 
         from cassovary_spark.operators import local_engine as LE
@@ -390,7 +369,7 @@ def random_walk_visits(
 
     events = _walk_steps(
         edges, start_nodes, num_steps, reset_prob, num_walkers, seed, False,
-        num_partitions,
+        num_partitions, m,
     )
     return materialize(events.groupBy("id").agg(F.count("*").alias("visits")))
 
@@ -423,9 +402,11 @@ def random_walk_events(
         raise ValueError("start_nodes must be non-empty")
     spark = edges.sparkSession
 
-    if not track_paths and _walk_local_ok(edges, num_walkers, num_steps, engine):
-        import numpy as np
-
+    # the twin records no paths
+    route, m = _walk_route(
+        edges, num_walkers, num_steps, "distributed" if track_paths else engine
+    )
+    if route == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)
@@ -434,15 +415,14 @@ def random_walk_events(
         )
         return _local_event_log(
             spark,
-            {"walker": w, "step": st.astype("int32"), "id": cur,
-             "prev": np.asarray(prev, dtype="int64")},
+            {"walker": w, "step": st.astype("int32"), "id": cur, "prev": prev},
             "walker long, step int, id long, prev long",
         )
 
     return materialize(
         _walk_steps(
             edges, start_nodes, num_steps, reset_prob, num_walkers, seed,
-            track_paths, num_partitions,
+            track_paths, num_partitions, m,
         )
     )
 
@@ -456,15 +436,16 @@ def _walk_steps(
     seed: int,
     track_paths: bool,
     num_partitions: int | None,
+    m: int,
 ) -> DataFrame:
     """The distributed walk shared by ``random_walk_visits`` and
-    ``random_walk_events``: the lazy union of the per-step walker positions
-    ``(walker, step, id, prev[, path])``, each step's walker table a local
-    checkpoint."""
+    ``random_walk_events`` over ``m`` edges: the lazy union of the per-step
+    walker positions ``(walker, step, id, prev[, path])``, each step's
+    walker table a local checkpoint."""
     spark = edges.sparkSession
     from cassovary_spark.plans import choose_partitions
 
-    p = choose_partitions(spark, edges, num_partitions)
+    p = choose_partitions(spark, m, num_partitions)
     adj = _adjacency_lists(edges, p).persist()
     try:
         homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]

@@ -68,7 +68,7 @@ TRIANGLES_LOCAL_MAX_WEDGES = 50_000_000
 
 def triangle_count(edges: DataFrame, engine: str = "auto") -> int:
     """Exact number of triangles in the undirected view of ``edges``."""
-    if choose_engine(edges, engine, cap=TRIANGLES_LOCAL_CAP) == "local":
+    if choose_engine(edges, engine, cap=TRIANGLES_LOCAL_CAP)[0] == "local":
         from cassovary_spark.operators import local_engine as LE
 
         ids, si, di = LE.edges_to_numpy(edges)

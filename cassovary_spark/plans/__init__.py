@@ -1,10 +1,11 @@
-"""Physical layout planning: partition counts, the superstep conf scope
-(``layout`` also holds the state-update join hint constant), and the
-reference's Partitioner family — the engine-level layout decisions Catalyst
+"""Physical layout planning: edge row counts, partition counts, the
+superstep conf scope (``layout`` also holds the state-update join hint
+constant), and the reference's Partitioner family — the engine-level layout decisions Catalyst
 doesn't make."""
 
 from cassovary_spark.plans.layout import (
     choose_partitions,
+    row_count,
     superstep_conf,
 )
 from cassovary_spark.plans.partitioners import (
@@ -17,6 +18,7 @@ from cassovary_spark.plans.partitioners import (
 
 __all__ = [
     "choose_partitions",
+    "row_count",
     "superstep_conf",
     "random_node_mapper",
     "hash_source_mapper",

@@ -1,7 +1,7 @@
-"""Engine-level physical layout decisions: the partition count of an
-operator's stationary tables, the join hint of the per-superstep state
-update (a constant, ``UPDATE_JOIN_HINT``), and the session conf scope of a
-superstep loop."""
+"""Engine-level physical layout decisions: the edge row count of an
+operator call, the partition count of its stationary tables, the join hint
+of the per-superstep state update (a constant, ``UPDATE_JOIN_HINT``), and
+the session conf scope of a superstep loop."""
 
 from __future__ import annotations
 
@@ -52,6 +52,31 @@ def superstep_conf(spark, num_partitions: int, rows: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
+def row_count(df) -> int:
+    """Row count of an edge frame: the one place an operator's edge count
+    ``m`` comes from. A materialized cache answers from its plan, with no
+    Spark job (the ``rowCount`` of the ``InMemoryRelation`` under at most
+    ``Project`` nodes of the optimized plan); any other frame is counted.
+
+    The plan read is of a FRESH projection: a Dataset keeps the plan, and
+    the statistics, it first computed, so ``df``'s own plan can predate its
+    persist or outlive its unpersist. Only a fully loaded cache is trusted;
+    other plans' row counts are estimates (``sample``) or absent
+    (``filter``). The cached count is an accumulator that a recomputed
+    partition adds to twice, so it may steer a route or a partition count
+    but is never reported as a result."""
+    plan = df.select("*")._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() == "Project":
+        plan = plan.child()
+    if (
+        plan.nodeName() == "InMemoryRelation"
+        and plan.cacheBuilder().isCachedColumnBuffersLoaded()
+        and plan.stats().rowCount().isDefined()
+    ):
+        return int(plan.stats().rowCount().get())
+    return df.count()
+
+
 def choose_partitions(spark, edges, requested: int | None = None) -> int:
     """Partition count for an operator's stationary tables: one partition per
     ~2M edge rows (the measured superstep task sweet spot), never below the
@@ -62,12 +87,12 @@ def choose_partitions(spark, edges, requested: int | None = None) -> int:
     16k on a 1000-executor cluster); without this heuristic a small graph
     would inherit all 16k near-empty tasks per superstep.
 
-    ``edges`` is a DataFrame (counted lazily — the pre-scan is SKIPPED
-    entirely when ``requested`` pins the count) or an int row count."""
+    ``edges`` is an int row count, or a DataFrame whose rows ``row_count``
+    gives (not read at all when ``requested`` pins the count)."""
     if requested:
         return requested
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_rows = edges if isinstance(edges, int) else edges.count()
+    n_rows = edges if isinstance(edges, int) else row_count(edges)
     # small graphs don't get the full-parallelism floor: per-superstep task
     # scheduling dominates below ~40k rows/partition (measured r2 sweep:
     # 319k-edge PageRank superstep 0.52s at p=8/16 vs 0.67s at p=32), so the

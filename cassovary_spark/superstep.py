@@ -41,22 +41,28 @@ def local_edge_threshold() -> int:
 
 
 def choose_engine(
-    m,
+    edges: DataFrame,
     engine: str = "auto",
     *,
     cap: int | None = None,
     local_ok: bool = True,
     checkpoint: CheckpointStore | None = None,
     resume: bool = False,
-) -> str:
-    """Route an operator call to ``"local"`` (one Arrow transfer + a numpy
-    twin, operators/local_engine.py) or ``"distributed"`` (supersteps).
+) -> tuple[str, int | None]:
+    """Route an operator call over ``edges`` to ``"local"`` (one Arrow
+    transfer + a numpy twin, operators/local_engine.py) or ``"distributed"``
+    (supersteps). Returns ``(route, m)``.
 
     ``engine='auto'`` picks local when the edge count ``m`` is at most
     ``local_edge_threshold()`` and the operator's own ``cap``, the operator
     allows it (``local_ok``, e.g. a walk's event-log bound) and no checkpoint
-    store is in play; ``'local'``/``'distributed'`` force a path. ``m`` is an
-    int or a DataFrame, counted only when auto routing needs it."""
+    store is in play; ``'local'``/``'distributed'`` force a path.
+
+    ``m`` is ``plans.row_count(edges)``: read from the plan of a
+    materialized cache (no Spark job), else a ``count()``. It steers the
+    route, the partition count and the AQE bound (pass it on to
+    ``Superstep``), never a reported figure. It is None only for a forced
+    ``engine='local'``, which reads no count at all."""
     if engine not in ENGINES:
         raise ValueError(f"engine must be one of {ENGINES}, got {engine!r}")
     if engine == "local":
@@ -68,14 +74,14 @@ def choose_engine(
                 "engine='local' cannot honor checkpoint/resume; "
                 "use engine='distributed' (or 'auto', which routes around it)"
             )
-        return "local"
+        return "local", None
+    m = plans.row_count(edges)
     if engine == "distributed" or checkpoint is not None or not local_ok:
-        return "distributed"
+        return "distributed", m
     limit = local_edge_threshold()
     if cap is not None:
         limit = min(limit, cap)
-    n = m if isinstance(m, int) else m.count()
-    return "local" if n <= limit else "distributed"
+    return ("local" if m <= limit else "distributed"), m
 
 
 class Superstep:

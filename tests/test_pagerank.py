@@ -138,3 +138,17 @@ def test_local_engine_rejects_checkpoint(spark, tmp_path):
         label_propagation(e, max_iterations=2, engine="local", checkpoint=store)
     with pytest.raises(ValueError, match="checkpoint"):
         pagerank(e, max_iterations=2, engine="local", resume=True)
+
+
+@pytest.mark.parametrize("engine", ["local", "distributed"])
+def test_edge_count_is_exact_on_a_cached_input(spark, engine):
+    """The reported edge count is a count of the edges, never the cached
+    plan's row-count statistic that steers routing."""
+    e = edges_df(spark, G6).persist()
+    try:
+        m = e.count()
+        res = pagerank(e, max_iterations=3, engine=engine)
+        assert res.edge_count == m
+        assert res.history and all(row["edge_count"] == m for row in res.history)
+    finally:
+        e.unpersist()

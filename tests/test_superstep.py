@@ -1,11 +1,15 @@
 """The superstep driver's contracts: the steady-state plan shape of the
-SQL-built supersteps, cleanup after a failed superstep, and routing that
-reads its memory budget at call time."""
+SQL-built supersteps, cleanup after a failed superstep, routing that reads
+its memory budget at call time, and an edge count ``m`` that a cached input
+answers without a Spark job."""
 
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from tests.conftest import G6, TWO_CLIQUES_BRIDGED, edges_df
 
@@ -198,3 +202,167 @@ def test_local_budget_is_read_at_call_time(spark, monkeypatch):
     res = pagerank(e, max_iterations=2)
     assert res.history[0].get("engine") != "local"
     assert all("wall_sec" in row for row in res.history)
+
+
+@contextmanager
+def _job_group(spark):
+    """Runs the block's Spark jobs in a fresh job group; yields a function
+    returning how many jobs that group has started so far."""
+    sc = spark.sparkContext
+    group = f"cassovary_test_{uuid.uuid4().hex[:12]}"
+
+    def started() -> int:
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield started
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.fixture
+def cached_g6(spark):
+    """G6 persisted and materialized by a ``count()``."""
+    e = edges_df(spark, G6).persist()
+    e.count()
+    yield e
+    e.unpersist()
+
+
+@pytest.fixture
+def counts(spark, monkeypatch):
+    """Records each ``DataFrame.count()`` call."""
+    calls: list = []
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    orig = cls.count
+
+    def spy(self):
+        calls.append(1)
+        return orig(self)
+
+    monkeypatch.setattr(cls, "count", spy)
+    return calls
+
+
+@pytest.mark.parametrize("project", [False, True], ids=["frame", "select"])
+def test_row_count_reads_a_materialized_cache_without_a_job(spark, cached_g6, counts, project):
+    from cassovary_spark.plans import row_count
+
+    e = cached_g6.select("src", "dst") if project else cached_g6
+    with _job_group(spark) as started:
+        assert row_count(e) == len(G6)
+        assert started() == 0
+    assert counts == []
+
+
+# a graph no other test caches: an equal plan cached elsewhere in the
+# session would answer for these frames
+CHAIN = [(i, i + 1) for i in range(20)]
+
+
+def _uncached(spark, case: str) -> tuple[DataFrame, DataFrame]:
+    """``(frame, persisted base)`` of a frame whose rows ``row_count`` must
+    count: its plan holds no materialized cache under Projects only."""
+    if case == "partly_materialized":
+        # first() caches one of the 4 partitions; the relation then reports
+        # the row count of its source plan (a Range's is exact) but is not
+        # a materialized cache
+        base = spark.range(0, 64, numPartitions=4).persist()
+        base.first()
+        return base, base
+    base = edges_df(spark, CHAIN).persist()
+    if case == "never_acted_on":
+        return base, base
+    base.count()
+    if case == "unpersisted":
+        return base.unpersist(), base
+    if case == "sample":
+        return base.sample(0.5, seed=3), base
+    return base.filter("src > 11"), base
+
+
+@pytest.mark.parametrize(
+    "case", ["never_acted_on", "partly_materialized", "unpersisted", "sample", "filter"]
+)
+def test_row_count_counts_anything_else(spark, counts, case):
+    from cassovary_spark.plans import row_count
+
+    e, base = _uncached(spark, case)
+    try:
+        counts.clear()
+        got = row_count(e)
+        assert counts == [1]
+        assert got == e.count()
+    finally:
+        base.unpersist()
+
+
+def test_row_count_sees_a_persist_materialized_after_a_plan_read(spark, counts):
+    """A frame's own plan, read before its persist materialized, keeps
+    reporting no row count; ``row_count`` reads a fresh projection's."""
+    from cassovary_spark.plans import row_count
+
+    e = edges_df(spark, CHAIN).persist()
+    try:
+        e._jdf.queryExecution().optimizedPlan().stats()
+        e.count()
+        counts.clear()
+        assert row_count(e) == len(CHAIN)
+        assert counts == []
+    finally:
+        e.unpersist()
+
+
+def test_route_threshold_is_inclusive(spark, monkeypatch, cached_g6):
+    from cassovary_spark import superstep
+
+    monkeypatch.setattr(superstep, "local_edge_threshold", lambda: len(G6))
+    assert superstep.choose_engine(cached_g6) == ("local", len(G6))
+    monkeypatch.setattr(superstep, "local_edge_threshold", lambda: len(G6) - 1)
+    assert superstep.choose_engine(cached_g6) == ("distributed", len(G6))
+    assert superstep.choose_engine(cached_g6, "local") == ("local", None)
+
+
+def _auto_routed():
+    from cassovary_spark import operators as O
+
+    return {
+        "pagerank": lambda e: O.pagerank(e, max_iterations=3),
+        "personalized_pagerank": lambda e: O.personalized_pagerank(e, [10], max_iterations=3),
+        "hits": lambda e: O.hits(e, max_iterations=3),
+        "connected_components": O.connected_components,
+        "label_propagation": lambda e: O.label_propagation(e, max_iterations=3),
+        "k_core": lambda e: O.k_core(e, k=2),
+        "bipartite_link_analysis": lambda e: O.bipartite_link_analysis(
+            e, e.select(e.src.alias("id")).distinct().selectExpr("id", "1.0 AS weight")
+        ),
+        "triangle_count": O.triangle_count,
+        "bfs": lambda e: O.bfs(e, [10]),
+        "bfs_events": lambda e: O.bfs(e, [10], events=True),
+        "random_walk_visits": lambda e: O.random_walk_visits(e, [10], num_steps=3),
+        "random_walk_events": lambda e: O.random_walk_events(e, [10], num_steps=3),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_auto_routed()))
+def test_no_spark_job_before_the_edge_transfer(spark, monkeypatch, cached_g6, op):
+    """On a materialized, persisted input an auto-routed operator reaches
+    the local engine's edge transfer without starting a Spark job: its
+    edge count comes from the cached plan."""
+    from cassovary_spark.operators import local_engine as LE
+
+    before: list[int] = []
+    orig = LE.edges_to_numpy
+
+    with _job_group(spark) as started:
+
+        def transfer(edges):
+            before.append(started())
+            return orig(edges)
+
+        monkeypatch.setattr(LE, "edges_to_numpy", transfer)
+        _auto_routed()[op](cached_g6)
+    assert before == [0]

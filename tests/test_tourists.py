@@ -18,6 +18,26 @@ from cassovary_spark.operators import (
 )
 from tests.conftest import G6, edges_df
 
+# a cycle through a NEGATIVE vertex id: -1 is a real predecessor of 5, never
+# a stand-in for a null ``prev``
+NEG_CYCLE = [(-1, 5), (5, 6), (6, -1)]
+
+
+def _spy_transfers(monkeypatch) -> list:
+    """Records each call into the local engine's edge transfer, so a test
+    can tell which route an ``engine='auto'`` call took."""
+    from cassovary_spark.operators import local_engine as LE
+
+    calls: list = []
+    orig = LE.edges_to_numpy
+
+    def spy(edges):
+        calls.append(1)
+        return orig(edges)
+
+    monkeypatch.setattr(LE, "edges_to_numpy", spy)
+    return calls
+
 
 def test_walk_events_shape_and_consistency(spark):
     e = edges_df(spark, G6)
@@ -166,18 +186,23 @@ def _oracle_walk(edge_list, start_nodes, num_steps, reset_prob, num_walkers, see
     return events
 
 
-@pytest.mark.parametrize("engine", ["local", "distributed"])
-def test_walk_events_exact_oracle(spark, engine):
-    e = edges_df(spark, G6)
-    got = {
-        (r["walker"], r["step"], r["id"], r["prev"])
-        for r in random_walk_events(
-            e, start_nodes=[10, 11], num_steps=6, reset_prob=0.25,
-            num_walkers=9, seed=17, engine=engine,
-        ).collect()
-    }
-    want = set(_oracle_walk(G6, [10, 11], 6, 0.25, 9, 17))
-    assert got == want
+@pytest.mark.parametrize("engine", ["local", "distributed", "auto"])
+def test_walk_events_exact_oracle(spark, monkeypatch, engine):
+    transfers = _spy_transfers(monkeypatch)
+    for pairs, starts in ((G6, [10, 11]), (NEG_CYCLE, [-1])):
+        e = edges_df(spark, pairs)
+        got = {
+            (r["walker"], r["step"], r["id"], r["prev"])
+            for r in random_walk_events(
+                e, start_nodes=starts, num_steps=6, reset_prob=0.25,
+                num_walkers=9, seed=17, engine=engine,
+            ).collect()
+        }
+        want = set(_oracle_walk(pairs, starts, 6, 0.25, 9, 17))
+        assert got == want, pairs
+    assert any(prev == -1 for *_, prev in want), "the walk never left -1"
+    # auto takes the twin on both graphs, the negative-id one included
+    assert len(transfers) == {"distributed": 0}.get(engine, 2)
 
 
 @pytest.mark.parametrize("engine", ["local", "distributed"])
@@ -206,9 +231,10 @@ def test_walk_visits_exact_oracle_and_partition_independence(spark, engine):
     assert got2 == got
 
 
-def test_bfs_events_oracle_and_prev_nbr(spark):
+def test_bfs_events_oracle_and_prev_nbr(spark, monkeypatch):
     """bfs(events=True) emits one row per edge relaxation + seed rows; the
-    python oracle mirrors the visit-once frontier expansion exactly."""
+    python oracle mirrors the visit-once frontier expansion exactly, on
+    every engine and with negative vertex ids."""
     from collections import Counter
 
     from cassovary_spark.operators import bfs
@@ -242,13 +268,19 @@ def test_bfs_events_oracle_and_prev_nbr(spark):
             frontier = sorted(nxt)
         return events
 
-    for engine in ("local", "distributed"):
-        for kwargs in ({}, {"max_depth": 1}, {"max_degree": 2}):
-            ev = bfs(edges_df(spark, G6), [10, 777], engine=engine, events=True, **kwargs)
+    cases = [(G6, [10, 777], kw) for kw in ({}, {"max_depth": 1}, {"max_degree": 2})]
+    cases.append((NEG_CYCLE, [-1], {}))
+    assert oracle(NEG_CYCLE, [-1])[(1, 5, -1)] == 1
+    transfers = _spy_transfers(monkeypatch)
+    for engine in ("local", "distributed", "auto"):
+        for pairs, seeds, kwargs in cases:
+            ev = bfs(edges_df(spark, pairs), seeds, engine=engine, events=True, **kwargs)
             got = Counter(
                 (r["step"], r["id"], r["prev"]) for r in ev.collect()
             )
-            assert got == oracle(G6, [10, 777], **kwargs), (engine, kwargs)
+            assert got == oracle(pairs, seeds, **kwargs), (engine, pairs, kwargs)
+    # local and auto take the twin on every case, the negative-id one included
+    assert len(transfers) == 2 * len(cases)
 
 
 def test_all_paths_events_weighted_tourists(spark):
