@@ -19,8 +19,11 @@ cumulative DataFrame, lineage cut each level. Random walks keep one row per
 walker (millions of walkers = one modest DataFrame) and sample neighbors
 JVM-side via md5-derived uniforms over grouped adjacency arrays (see
 ``_walk_uniform``) — no per-row Python, reproducible under any partitioning.
-Every traversal frees its persisted adjacency and state scratch on failure
-as well as on success. Exact personalized PageRank is ``pagerank``'s power
+Every distributed traversal runs inside one ``superstep.Superstep``: it takes
+its partition count from it, persists its adjacency, writes its levels and
+checkpoints its steps through it, and returns a materialized result, so the
+run frees everything else on failure as well as on success. Exact
+personalized PageRank is ``pagerank``'s power
 iteration (operators/pagerank.py) with a seed teleport; this module only
 validates its seeds and names its output column.
 """
@@ -30,10 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cassovary_spark.checkpoint import StateScratch, materialize
+from cassovary_spark.checkpoint import materialize
 from cassovary_spark.graph import out_degrees
 from cassovary_spark.operators.pagerank import _power_iteration
-from cassovary_spark.superstep import choose_engine
+from cassovary_spark.superstep import Superstep, choose_engine
 
 
 def _seed_df(spark, seeds) -> DataFrame:
@@ -84,8 +87,6 @@ def bfs(
     BFS exactly as with random walks.
     """
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
-
     route, m = choose_engine(edges, engine)
     if route == "local":
         from cassovary_spark.operators import local_engine as LE
@@ -104,7 +105,6 @@ def bfs(
             spark, out_ids, {"depth": out_depths.astype("int32")}, "id long, depth int"
         )
 
-    p = choose_partitions(spark, m, num_partitions)
     adj = edges.select("src", "dst")
     if max_degree is not None:
         hubs = out_degrees(edges).filter(F.col("out_degree") > max_degree)
@@ -112,7 +112,8 @@ def bfs(
             hubs.withColumnRenamed("id", "src"), "src", "left_anti"
         )
     seed_frontier = _seed_df(spark, seeds).withColumn("depth", F.lit(0))
-    return _frontier_levels(spark, adj, p, seed_frontier, [], max_depth, events)
+    with Superstep(spark, m, num_partitions) as ss:
+        return _frontier_levels(ss, adj, seed_frontier, [], max_depth, events)
 
 
 def multi_source_bfs(
@@ -122,96 +123,91 @@ def multi_source_bfs(
     returns ``(source, id, depth)`` — one frontier join per level total, not
     per source."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
-
-    p = choose_partitions(spark, edges, num_partitions)
-    seed_frontier = (
-        sources.select("source", F.col("source").alias("id"))
-        .dropDuplicates(["source"])
-        .withColumn("depth", F.lit(0))
-        .repartition(p, "id")
-    )
-    return _frontier_levels(
-        spark, edges.select("src", "dst"), p, seed_frontier, ["source"], None, False,
-        repartition_levels=True,
-    )
+    m = choose_engine(edges, "distributed")[1]
+    with Superstep(spark, m, num_partitions) as ss:
+        seed_frontier = (
+            sources.select("source", F.col("source").alias("id"))
+            .dropDuplicates(["source"])
+            .withColumn("depth", F.lit(0))
+            .repartition(ss.p, "id")
+        )
+        return _frontier_levels(
+            ss, edges.select("src", "dst"), seed_frontier, ["source"], None, False,
+            repartition_levels=True,
+        )
 
 
 def _frontier_levels(
-    spark, adj: DataFrame, p: int, frontier: DataFrame, keys: list[str],
+    ss: Superstep, adj: DataFrame, frontier: DataFrame, keys: list[str],
     max_depth: int | None, events: bool, repartition_levels: bool = False,
 ) -> DataFrame:
     """The visit-once frontier loop of ``bfs`` (``keys=[]``) and
     ``multi_source_bfs`` (``keys=["source"]``): one BFS per distinct
     ``keys`` value, all advanced by one join per level. ``frontier`` is the
     seed level ``(*keys, id, depth=0)``; returns the union of every level,
-    or with ``events`` the relaxation log ``(step, *keys, id, prev)``.
-    ``repartition_levels`` hash-partitions each new level on ``id`` into
-    ``p`` partitions before its write."""
-    adj = adj.repartition(p, "src").sortWithinPartitions("src").persist()
-    # Frontier state resets per level via parquet (StateScratch): the next
+    or with ``events`` the relaxation log ``(step, *keys, id, prev)``,
+    materialized. ``repartition_levels`` hash-partitions each new level on
+    ``id`` into ``ss.p`` partitions before its write."""
+    adj = ss.persist(adj, "src")
+    # Frontier state resets per level via parquet (Superstep.write): the next
     # frontier's plan references frontier x adj x visited, so inherited
     # stats would multiply per level (checkpoint.materialize CAUTION).
     # ``visited`` is the lazy UNION of the per-level files — levels are
     # written once and never rewritten, so state writes total O(V), not
-    # O(V * depth) as a rewrite-visited-per-level loop would cost.
-    # keep_last covers every level: files must outlive the whole walk.
-    scratch = StateScratch(spark, keep_last=1_000_000_000)
-    try:
-        frontier = scratch.roundtrip(frontier)
-        levels = [frontier]
-        ev_frames = [
-            frontier.select(
-                F.lit(0).alias("step"), *keys, "id", F.lit(None).cast("long").alias("prev")
+    # O(V * depth) as a rewrite-visited-per-level loop would cost. Plain
+    # parquet writes, not bucketed ones: files must outlive the whole walk.
+    frontier, _ = ss.write(frontier, bucket_by=None)
+    levels = [frontier]
+    ev_frames = [
+        frontier.select(
+            F.lit(0).alias("step"), *keys, "id", F.lit(None).cast("long").alias("prev")
+        )
+    ]
+    vbase = [frontier.select(*keys, "id")]
+    visited = _union_all(vbase)
+    depth = 0
+    while max_depth is None or depth < max_depth:
+        expand = frontier.join(adj, frontier.id == adj.src)
+        if events:
+            # per-level relaxation log, written once (same per-level-file
+            # pattern as the frontier itself); the next frontier derives
+            # from it so the expansion join runs once either way
+            relax, _ = ss.write(
+                expand.select(
+                    F.lit(depth + 1).alias("step"),
+                    *keys,
+                    F.col("dst").alias("id"),
+                    F.col("src").alias("prev"),
+                ),
+                bucket_by=None,
             )
-        ]
-        vbase = [frontier.select(*keys, "id")]
+            ev_frames.append(relax)
+            nxt_ids = relax.select(*keys, "id")
+        else:
+            nxt_ids = expand.select(*keys, F.col("dst").alias("id"))
+        nxt = (
+            nxt_ids
+            .distinct()
+            .join(visited, [*keys, "id"], "left_anti")
+            .withColumn("depth", F.lit(depth + 1))
+        )
+        if repartition_levels:
+            nxt = nxt.repartition(ss.p, "id")
+        nxt, got = ss.write(nxt, F.count(F.lit(1)).alias("n"), bucket_by=None)
+        if got["n"] == 0:
+            break
+        levels.append(nxt)
+        vbase.append(nxt.select(*keys, "id"))
+        # periodic compaction bounds BOTH costs: visited rewrites are
+        # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
+        # a pure lazy union degrades to O(depth^2) scans on deep-narrow
+        # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
+        if len(vbase) > 8:
+            vbase = [ss.write(_union_all(vbase), bucket_by=None)[0]]
         visited = _union_all(vbase)
-        depth = 0
-        while max_depth is None or depth < max_depth:
-            expand = frontier.join(adj, frontier.id == adj.src)
-            if events:
-                # per-level relaxation log, written once (same per-level-file
-                # pattern as the frontier itself); the next frontier derives
-                # from it so the expansion join runs once either way
-                relax = scratch.roundtrip(
-                    expand.select(
-                        F.lit(depth + 1).alias("step"),
-                        *keys,
-                        F.col("dst").alias("id"),
-                        F.col("src").alias("prev"),
-                    )
-                )
-                ev_frames.append(relax)
-                nxt_ids = relax.select(*keys, "id")
-            else:
-                nxt_ids = expand.select(*keys, F.col("dst").alias("id"))
-            nxt = (
-                nxt_ids
-                .distinct()
-                .join(visited, [*keys, "id"], "left_anti")
-                .withColumn("depth", F.lit(depth + 1))
-            )
-            if repartition_levels:
-                nxt = nxt.repartition(p, "id")
-            nxt, n_new = scratch.roundtrip(nxt, with_count=True)
-            if n_new == 0:
-                break
-            levels.append(nxt)
-            vbase.append(nxt.select(*keys, "id"))
-            # periodic compaction bounds BOTH costs: visited rewrites are
-            # O(V * depth / 8) and the per-level anti-join scans <= 9 files —
-            # a pure lazy union degrades to O(depth^2) scans on deep-narrow
-            # graphs, a rewrite-per-level to O(V * depth) writes on wide ones
-            if len(vbase) > 8:
-                vbase = [scratch.roundtrip(_union_all(vbase))]
-            visited = _union_all(vbase)
-            frontier = nxt
-            depth += 1
-        return materialize(_union_all(ev_frames if events else levels))
-    finally:
-        scratch.close()
-        adj.unpersist()
+        frontier = nxt
+        depth += 1
+    return materialize(_union_all(ev_frames if events else levels))
 
 
 def all_paths_walk(
@@ -235,15 +231,14 @@ def all_paths_walk(
     the scale-safe equivalent.
     """
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
-
-    p = choose_partitions(spark, edges, num_partitions)
-    adj = edges.select("src", "dst").repartition(p, "src").sortWithinPartitions("src").persist()
-
-    try:
+    m = choose_engine(edges, "distributed")[1]
+    with Superstep(spark, m, num_partitions) as ss:
+        adj = ss.persist(edges.select("src", "dst"), "src")
         # levels checkpointed once each; the total is a lazy union at the end —
         # no per-level rewrite of the accumulated counts
-        level = materialize(_seed_df(spark, seeds).withColumn("cnt", F.lit(1).cast("long")))
+        level = ss.local_checkpoint(
+            _seed_df(spark, seeds).withColumn("cnt", F.lit(1).cast("long"))
+        )
         levels = [level]
         ev_frames = [
             level.select(
@@ -251,12 +246,10 @@ def all_paths_walk(
                 F.lit(None).cast("long").alias("prev"), "cnt",
             )
         ]
-        step = 0
-        for _ in range(max_depth):
-            step += 1
+        for step in range(1, max_depth + 1):
             expand = level.join(adj, level.id == adj.src)
             if events:
-                hops = materialize(
+                hops = ss.local_checkpoint(
                     expand.groupBy(F.col("dst").alias("id"), F.col("src").alias("prev"))
                     .agg(F.sum("cnt").alias("cnt"))
                 )
@@ -265,20 +258,18 @@ def all_paths_walk(
                 ev_frames.append(
                     hops.select(F.lit(step).alias("step"), "id", "prev", "cnt")
                 )
-                level = materialize(hops.groupBy("id").agg(F.sum("cnt").alias("cnt")))
+                level = ss.local_checkpoint(hops.groupBy("id").agg(F.sum("cnt").alias("cnt")))
             else:
-                level = materialize(
+                level = ss.local_checkpoint(
                     expand.groupBy(F.col("dst").alias("id"))
                     .agg(F.sum("cnt").alias("cnt"))
                 )
                 if level.isEmpty():
                     break
             levels.append(level)
-    finally:
-        adj.unpersist()
-    if events:
-        return _union_all(ev_frames)
-    return _union_all(levels).groupBy("id").agg(F.sum("cnt").alias("visits"))
+        if events:
+            return materialize(_union_all(ev_frames))
+        return materialize(_union_all(levels).groupBy("id").agg(F.sum("cnt").alias("visits")))
 
 
 def _adjacency_lists(edges: DataFrame, p: int) -> DataFrame:
@@ -367,11 +358,11 @@ def random_walk_visits(
             spark, uniq, {"visits": cnt.astype(np.int64)}, "id long, visits long"
         )
 
-    events = _walk_steps(
-        edges, start_nodes, num_steps, reset_prob, num_walkers, seed, False,
-        num_partitions, m,
-    )
-    return materialize(events.groupBy("id").agg(F.count("*").alias("visits")))
+    with Superstep(spark, m, num_partitions) as ss:
+        events = _walk_steps(
+            ss, edges, start_nodes, num_steps, reset_prob, num_walkers, seed, False
+        )
+        return materialize(events.groupBy("id").agg(F.count("*").alias("visits")))
 
 
 def random_walk_events(
@@ -419,15 +410,17 @@ def random_walk_events(
             "walker long, step int, id long, prev long",
         )
 
-    return materialize(
-        _walk_steps(
-            edges, start_nodes, num_steps, reset_prob, num_walkers, seed,
-            track_paths, num_partitions, m,
+    with Superstep(spark, m, num_partitions) as ss:
+        return materialize(
+            _walk_steps(
+                ss, edges, start_nodes, num_steps, reset_prob, num_walkers, seed,
+                track_paths,
+            )
         )
-    )
 
 
 def _walk_steps(
+    ss: Superstep,
     edges: DataFrame,
     start_nodes: list[int],
     num_steps: int,
@@ -435,70 +428,63 @@ def _walk_steps(
     num_walkers: int,
     seed: int,
     track_paths: bool,
-    num_partitions: int | None,
-    m: int,
 ) -> DataFrame:
     """The distributed walk shared by ``random_walk_visits`` and
-    ``random_walk_events`` over ``m`` edges: the lazy union of the per-step
-    walker positions ``(walker, step, id, prev[, path])``, each step's
-    walker table a local checkpoint."""
+    ``random_walk_events``: the lazy union of the per-step walker positions
+    ``(walker, step, id, prev[, path])``, each step's walker table a local
+    checkpoint of ``ss`` (read it before the run ends)."""
     spark = edges.sparkSession
-    from cassovary_spark.plans import choose_partitions
+    p = ss.p
+    adj = ss.persist(_adjacency_lists(edges, p))
+    homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]
+    walkers = spark.createDataFrame(
+        [(i, h, h) for i, h in enumerate(homes)], "walker long, home long, cur long"
+    )
+    if track_paths:
+        walkers = walkers.withColumn("path", F.array("cur"))
+    walkers = walkers.repartition(p, "cur")
 
-    p = choose_partitions(spark, m, num_partitions)
-    adj = _adjacency_lists(edges, p).persist()
-    try:
-        homes = [int(start_nodes[i % len(start_nodes)]) for i in range(num_walkers)]
-        walkers = spark.createDataFrame(
-            [(i, h, h) for i, h in enumerate(homes)], "walker long, home long, cur long"
-        )
+    def ev(df: DataFrame, step: int, prev_col) -> DataFrame:
+        cols = [
+            "walker",
+            F.lit(step).alias("step"),
+            F.col("cur").alias("id"),
+            prev_col.alias("prev"),
+        ]
         if track_paths:
-            walkers = walkers.withColumn("path", F.array("cur"))
-        walkers = walkers.repartition(p, "cur")
+            cols.append("path")
+        return df.select(*cols)
 
-        def ev(df: DataFrame, step: int, prev_col) -> DataFrame:
-            cols = [
-                "walker",
-                F.lit(step).alias("step"),
-                F.col("cur").alias("id"),
-                prev_col.alias("prev"),
-            ]
-            if track_paths:
-                cols.append("path")
-            return df.select(*cols)
-
-        frames = [ev(walkers, 0, F.lit(None).cast("long"))]
-        for step in range(num_steps):
-            reset = (F.col("_r") < F.lit(reset_prob)) | F.col("nbrs").isNull()
-            nxt = F.element_at(
-                "nbrs",
-                (F.floor(_walk_uniform("n", step, seed) * F.size("nbrs")).cast("int") + 1),
+    frames = [ev(walkers, 0, F.lit(None).cast("long"))]
+    for step in range(num_steps):
+        reset = (F.col("_r") < F.lit(reset_prob)) | F.col("nbrs").isNull()
+        nxt = F.element_at(
+            "nbrs",
+            (F.floor(_walk_uniform("n", step, seed) * F.size("nbrs")).cast("int") + 1),
+        )
+        cols = [
+            "walker",
+            "home",
+            F.when(reset, F.col("home")).otherwise(nxt).alias("cur"),
+            F.when(reset, F.lit(None).cast("long"))
+            .otherwise(F.col("cur"))
+            .alias("_prev"),
+        ]
+        if track_paths:
+            cols.append(
+                F.when(reset, F.array("home"))
+                .otherwise(F.concat("path", F.array(nxt)))
+                .alias("path")
             )
-            cols = [
-                "walker",
-                "home",
-                F.when(reset, F.col("home")).otherwise(nxt).alias("cur"),
-                F.when(reset, F.lit(None).cast("long"))
-                .otherwise(F.col("cur"))
-                .alias("_prev"),
-            ]
-            if track_paths:
-                cols.append(
-                    F.when(reset, F.array("home"))
-                    .otherwise(F.concat("path", F.array(nxt)))
-                    .alias("path")
-                )
-            stepped = (
-                walkers.join(adj, walkers.cur == adj.src, "left")
-                .withColumn("_r", _walk_uniform("r", step, seed))
-                .select(*cols)
-                .repartition(p, "cur")
-            )
-            walkers = materialize(stepped)
-            frames.append(ev(walkers, step + 1, F.col("_prev")))
-            walkers = walkers.drop("_prev")
-    finally:
-        adj.unpersist()
+        stepped = (
+            walkers.join(adj, walkers.cur == adj.src, "left")
+            .withColumn("_r", _walk_uniform("r", step, seed))
+            .select(*cols)
+            .repartition(p, "cur")
+        )
+        walkers = ss.local_checkpoint(stepped)
+        frames.append(ev(walkers, step + 1, F.col("_prev")))
+        walkers = walkers.drop("_prev")
     return _union_all(frames)
 
 

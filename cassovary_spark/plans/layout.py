@@ -77,7 +77,7 @@ def row_count(df) -> int:
     return df.count()
 
 
-def choose_partitions(spark, edges, requested: int | None = None) -> int:
+def choose_partitions(spark, m: int, requested: int | None = None) -> int:
     """Partition count for an operator's stationary tables: one partition per
     ~2M edge rows (the measured superstep task sweet spot), never below the
     cluster's total core count (``defaultParallelism`` — every core stays
@@ -87,19 +87,18 @@ def choose_partitions(spark, edges, requested: int | None = None) -> int:
     16k on a 1000-executor cluster); without this heuristic a small graph
     would inherit all 16k near-empty tasks per superstep.
 
-    ``edges`` is an int row count, or a DataFrame whose rows ``row_count``
-    gives (not read at all when ``requested`` pins the count)."""
+    ``m`` is the edge row count (``row_count``); ``requested`` pins the
+    result."""
     if requested:
         return requested
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_rows = edges if isinstance(edges, int) else row_count(edges)
     # small graphs don't get the full-parallelism floor: per-superstep task
     # scheduling dominates below ~40k rows/partition (measured r2 sweep:
     # 319k-edge PageRank superstep 0.52s at p=8/16 vs 0.67s at p=32), so the
     # floor is capped at one partition per SMALL_ROWS_PER_PARTITION rows
     floor = min(
         spark.sparkContext.defaultParallelism,
-        max(1, -(-int(n_rows) // SMALL_ROWS_PER_PARTITION)),
+        max(1, -(-m // SMALL_ROWS_PER_PARTITION)),
     )
-    need = max(floor, -(-int(n_rows) // ROWS_PER_PARTITION))
+    need = max(floor, -(-m // ROWS_PER_PARTITION))
     return max(1, min(cap, need))

@@ -2,12 +2,14 @@
 
 Reference: ``LinkAnalysis[T].run`` (algorithms/linkanalysis/LinkAnalysis.scala:46-118)
 owns the iterate-until-tolerance loop and PageRank/HITS supply only
-``iterate``, the initial state and ``postRun``. Here ``Superstep`` owns the
-loop of every distributed iterative operator — partition count, session conf,
-state transport, per-superstep history, checkpoint/resume and cleanup — and
-each operator supplies its static tables, its superstep and its convergence
-test.
-"""
+``iterate``, the initial state and ``postRun``. Here ``Superstep`` owns every
+distributed iterative operator run — partition count, persisted static
+tables, state transport, local checkpoints and cleanup — and ``run`` owns
+the loop of the supersteps that converge: session conf, per-superstep
+history and checkpoint/resume; each operator supplies its static tables, its
+superstep and its convergence test. The traversals (BFS frontiers, all-paths
+and random walks, operators/traversals.py) step their own levels inside the
+context, without ``run``'s conf scope or history."""
 
 from __future__ import annotations
 
@@ -138,7 +140,7 @@ class Superstep:
         """Name under which ``spark.sql()`` reads ``df``: its scratch catalog
         table when ``df`` is the latest bucketed state write, else a uniquely
         named temp view (costs no write) — after a checkpoint save or resume,
-        a plain-parquet fallback, or for a static table."""
+        a plain-parquet write, or for a static table."""
         tag = getattr(df, "_cassovary_scratch", None)
         if tag is not None and tag[1] == self.scratch.last_table and StateScratch.is_live(df):
             return tag[1]
@@ -150,7 +152,8 @@ class Superstep:
     def write(self, df: DataFrame, *metrics: Column, drop: tuple[str, ...] = (),
               bucket_by: str | None = "id") -> tuple[DataFrame, dict]:
         """Round-trip one state frame through the scratch, bucketed by
-        ``bucket_by`` into ``p`` buckets (plain parquet when None).
+        ``bucket_by`` into ``p`` buckets (plain parquet when None, readable
+        until the run ends).
         ``metrics`` are aggregates collected via ``observe`` DURING the write
         — no extra job — and returned by alias; ``drop`` columns feed only
         the metrics. The storage round-trip truncates lineage AND resets
@@ -187,8 +190,8 @@ class Superstep:
         ``start`` until ``max_iterations`` or ``done(row)``, where ``row`` is
         the previous superstep's history row (initially ``row``). Returns the
         final state and the history of the supersteps run in this call: one
-        row per superstep with ``iteration``, the step's metrics, ``wall_sec``
-        and ``state_bucketed``. Every ``checkpoint_every`` supersteps the
+        row per superstep with ``iteration``, the step's metrics and
+        ``wall_sec``. Every ``checkpoint_every`` supersteps the
         state and its row are saved to ``checkpoint``; the next superstep
         then reads the store's frame."""
         row = dict(row or {})
@@ -204,7 +207,6 @@ class Superstep:
                     "iteration": iteration,
                     **metrics,
                     "wall_sec": round(time.time() - t0, 3),
-                    "state_bucketed": self.scratch._bucketing_ok,
                 }
                 history.append(row)
                 if self.stats is not None:

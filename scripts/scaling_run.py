@@ -137,11 +137,7 @@ def child(cores: int) -> None:
         walls = [h.get("wall_sec") for h in res.history]
         # per-vertex checksum so all levels can be asserted equal
         chk = round(res.ranks.agg(F.sum(F.round("pagerank", 9))).first()[0], 6)
-        extra = {
-            "state_bucketed": all(
-                h.get("state_bucketed", True) for h in res.history
-            )
-        }
+        extra = {}
     elif ALGO == "cc":
         connected_components(
             edges, max_iterations=2, num_partitions=parts, engine="distributed"

@@ -189,7 +189,7 @@ def test_state_scratch_handle_generation_tracking(spark):
 
     from cassovary_spark.checkpoint import StateScratch
 
-    scratch = StateScratch(spark, keep_last=2)
+    scratch = StateScratch(spark)
     try:
         df0 = scratch.roundtrip(
             spark.range(5).select("id", (F.col("id") * 2).alias("v")),
@@ -197,14 +197,15 @@ def test_state_scratch_handle_generation_tracking(spark):
             num_buckets=2,
         )
         assert StateScratch.is_live(df0)
-        # 2 slots warm up, the 3rd write overwrites df0's slot in place
-        scratch.roundtrip(
-            spark.range(5).select("id", (F.col("id") * 3).alias("v")),
-            bucket_by="id", num_buckets=2,
-        )
+        # 3 slots warm up, the 4th write overwrites df0's slot in place
+        for k in (3, 4):
+            scratch.roundtrip(
+                spark.range(5).select("id", (F.col("id") * k).alias("v")),
+                bucket_by="id", num_buckets=2,
+            )
         assert StateScratch.is_live(df0)
         scratch.roundtrip(
-            spark.range(5).select("id", (F.col("id") * 4).alias("v")),
+            spark.range(5).select("id", (F.col("id") * 5).alias("v")),
             bucket_by="id", num_buckets=2,
         )
         assert not StateScratch.is_live(df0)

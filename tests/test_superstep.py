@@ -1,7 +1,9 @@
 """The superstep driver's contracts: the steady-state plan shape of the
-SQL-built supersteps, cleanup after a failed superstep, routing that reads
-its memory budget at call time, and an edge count ``m`` that a cached input
-answers without a Spark job."""
+SQL-built supersteps, cleanup after a failed and after a successful run
+(only the result stays persisted, no exit hook stays registered), a failed
+bucketed state write that reaches the caller, routing that reads its memory
+budget at call time, and an edge count ``m`` that a cached input answers
+without a Spark job."""
 
 from __future__ import annotations
 
@@ -147,16 +149,34 @@ def _leak_cases():
             engine="distributed",
         ),
         "bfs": lambda e: O.bfs(e, _seeds(e), engine="distributed"),
+        "bfs_events": lambda e: O.bfs(e, _seeds(e), engine="distributed", events=True),
         "multi_source_bfs": lambda e: O.multi_source_bfs(
             e, e.select(e.src.alias("source")).distinct()
+        ),
+        "all_paths_walk": lambda e: O.all_paths_walk(e, _seeds(e), 3),
+        "all_paths_walk_events": lambda e: O.all_paths_walk(e, _seeds(e), 3, events=True),
+        "random_walk_events": lambda e: O.random_walk_events(
+            e, _seeds(e), num_steps=3, engine="distributed"
+        ),
+        "random_walk_visits": lambda e: O.random_walk_visits(
+            e, _seeds(e), num_steps=3, engine="distributed"
         ),
     }
 
 
-# the state roundtrip that raises: the 2nd by default; for the BFS loops the
-# 3rd, after the first level is written (their persisted adjacency is only
-# materialized by that write)
-FAIL_AT = {"bfs": 3, "multi_source_bfs": 3}
+# the call that raises, and which one: the 2nd state roundtrip by default;
+# for the BFS loops the 3rd, after the first level is written (their
+# persisted adjacency is only materialized by that write); for the loops
+# that checkpoint their levels instead, the 2nd local checkpoint
+FAIL_AT = {
+    "bfs": ("roundtrip", 3),
+    "bfs_events": ("roundtrip", 3),
+    "multi_source_bfs": ("roundtrip", 3),
+    "all_paths_walk": ("localCheckpoint", 2),
+    "all_paths_walk_events": ("localCheckpoint", 2),
+    "random_walk_events": ("localCheckpoint", 2),
+    "random_walk_visits": ("localCheckpoint", 2),
+}
 
 
 def _session_residue(spark):
@@ -175,22 +195,87 @@ def test_failed_superstep_frees_session_state(spark, monkeypatch, op):
 
     e = edges_df(spark, G6)
     rdds0, views0, scratch0 = _session_residue(spark)
-    orig = StateScratch.roundtrip
+    method, fail_at = FAIL_AT.get(op, ("roundtrip", 2))
+    owner = StateScratch if method == "roundtrip" else type(e)
+    orig = getattr(owner, method)
     calls = []
 
     def failing(self, *a, **k):
         calls.append(1)
-        if len(calls) == FAIL_AT.get(op, 2):
+        if len(calls) == fail_at:
             raise RuntimeError("injected superstep failure")
         return orig(self, *a, **k)
 
-    monkeypatch.setattr(StateScratch, "roundtrip", failing)
+    monkeypatch.setattr(owner, method, failing)
     with pytest.raises(RuntimeError, match="injected superstep failure"):
         _leak_cases()[op](e)
     rdds1, views1, scratch1 = _session_residue(spark)
     assert rdds1 - rdds0 == set(), "persisted frames leaked"
     assert views1 - views0 == set(), "temp views leaked"
     assert scratch1 - scratch0 == set(), "scratch tables leaked"
+
+
+# operators whose result is more than one frame, each its own checkpoint
+RESULT_FRAMES = {"bipartite": 2}
+
+
+@pytest.mark.parametrize("op", sorted(_leak_cases()))
+def test_successful_superstep_leaves_only_its_result(spark, op):
+    """A distributed run that returns leaves at most one new persistent RDD
+    per result frame (the result's checkpoint) and no temp view or scratch
+    table."""
+    e = edges_df(spark, G6)
+    rdds0, views0, scratch0 = _session_residue(spark)
+    _leak_cases()[op](e)
+    rdds1, views1, scratch1 = _session_residue(spark)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    try:
+        assert len(rdds1 - rdds0) <= RESULT_FRAMES.get(op, 1), "persisted frames left"
+        assert views1 - views0 == set(), "temp views left"
+        assert scratch1 - scratch0 == set(), "scratch tables left"
+    finally:
+        for rdd_id in rdds1 - rdds0:
+            persistent.get(rdd_id).unpersist(False)
+
+
+def test_failed_bucketed_state_write_reaches_the_caller(spark, monkeypatch):
+    """A bucketed state write that fails raises: the run does not go on
+    with plain-parquet state."""
+    from cassovary_spark.operators import pagerank
+
+    def refuse(self, *a, **k):
+        raise RuntimeError("bucketed write refused")
+
+    monkeypatch.setattr(type(spark.range(1).write), "saveAsTable", refuse)
+    with pytest.raises(RuntimeError, match="bucketed write refused"):
+        pagerank(edges_df(spark, G6), max_iterations=3, engine="distributed")
+
+
+def test_state_scratch_frees_its_exit_hook(spark, monkeypatch):
+    """Each state scratch unregisters its exit hook when its run closes it,
+    so no hook keeps a finished run's scratch alive. (Counting hooks with
+    ``atexit._ncallbacks()`` cannot show this on Python 3.11: an
+    unregistered hook leaves an empty slot that is still counted.)"""
+    import gc
+    import weakref
+
+    from cassovary_spark import operators as O
+    from cassovary_spark.checkpoint import StateScratch
+
+    made = []
+    orig = StateScratch.__init__
+
+    def init(self, *a, **k):
+        orig(self, *a, **k)
+        made.append(weakref.ref(self))
+
+    monkeypatch.setattr(StateScratch, "__init__", init)
+    e = edges_df(spark, G6)
+    O.pagerank(e, max_iterations=2, engine="distributed")
+    O.bfs(e, [10], engine="distributed")
+    gc.collect()
+    assert len(made) == 2
+    assert [r for r in made if r() is not None] == [], "a closed scratch is still held"
 
 
 def test_local_budget_is_read_at_call_time(spark, monkeypatch):
