@@ -27,7 +27,6 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 META_NAME = "_SUCCESS_META.json"
 
@@ -44,37 +43,37 @@ class CheckpointStore:
 
     def save(self, iteration: int, state: DataFrame, metrics: dict[str, Any]) -> DataFrame:
         """Write one superstep's state + metrics; returns the re-read state
-        (lineage truncated to a parquet scan — this is also how iterative
-        plans avoid exponential plan growth)."""
+        (lineage truncated to a parquet scan). ``Superstep.run`` keeps its
+        in-memory state instead: the re-read reports no partitioning."""
+        import pyarrow.parquet as pq
+
         out = self._iter_dir(iteration)
         state.write.mode("overwrite").parquet(out)
 
         # per-partition lineage: rows per file as written (parquet file = unit
         # of reread parallelism), recorded so a resumed run can verify its
-        # input matches what the dead run produced.
-        spark = state.sparkSession
-        reread = spark.read.parquet(out)
-        lineage = [
-            {"file": os.path.basename(r["file"]), "rows": r["rows"]}
-            for r in (
-                reread.groupBy(F.input_file_name().alias("file"))
-                .agg(F.count("*").alias("rows"))
-                .collect()
-            )
-        ]
+        # input matches what the dead run produced. Read from the footers:
+        # no Spark job re-reads the files just written.
+        lineage = []
+        for name in sorted(os.listdir(out)):
+            if name.endswith(".parquet"):
+                rows = pq.read_metadata(os.path.join(out, name)).num_rows
+                if rows:
+                    lineage.append({"file": name, "rows": rows})
         meta = {
             "run_id": self.run_id,
             "iteration": iteration,
             "wall_time": time.time(),
             "metrics": metrics,
-            "lineage": sorted(lineage, key=lambda d: d["file"]),
+            "lineage": lineage,
         }
         # atomic rename => a crashed writer never leaves a half-visible iteration
         fd, tmp = tempfile.mkstemp(dir=out, suffix=".tmpmeta")
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f)
         os.rename(tmp, os.path.join(out, META_NAME))
-        return reread
+        # the state's schema spares the re-read a schema-inference job
+        return state.sparkSession.read.schema(state.schema).parquet(out)
 
     def complete_iterations(self) -> list[int]:
         base = os.path.join(self.path, self.run_id)
@@ -108,32 +107,83 @@ def materialize(df: DataFrame) -> DataFrame:
     ``localCheckpoint(eager=True)`` persists partitions on executors and
     truncates the logical plan — the in-memory analog of CheckpointStore.save.
 
-    CAUTION (measured, see Superstep.write): the resulting LogicalRDD INHERITS
-    the origin plan's Catalyst sizeInBytes statistic. Joins multiply child
-    sizes, so an iterative recurrence whose state feeds >= 2 branches of the
-    next superstep's join tree doubles the BigInt bit-length of that statistic
-    every iteration — optimizer time then grows exponentially (BigInteger
+    CAUTION (measured): the resulting LogicalRDD INHERITS the origin plan's
+    Catalyst sizeInBytes statistic. Joins multiply child sizes, so an
+    iterative recurrence whose state feeds >= 2 branches of the next
+    superstep's join tree grows that statistic ~1e6x per superstep at
+    PageRank's shape — optimizer time then grows exponentially (BigInteger
     Toom-Cook multiplications inside SizeInBytesOnlyStatsPlanVisitor). Use
-    ``materialize`` only for recurrences where the state enters the next
-    superstep ONCE (linear stat growth); use ``Superstep.write`` (a scratch
-    parquet round-trip) for multiplicative ones (HITS, LPA, pointer-jumping
-    CC, BFS visited sets).
+    ``materialize`` only for a frame no later superstep joins (a result,
+    a walk step); superstep state goes through ``Superstep.write``, whose
+    leaf drops the inherited statistic (``drop_statistics``).
     """
     return df.localCheckpoint(eager=True)
 
 
+def drop_statistics(checkpointed: DataFrame) -> DataFrame:
+    """The frame of a local checkpoint whose ``LogicalRDD`` leaf reports no
+    origin statistics or constraints: its ``sizeInBytes`` is Spark's
+    default for an unknown size (Long.MaxValue) in every superstep, where
+    the inherited one grows (the ``materialize`` CAUTION). The leaf keeps
+    the RDD and the partitioning and ordering its executed plan reported.
+
+    Private Spark API (``LogicalRDD.copy`` and the classic
+    ``Dataset.ofRows``, Spark 4.1): if it changes, this raises."""
+    spark, jvm = checkpointed.sparkSession, checkpointed.sparkSession._jvm
+    lp = checkpointed._jdf.queryExecution().logical()
+    part, order = lp.outputPartitioning(), lp.outputOrdering()
+    # Each output attribute takes the instance the partitioning and ordering
+    # name: they can differ in qualifier only (``s.id`` vs ``id``), and a
+    # self-join's copy of the leaf (``LogicalRDD.newInstance``) re-maps
+    # the partitioning and ordering only where they equal the output,
+    # qualifier included. Otherwise the copy's partitioning names the
+    # first copy's attributes, and the join exchanges the state.
+    keyed = [order.apply(i) for i in range(order.size())]
+    if jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.Expression"
+    ).isInstance(part):  # hash partitioning, not SinglePartition
+        keyed.append(part)
+    named = {}
+    for expr in keyed:
+        refs = expr.references().toSeq()
+        for i in range(refs.size()):
+            named[refs.apply(i).exprId().id()] = refs.apply(i)
+    out = lp.output()
+    output = jvm.java.util.ArrayList()
+    for i in range(out.size()):
+        output.add(named.get(out.apply(i).exprId().id(), out.apply(i)))
+    none = jvm.scala.Option.empty()
+    leaf = lp.copy(
+        jvm.scala.jdk.javaapi.CollectionConverters.asScala(output).toList(),
+        lp.rdd(), part, order, lp.isStreaming(), lp.stream(),
+        spark._jsparkSession, none, none,
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, leaf), spark
+    )
+
+
 class StateScratch:
-    """Ephemeral superstep state store: truncates lineage AND resets Catalyst
-    statistics via a parquet round-trip (file-based stats are ground truth).
+    """Ephemeral state store on scratch parquet: truncates lineage AND
+    resets Catalyst statistics via a parquet round-trip (file-based stats
+    are ground truth).
 
     This is the in-op analog of CheckpointStore (same storage pattern, no
-    metadata/resume surface). Each ``superstep.Superstep`` run owns one,
-    writes every state frame through it (``Superstep.write``) and closes it
-    when the run ends; a scratch never closed is reclaimed at exit.
+    metadata/resume surface). Each ``superstep.Superstep`` run owns one for
+    its ``bucket_by=None`` writes (BFS levels, bipartite sides), which stay
+    readable until the run ends; keyed superstep state is an in-memory
+    leaf instead (``Superstep.write``). A scratch never closed is reclaimed
+    at exit.
+
+    The bucketed rotation (``roundtrip(bucket_by=...)``) has no caller in
+    the package: it is kept only for perfbench's state-transport probe
+    (``harness.layer_probes``), which times it.
     """
 
     # bucketed tables per (schema, bucket column, bucket count) rotation:
-    # the state a write reads and the one before it stay readable
+    # the state a write reads and the one before it stay readable. The
+    # rotation is kept only for perfbench's state-transport probe; no
+    # operator writes bucketed state any more.
     ROTATION_SLOTS = 3
 
     def __init__(self, spark: SparkSession):
@@ -154,12 +204,6 @@ class StateScratch:
         # always True: a failed bucketed write raises. Kept only because
         # perfbench/tracing.py and perfbench/harness.py read it.
         self._bucketing_ok = True
-        # catalog table name backing the most recent roundtrip (None when the
-        # last write was plain parquet) — lets operators reference
-        # the current state by name in a single spark.sql() superstep build,
-        # which saves ~15 py4j round-trips of DataFrame construction
-        # (measured ~10%/superstep)
-        self.last_table: str | None = None
         # ping-pong table rotation: per-superstep DROP+saveAsTable costs a
         # fixed ~0.33s of catalog DDL (measured);
         # inserting into ROTATION_SLOTS pre-created bucketed tables in rotation
@@ -228,7 +272,6 @@ class StateScratch:
             path = os.path.join(self.dir, f"s{self._i:06d}")
             df.write.mode("overwrite").option("compression", "none").parquet(path)
             self._slot_epoch[path] = self._i
-            self.last_table = None
             out = self.spark.read.parquet(path)
             out._cassovary_scratch = (self, path, self._i)
             return out
@@ -269,7 +312,6 @@ class StateScratch:
             # (observed: FileNotFoundException mid-superstep)
             self.spark.catalog.refreshTable(name)
         rotation.append(name)
-        self.last_table = name
         self._slot_epoch[name] = self._i
         out = self.spark.table(name)
         out._cassovary_scratch = (self, name, self._i)

@@ -106,9 +106,13 @@ def connected_components(
                 # (unsorted, un-co-partitioned), so SMJ would sort BOTH sides
                 # after their exchanges; the hash build of the O(V) lut is
                 # the cheaper half.
+                # REPARTITION: the jump's output is partitioned by its probe
+                # key ``component``; re-keyed by ``id``, the next superstep
+                # reads the state leaf in place.
                 nl = ss.name(ss.write(spark.sql(sql))[0])
                 sql = f"""
-  SELECT /*+ {UPDATE_JOIN_HINT}(lut) */ nl.id, coalesce(lut.component, nl.component) AS component
+  SELECT /*+ {UPDATE_JOIN_HINT}(lut), REPARTITION({ss.p}, id) */ nl.id,
+         coalesce(lut.component, nl.component) AS component
   FROM {nl} nl
   LEFT JOIN {nl} lut ON nl.component = lut.id"""
             # convergence metric (Σ labels strictly decreases until fixpoint)

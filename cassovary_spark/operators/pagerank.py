@@ -37,8 +37,9 @@ Scale design (100 TB edge table, 1000 executors):
 - lineage is truncated every superstep (localCheckpoint or CheckpointStore),
   so plans stay O(1) regardless of iteration count.
 - hub skew on ``dst`` (the groupBy side) is handled by map-side partial
-  aggregation (Spark's hash-aggregate does this automatically) + AQE skew
-  handling for the join.
+  aggregation (Spark's hash-aggregate does this automatically). The state
+  write runs with AQE off at every size: neither superstep join shuffles
+  both sides, so AQE's skew-join split could not apply anyway.
 """
 
 from __future__ import annotations
@@ -157,16 +158,19 @@ def _power_iteration(
         start, ranks, meta = ss.latest(checkpoint, resume)
         # reference initial error (PageRank.scala:82)
         error = float(meta["metrics"]["error"]) if meta else 100.0 + tolerance
+        # dangling mass of the CURRENT ranks (reference recomputes per
+        # iteration, :92-93): observed during every state write, the initial
+        # one included, so each superstep costs exactly one job; a resumed
+        # run reads it from the store's state
+        dangling = F.sum(F.when(F.col("is_dangling"), F.col("pagerank"))).alias("d")
         if ranks is None:
             init = F.lit(1.0 / n) if seeds is None else F.col("seed_mass")
-            ranks, _ = ss.write(verts.select("id", init.alias("pagerank"), *verts.columns[1:]))
-        # dangling mass of the CURRENT ranks (reference recomputes per
-        # iteration, :92-93); after the first superstep it rides the state
-        # write, so each superstep costs exactly one job
-        dangle_mass = (
-            ranks.filter(F.col("is_dangling")).agg(F.sum("pagerank").alias("s")).first()["s"]
-            or 0.0
-        )
+            ranks, got = ss.write(
+                verts.select("id", init.alias("pagerank"), *verts.columns[1:]), dangling
+            )
+        else:
+            got = ranks.agg(dangling).first()
+        dangle_mass = got["d"] or 0.0
 
         def step(ranks, last):
             # the teleport and the dangling mass go to every vertex equally,
@@ -207,7 +211,7 @@ def _power_iteration(
       GROUP BY e.dst
   ) c ON s.id = c.id"""),
                 F.sum(F.abs(F.col("prev") - F.col("pagerank"))).alias("e"),
-                F.sum(F.when(F.col("is_dangling"), F.col("pagerank"))).alias("d"),
+                dangling,
                 drop=("prev",),
             )
             return new_ranks, {
@@ -226,7 +230,7 @@ def _power_iteration(
         )
         if history:
             error = history[-1]["error"]
-        # materialize the final state BEFORE the driver frees the scratch
-        # that backs it
+        # materialize the final state BEFORE the driver frees the leaf that
+        # backs it
         result = materialize(ranks.select("id", "pagerank"))
     return PageRankResult(result, error, start + len(history), n, edge_count, history)

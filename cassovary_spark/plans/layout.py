@@ -16,10 +16,10 @@ SMALL_ROWS_PER_PARTITION = 40_000
 AQE_OFF_MAX_ROWS = 16_777_216
 
 
-# Join hint for the per-superstep STATE-UPDATE join (bucketed state x the
+# Join hint for the per-superstep STATE-UPDATE join (the state leaf x the
 # superstep's fresh aggregate, both hash(id)-partitioned, so neither side
 # exchanges either way). SHUFFLE_HASH skips the per-superstep SORT of the
-# fresh aggregated side that sort-merge would insert (the bucketed state side
+# fresh aggregated side that sort-merge would insert (the state side
 # is pre-sorted and is the streamed side in both strategies, so row order —
 # and thus every observed FP sum — is unchanged); measured -13%
 # whole-superstep at 3.2M edges, r6. The build side is the aggregate: <= V/p
@@ -32,24 +32,42 @@ UPDATE_JOIN_HINT = "SHUFFLE_HASH"
 
 @contextmanager
 def superstep_conf(spark, num_partitions: int, rows: int):
-    """Session conf scope for a small graph's superstep loop: AQE off (its
-    per-query re-planning is ~0.07s/superstep of pure overhead when every
-    stage is already tiny — measured r2) and ``spark.sql.shuffle.partitions``
-    pinned to the operator's partition count so intermediate exchanges match
-    the bucketed state layout. No-op at scale (rows >= AQE_OFF_MAX_ROWS),
-    where AQE skew-splitting is worth its planning cost."""
+    """Session conf scope for a small graph's superstep loop: ``pinned_conf``
+    (AQE's per-query re-planning is ~0.07s/superstep of pure overhead when
+    every stage is already tiny — measured r2). No-op at scale
+    (rows >= AQE_OFF_MAX_ROWS), where AQE may coalesce or split the stages
+    of a loop's other queries; the state writes themselves always run
+    pinned (``Superstep.write``)."""
     if rows >= AQE_OFF_MAX_ROWS:
         yield
         return
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
+    with pinned_conf(spark, num_partitions):
+        yield
+
+
+@contextmanager
+def pinned_conf(spark, num_partitions: int):
+    """AQE off and ``spark.sql.shuffle.partitions`` pinned to the operator's
+    partition count for the block, so a query's exchanges land on the
+    layout of the stationary tables and the plan reports its partitioning
+    (an adaptive plan reports ``UnknownPartitioning(0)``). Joins whose
+    sides are all single-partition (``p`` = 1) stay so: a state leaf's
+    size is unknown (``checkpoint.drop_statistics``), and under the default
+    ``spark.sql.maxSinglePartitionBytes`` the planner would shuffle both
+    sides into one partition again."""
+    keys = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(num_partitions),
+        "spark.sql.maxSinglePartitionBytes": str(2**63 - 1),
+    }
+    old = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def row_count(df) -> int:

@@ -91,10 +91,10 @@ def get_spark(
         # local[2]). The default periodic GC is 30min; iterative jobs need
         # cleanup at superstep cadence.
         "spark.cleaner.periodicGC.interval": "45s",
-        # bucketed state tables are written bucketBy(p).sortBy(key) with one
-        # file per bucket; reporting their sort order lets the superstep SMJ
-        # skip BOTH the exchange and the sort on the O(V) state side (Spark
-        # still falls back to sorting when a bucket has multiple files)
+        # a bucketed table's scan reports its sortBy order. Superstep state
+        # is an in-memory leaf now (Superstep.write); the only bucketed
+        # tables left are StateScratch's rotation, which perfbench's
+        # state-transport probe times, so this stays while that probe does
         "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
         # Tungsten execution memory off-heap: sort/shuffle/join buffers
         # bypass the GC heap entirely — at 32 threads the allocation rate of
@@ -106,7 +106,8 @@ def get_spark(
         "spark.memory.offHeap.size": os.environ.get(
             "CASSOVARY_SPARK_OFFHEAP_SIZE", "24g"
         ),
-        # bucketed superstep-state tables (checkpoint.StateScratch) live here
+        # catalog tables live here: no operator writes one; StateScratch's
+        # bucketed rotation (perfbench's state-transport probe) does
         "spark.sql.warehouse.dir": os.environ.get(
             "CASSOVARY_SPARK_WAREHOUSE", _scratch_root() + "/cassovary_warehouse"
         ),

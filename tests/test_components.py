@@ -68,12 +68,9 @@ def test_cc_random_graph_oracle(spark):
 
 
 def test_cc_lpa_checkpoint_resume_equivalence(spark, tmp_path):
-    """Checkpointed/resumed CC and LPA == uninterrupted runs.
-
-    Also covers the single-SQL superstep fallback: checkpoint.save returns a
-    non-catalog frame each iteration, so the loop must alternate between the
-    spark.sql() build (catalog state) and the DataFrame build correctly.
-    """
+    """Checkpointed/resumed CC and LPA == uninterrupted runs: a save every
+    superstep leaves the loop on its in-memory state, and a resumed run
+    starts from the store's parquet."""
     from cassovary_spark.checkpoint import CheckpointStore
 
     e = edges_df(spark, TWO_CLIQUES_BRIDGED)

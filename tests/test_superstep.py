@@ -1,17 +1,22 @@
 """The superstep driver's contracts: the steady-state plan shape of the
-SQL-built supersteps, cleanup after a failed and after a successful run
-(only the result stays persisted, no exit hook stays registered), a failed
-bucketed state write that reaches the caller, routing that reads its memory
-budget at call time, and an edge count ``m`` that a cached input answers
-without a Spark job."""
+SQL-built supersteps (the state a sort-free, exchange-free leaf, also with
+AQE on for the loop and after a checkpoint save), state statistics that
+stay fixed, at most two live state leaves per (schema, key), cleanup after
+a failed and after a successful run (only the result stays persisted, no
+exit hook stays registered), a failed state-leaf build that reaches the
+caller, routing that reads its memory budget at call time, and an edge
+count ``m`` that a cached input answers without a Spark job."""
 
 from __future__ import annotations
 
+import re
 import uuid
+from collections import Counter
 from contextlib import contextmanager
 
 import pytest
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
 
 from tests.conftest import G6, TWO_CLIQUES_BRIDGED, edges_df
 
@@ -35,32 +40,41 @@ def _name(node) -> str:
     return s.split(" ", 1)[0]
 
 
-def _paths_to_state_scans(join, path=()):
-    """Node-name paths from a join down to each scan of superstep state that
-    feeds it directly (not through another join or an aggregate)."""
+def _scan_columns(node) -> list[str] | None:
+    """Output column names of a ``Scan ExistingRDD`` leaf (a local
+    checkpoint, such as a state leaf), else None."""
+    got = re.fullmatch(r"Scan ExistingRDD\[(.*)\]", node[0].lstrip("*(0123456789) "))
+    return [c.split("#")[0] for c in got.group(1).split(",")] if got and not node[1] else None
+
+
+def _paths_to_state_scans(join, state_cols, path=()):
+    """Node-name paths from a join down to each scan of superstep state (a
+    ``Scan ExistingRDD`` whose columns are ``state_cols``) that feeds it
+    directly (not through another join or an aggregate)."""
     path = path + (_name(join),)
-    if not join[1] and "cassovary_state_" in join[0]:
+    if _scan_columns(join) == state_cols:
         yield path
     for child in join[1]:
         if len(path) == 1 or not any(w in _name(child) for w in ("Join", "Aggregate")):
-            yield from _paths_to_state_scans(child, path)
+            yield from _paths_to_state_scans(child, state_cols, path)
 
 
 @pytest.fixture
-def superstep_sql(monkeypatch):
-    """Spy on ``SparkSession.sql``: records ``(query, plan tree)`` of every
-    query containing ``marker``, planned while the superstep runs (its
-    scratch tables are dropped when the operator returns)."""
-    captured: list[tuple[str, tuple]] = []
-    orig = SparkSession.sql
+def state_plans(spark, monkeypatch):
+    """Spy on ``DataFrame.localCheckpoint``: records the executed plan
+    tree of every checkpointed frame whose plan mentions ``marker``, as
+    planned in the state write's conf scope — the plan that runs."""
+    captured: list[tuple] = []
+    cls = type(spark.range(1))  # the session's concrete DataFrame class
+    orig = cls.localCheckpoint
 
-    def spy(self, query, *a, **k):
-        df = orig(self, query, *a, **k)
-        if spy.marker in query:
-            captured.append((query, _plan_nodes(df._jdf.queryExecution().executedPlan())))
-        return df
+    def spy(self, *a, **k):
+        plan = self._jdf.queryExecution().executedPlan()
+        if spy.marker in plan.toString():
+            captured.append(_plan_nodes(plan))
+        return orig(self, *a, **k)
 
-    monkeypatch.setattr(SparkSession, "sql", spy)
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
 
     def arm(marker):
         spy.marker = marker
@@ -69,10 +83,10 @@ def superstep_sql(monkeypatch):
     return arm
 
 
-def _run_pagerank(e):
+def _run_pagerank(e, **k):
     from cassovary_spark.operators import pagerank
 
-    pagerank(e, max_iterations=3, engine="distributed")
+    return pagerank(e, max_iterations=3, engine="distributed", **k)
 
 
 def _run_cc(e):
@@ -87,34 +101,26 @@ def _run_lpa(e):
     label_propagation(e, max_iterations=3, engine="distributed")
 
 
-def _run_ppr(e):
+def _run_ppr(e, **k):
     from cassovary_spark.operators import personalized_pagerank
 
-    personalized_pagerank(e, _seeds(e), max_iterations=3, engine="distributed")
+    personalized_pagerank(e, _seeds(e), max_iterations=3, engine="distributed", **k)
 
 
-@pytest.mark.parametrize(
-    "run, marker, pairs",
-    [
-        (_run_pagerank, "gathered", G6),
-        (_run_cc, "nbr_component", TWO_CLIQUES_BRIDGED),
-        (_run_lpa, "new_label", TWO_CLIQUES_BRIDGED),
-        (_run_ppr, "gathered", G6),
-    ],
-    ids=["pagerank", "cc", "lpa", "ppr"],
-)
-def test_steady_state_superstep_plan_shape(spark, superstep_sql, run, marker, pairs):
-    """Gather = sort-free SortMergeJoin over the bucketed state; update =
-    ShuffledHashJoin building the fresh aggregate; nothing broadcast-nested."""
-    captured = superstep_sql(marker)
-    run(edges_df(spark, pairs))
-    assert len(captured) >= 2, "no steady-state superstep SQL was captured"
-    _query, tree = captured[-1]
-    nodes = list(_walk(tree))
+PAGERANK_STATE = ["id", "pagerank", "is_dangling"]
+PPR_STATE = PAGERANK_STATE + ["seed_mass"]
+
+
+def _assert_plan_shape(captured, state_cols):
+    """Gather = sort-free SortMergeJoin over the state leaf; update =
+    ShuffledHashJoin building the fresh aggregate; nothing
+    broadcast-nested. Returns the nodes of the last captured superstep."""
+    assert len(captured) >= 2, "no steady-state superstep was captured"
+    nodes = list(_walk(captured[-1]))
 
     smjs = [n for n in nodes if _name(n) == "SortMergeJoin"]
     assert smjs, "gather is not a SortMergeJoin"
-    state_paths = [p for smj in smjs for p in _paths_to_state_scans(smj)]
+    state_paths = [p for smj in smjs for p in _paths_to_state_scans(smj, state_cols)]
     assert state_paths, "the gather does not read the superstep state"
     for path in state_paths:
         assert "Sort" not in path, f"the gather sorts the state: {path}"
@@ -123,6 +129,152 @@ def test_steady_state_superstep_plan_shape(spark, superstep_sql, run, marker, pa
         _name(n) == "ShuffledHashJoin" and "BuildRight" in n[0] for n in nodes
     ), "update join is not ShuffledHashJoin ... BuildRight"
     assert not any(_name(n) == "BroadcastNestedLoopJoin" for n in nodes)
+    return nodes
+
+
+def _exchanges(nodes) -> list[str]:
+    return [n[0] for n in nodes if "Exchange" in _name(n)]
+
+
+@pytest.mark.parametrize(
+    "run, marker, pairs, state_cols",
+    [
+        (_run_pagerank, "gathered", G6, PAGERANK_STATE),
+        (_run_cc, "nbr_component", TWO_CLIQUES_BRIDGED, ["id", "component"]),
+        (_run_lpa, "new_label", TWO_CLIQUES_BRIDGED, ["id", "label"]),
+        (_run_ppr, "gathered", G6, PPR_STATE),
+    ],
+    ids=["pagerank", "cc", "lpa", "ppr"],
+)
+def test_steady_state_superstep_plan_shape(spark, state_plans, run, marker, pairs, state_cols):
+    """Gather = sort-free SortMergeJoin over the state leaf; update =
+    ShuffledHashJoin building the fresh aggregate; nothing broadcast-nested."""
+    captured = state_plans(marker)
+    run(edges_df(spark, pairs))
+    _assert_plan_shape(captured, state_cols)
+
+
+@pytest.mark.parametrize(
+    "run, state_cols", [(_run_pagerank, PAGERANK_STATE), (_run_ppr, PPR_STATE)],
+    ids=["pagerank", "ppr"],
+)
+def test_steady_pagerank_superstep_has_one_exchange(spark, state_plans, run, state_cols):
+    """A steady PageRank/PPR superstep on p >= 2 partitions shuffles once:
+    the gathered contributions to their destination. Neither the state nor
+    the edges move."""
+    captured = state_plans("gathered")
+    run(edges_df(spark, G6), num_partitions=3)
+    nodes = _assert_plan_shape(captured, state_cols)
+    assert len(_exchanges(nodes)) == 1, _exchanges(nodes)
+
+
+def test_plan_shape_holds_with_aqe_on_for_the_loop(spark, state_plans, monkeypatch):
+    """Above ``AQE_OFF_MAX_ROWS`` the loop runs with AQE on and the
+    session's shuffle partitions; the state write still plans with AQE off
+    on ``p`` partitions, so its leaf reports its partitioning, and the
+    result equals the local twin's."""
+    from cassovary_spark.operators import pagerank
+    from cassovary_spark.plans import layout
+
+    monkeypatch.setattr(layout, "AQE_OFF_MAX_ROWS", 0)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    e = edges_df(spark, G6)
+    captured = state_plans("gathered")
+    dist = pagerank(e, max_iterations=10, tolerance=0.0, engine="distributed", num_partitions=3)
+    nodes = _assert_plan_shape(captured, PAGERANK_STATE)
+    assert len(_exchanges(nodes)) == 1, _exchanges(nodes)
+    local = pagerank(e, max_iterations=10, tolerance=0.0, engine="local")
+    want = {r["id"]: r["pagerank"] for r in local.ranks.collect()}
+    got = {r["id"]: r["pagerank"] for r in dist.ranks.collect()}
+    assert got.keys() == want.keys()
+    for k, v in want.items():
+        assert got[k] == pytest.approx(v, abs=1e-12)
+
+
+def test_superstep_after_a_checkpoint_save_reads_the_state_in_place(spark, state_plans, tmp_path):
+    """A ``CheckpointStore`` save leaves the state in memory: the next
+    superstep reads the leaf with no exchange."""
+    from cassovary_spark.checkpoint import CheckpointStore
+
+    captured = state_plans("gathered")
+    store = CheckpointStore(str(tmp_path))
+    _run_pagerank(edges_df(spark, G6), checkpoint=store, num_partitions=3)
+    assert store.complete_iterations() == [1, 2, 3]
+    nodes = _assert_plan_shape(captured, PAGERANK_STATE)
+    state_paths = [p for n in nodes for p in _paths_to_state_scans(n, PAGERANK_STATE)
+                   if "Join" in _name(n)]
+    for path in state_paths:
+        assert "Exchange" not in path, f"the state is exchanged: {path}"
+    assert len(_exchanges(nodes)) == 1, _exchanges(nodes)
+
+
+@pytest.fixture
+def state_writes(monkeypatch):
+    """Spy on keyed ``Superstep.write`` calls: ``.writes`` receives
+    ``(schema, key, leaf RDD id, leaf sizeInBytes)`` per write, and
+    ``.check(writes)``, when set, runs as each write returns."""
+    from cassovary_spark.superstep import Superstep
+
+    orig = Superstep.write
+
+    def spy(self, df, *a, bucket_by="id", **k):
+        out, got = orig(self, df, *a, bucket_by=bucket_by, **k)
+        if bucket_by is not None:
+            qe = out._jdf.queryExecution()
+            spy.writes.append((
+                out.schema.simpleString(), bucket_by, qe.logical().rdd().id(),
+                qe.optimizedPlan().stats().sizeInBytes(),
+            ))
+            if spy.check is not None:
+                spy.check(spy.writes)
+        return out, got
+
+    spy.writes, spy.check = [], None
+    monkeypatch.setattr(Superstep, "write", spy)
+    return spy
+
+
+def test_state_statistics_stay_fixed_across_supersteps(spark, state_writes):
+    """The state leaf reports the same ``sizeInBytes`` after superstep 1 as
+    after superstep 5: a checkpoint that kept its origin statistics would
+    multiply them with every superstep's joins."""
+    from cassovary_spark.operators import pagerank
+
+    pagerank(edges_df(spark, G6), max_iterations=5, tolerance=0.0, engine="distributed")
+    sizes = [w[3] for w in state_writes.writes]
+    assert len(sizes) == 6  # the initial write, then one per superstep
+    assert sizes[1] == sizes[5], sizes
+
+
+def _eight_supersteps():
+    from cassovary_spark import operators as O
+
+    return {
+        "pagerank": lambda e: O.pagerank(
+            e, max_iterations=8, tolerance=0.0, engine="distributed"
+        ),
+        "hits": lambda e: O.hits(e, max_iterations=8, tolerance=0.0, engine="distributed"),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_eight_supersteps()))
+def test_at_most_two_live_state_leaves(spark, state_writes, op):
+    """After every state write, each (schema, key) has at most two live
+    leaves: the one just written and the one it read. None is live once
+    the run returns."""
+    sc = spark.sparkContext
+
+    def check(writes):
+        live = set(sc._jsc.getPersistentRDDs().keys())
+        per_kind = Counter((schema, key) for schema, key, rdd, _ in writes if rdd in live)
+        assert max(per_kind.values()) <= 2, per_kind
+
+    state_writes.check = check
+    res = _eight_supersteps()[op](edges_df(spark, G6))
+    assert res.iterations == 8
+    leaves = {w[2] for w in state_writes.writes}
+    assert len(leaves) > 8
+    assert leaves & set(sc._jsc.getPersistentRDDs().keys()) == set(), "leaves left live"
 
 
 def _seeds(e):
@@ -164,10 +316,11 @@ def _leak_cases():
     }
 
 
-# the call that raises, and which one: the 2nd state roundtrip by default;
-# for the BFS loops the 3rd, after the first level is written (their
-# persisted adjacency is only materialized by that write); for the loops
-# that checkpoint their levels instead, the 2nd local checkpoint
+# the call that raises, and which one: the 2nd state write by default;
+# for the BFS loops the 3rd state roundtrip, after the first level is
+# written (their persisted adjacency is only materialized by that write);
+# for the loops that checkpoint their levels instead, the 2nd local
+# checkpoint
 FAIL_AT = {
     "bfs": ("roundtrip", 3),
     "bfs_events": ("roundtrip", 3),
@@ -192,11 +345,12 @@ def test_failed_superstep_frees_session_state(spark, monkeypatch, op):
     """A superstep that raises leaves no persisted frame, temp view or
     scratch table behind."""
     from cassovary_spark.checkpoint import StateScratch
+    from cassovary_spark.superstep import Superstep
 
     e = edges_df(spark, G6)
     rdds0, views0, scratch0 = _session_residue(spark)
-    method, fail_at = FAIL_AT.get(op, ("roundtrip", 2))
-    owner = StateScratch if method == "roundtrip" else type(e)
+    method, fail_at = FAIL_AT.get(op, ("write", 2))
+    owner = {"write": Superstep, "roundtrip": StateScratch}.get(method, type(e))
     orig = getattr(owner, method)
     calls = []
 
@@ -239,16 +393,20 @@ def test_successful_superstep_leaves_only_its_result(spark, op):
 
 
 def test_failed_bucketed_state_write_reaches_the_caller(spark, monkeypatch):
-    """A bucketed state write that fails raises: the run does not go on
-    with plain-parquet state."""
+    """A state leaf that cannot be built raises: the run does not go on
+    with bucketed tables or plain-parquet state. Here the local checkpoint
+    comes back without its ``LogicalRDD``, as if the private API it relies
+    on had changed."""
+    from cassovary_spark.checkpoint import StateScratch
     from cassovary_spark.operators import pagerank
 
-    def refuse(self, *a, **k):
-        raise RuntimeError("bucketed write refused")
-
-    monkeypatch.setattr(type(spark.range(1).write), "saveAsTable", refuse)
-    with pytest.raises(RuntimeError, match="bucketed write refused"):
+    cls = type(spark.range(1))
+    monkeypatch.setattr(cls, "localCheckpoint", lambda self, *a, **k: self)
+    fallbacks = []
+    monkeypatch.setattr(StateScratch, "roundtrip", lambda *a, **k: fallbacks.append(1))
+    with pytest.raises(Py4JError):
         pagerank(edges_df(spark, G6), max_iterations=3, engine="distributed")
+    assert fallbacks == []
 
 
 def test_state_scratch_frees_its_exit_hook(spark, monkeypatch):
