@@ -17,7 +17,6 @@ identical, and the API would not change under Iceberg.
 from __future__ import annotations
 
 import atexit
-import contextlib
 import json
 import os
 import shutil
@@ -27,6 +26,8 @@ from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cassovary_spark import plans
 
 META_NAME = "_SUCCESS_META.json"
 
@@ -41,10 +42,9 @@ class CheckpointStore:
     def _iter_dir(self, iteration: int) -> str:
         return os.path.join(self.path, self.run_id, f"iter={iteration:05d}")
 
-    def save(self, iteration: int, state: DataFrame, metrics: dict[str, Any]) -> DataFrame:
-        """Write one superstep's state + metrics; returns the re-read state
-        (lineage truncated to a parquet scan). ``Superstep.run`` keeps its
-        in-memory state instead: the re-read reports no partitioning."""
+    def save(self, iteration: int, state: DataFrame, metrics: dict[str, Any]) -> None:
+        """Write one superstep's state + metrics durably. The caller keeps
+        its in-memory state; ``load``/``latest`` read the files back."""
         import pyarrow.parquet as pq
 
         out = self._iter_dir(iteration)
@@ -72,8 +72,6 @@ class CheckpointStore:
         with os.fdopen(fd, "w") as f:
             json.dump(meta, f)
         os.rename(tmp, os.path.join(out, META_NAME))
-        # the state's schema spares the re-read a schema-inference job
-        return state.sparkSession.read.schema(state.schema).parquet(out)
 
     def complete_iterations(self) -> list[int]:
         base = os.path.join(self.path, self.run_id)
@@ -114,24 +112,25 @@ def materialize(df: DataFrame) -> DataFrame:
     PageRank's shape — optimizer time then grows exponentially (BigInteger
     Toom-Cook multiplications inside SizeInBytesOnlyStatsPlanVisitor). Use
     ``materialize`` only for a frame no later superstep joins (a result,
-    a walk step); superstep state goes through ``Superstep.write``, whose
-    leaf drops the inherited statistic (``drop_statistics``).
+    a walk step); superstep state goes through ``StateScratch.roundtrip``,
+    whose leaf drops the inherited statistic (``drop_statistics``).
     """
     return df.localCheckpoint(eager=True)
 
 
-def drop_statistics(checkpointed: DataFrame) -> DataFrame:
+def drop_statistics(checkpointed: DataFrame, partitioning=None) -> DataFrame:
     """The frame of a local checkpoint whose ``LogicalRDD`` leaf reports no
     origin statistics or constraints: its ``sizeInBytes`` is Spark's
     default for an unknown size (Long.MaxValue) in every superstep, where
     the inherited one grows (the ``materialize`` CAUTION). The leaf keeps
-    the RDD and the partitioning and ordering its executed plan reported.
+    the RDD, the ordering its executed plan reported and ``partitioning``
+    (a JVM ``Partitioning``), by default the one the checkpoint reports.
 
     Private Spark API (``LogicalRDD.copy`` and the classic
     ``Dataset.ofRows``, Spark 4.1): if it changes, this raises."""
     spark, jvm = checkpointed.sparkSession, checkpointed.sparkSession._jvm
     lp = checkpointed._jdf.queryExecution().logical()
-    part, order = lp.outputPartitioning(), lp.outputOrdering()
+    part, order = partitioning or lp.outputPartitioning(), lp.outputOrdering()
     # Each output attribute takes the instance the partitioning and ordering
     # name: they can differ in qualifier only (``s.id`` vs ``id``), and a
     # self-join's copy of the leaf (``LogicalRDD.newInstance``) re-maps
@@ -163,28 +162,41 @@ def drop_statistics(checkpointed: DataFrame) -> DataFrame:
     )
 
 
+def _hashed_on(df: DataFrame, key: str):
+    """The alternative hashed on ``key`` alone among the partitionings
+    ``df``'s executed plan reports, or None if it reports one only. A
+    projection that aliases the key (``id AS component``) reports one per
+    name, and a local checkpoint keeps the first, which may be the alias's:
+    the next join on ``key`` would then exchange and sort the state."""
+    part = df._jdf.queryExecution().executedPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "PartitioningCollection":
+        return None
+    alts = part.partitionings()
+    for i in range(alts.size()):
+        alt = alts.apply(i)
+        if alt.getClass().getSimpleName() == "HashPartitioning" and alt.expressions().size() == 1:
+            expr = alt.expressions().apply(0)
+            if expr.getClass().getSimpleName() == "AttributeReference" and expr.name() == key:
+                return alt
+    return None
+
+
 class StateScratch:
-    """Ephemeral state store on scratch parquet: truncates lineage AND
-    resets Catalyst statistics via a parquet round-trip (file-based stats
-    are ground truth).
+    """The superstep state transport of one ``superstep.Superstep`` run.
 
-    This is the in-op analog of CheckpointStore (same storage pattern, no
-    metadata/resume surface). Each ``superstep.Superstep`` run owns one for
-    its ``bucket_by=None`` writes (BFS levels, bipartite sides), which stay
-    readable until the run ends; keyed superstep state is an in-memory
-    leaf instead (``Superstep.write``). A scratch never closed is reclaimed
+    Keyed writes (``roundtrip(df, bucket_by=key)``) are in-memory leaves;
+    plain writes (``bucket_by=None``: BFS levels, bipartite sides) go to
+    scratch parquet, whose file statistics are ground truth and whose files
+    stay readable until the run ends. A scratch never closed is reclaimed
     at exit.
-
-    The bucketed rotation (``roundtrip(bucket_by=...)``) has no caller in
-    the package: it is kept only for perfbench's state-transport probe
-    (``harness.layer_probes``), which times it.
     """
 
-    # bucketed tables per (schema, bucket column, bucket count) rotation:
-    # the state a write reads and the one before it stay readable. The
-    # rotation is kept only for perfbench's state-transport probe; no
-    # operator writes bucketed state any more.
-    ROTATION_SLOTS = 3
+    # a keyed leaf is freed once this many newer leaves of its (schema, key)
+    # exist: a handle stays readable through the next write of its kind
+    LIVE_LEAVES = 2
+    # always True: a failed state write raises. perfbench/tracing.py and
+    # perfbench/harness.py read it.
+    _bucketing_ok = True
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -194,42 +206,9 @@ class StateScratch:
         os.makedirs(scratch_root, exist_ok=True)
         self.dir = tempfile.mkdtemp(prefix="cassovary_state_", dir=scratch_root)
         self._i = 0
-        self._tables: list[str] = []
-        # table prefix = the FULL unique tmpdir basename: mkdtemp's random
-        # suffix may itself contain '_', so taking split('_')[-1] could
-        # collide across two live StateScratch instances (e.g. two operator
-        # calls running on different threads) and let one DROP/overwrite
-        # the other's live state
-        self._prefix = os.path.basename(self.dir).lower()
-        # always True: a failed bucketed write raises. Kept only because
-        # perfbench/tracing.py and perfbench/harness.py read it.
-        self._bucketing_ok = True
-        # ping-pong table rotation: per-superstep DROP+saveAsTable costs a
-        # fixed ~0.33s of catalog DDL (measured);
-        # inserting into ROTATION_SLOTS pre-created bucketed tables in rotation
-        # costs ~0.28s TOTAL (write+read) for a 339k-row state and the reread
-        # still reports hash-partitioning+ordering (0-exchange self-join
-        # verified). One rotation PER (schema, bucket column, bucket count)
-        # key: an operator like HITS alternates two state schemas through one
-        # scratch, and a single rotation would drop/overwrite the LIVE table
-        # of the other schema mid-query (observed FileNotFoundException).
-        # insertInto binds by POSITION, so writes reorder columns by name.
-        self._rotations: dict[tuple, list[str]] = {}
-        # generation tracking (ADVICE r2): slot name/path -> write index of
-        # its CURRENT contents. Every returned handle is tagged with the
-        # (scratch, slot, epoch) it reflects so is_live()/assert_live() can
-        # fail LOUDLY when a handle has been silently overwritten in place.
-        self._slot_epoch: dict[str, int] = {}
+        # (schema, key) -> RDDs of the live leaves, oldest first
+        self._leaves: dict[tuple[str, str], list] = {}
         atexit.register(self.close)
-
-    def _drop_tables(self) -> None:
-        for t in list(self._tables):
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-            except Exception:  # noqa: BLE001 — session may already be stopped
-                pass
-        self._tables.clear()
-        self._rotations.clear()
 
     def roundtrip(
         self,
@@ -237,149 +216,57 @@ class StateScratch:
         bucket_by: str | None = None,
         num_buckets: int | None = None,
     ) -> DataFrame:
-        """Materialize superstep state to storage and read it back.
+        """Materialize superstep state and cut its lineage.
 
-        With ``bucket_by``, the state is written as a BUCKETED (+sorted) table:
-        the reread scan reports hash-partitioning/ordering on that column, so
-        the next superstep's joins need NO exchange or sort on the state side —
-        measured ~2x whole-superstep speedup over plain parquet at 32M edges.
-        A failed bucketed write raises.
+        With ``bucket_by``, the state is an in-memory leaf: sorted within
+        its partitions by that key and locally checkpointed under
+        ``plans.pinned_conf`` on ``num_buckets`` partitions (default: the
+        session's shuffle partitions; an adaptive plan reports no
+        partitioning), then re-wrapped without the statistics and
+        constraints the checkpoint inherits from its origin plan
+        (``drop_statistics``). The write adds no exchange: the leaf keeps
+        the ordering and the partitioning its executed plan reported (the
+        one on the key, where the plan reports several). Superstep state
+        comes out of a join or aggregate on the key, so the next
+        superstep's joins on the key neither exchange nor sort it, and its
+        ``sizeInBytes`` stays fixed where the inherited one would grow with
+        every superstep. A leaf is freed once ``LIVE_LEAVES`` newer leaves
+        of its (schema, key) exist, and every leaf on ``close()``; a read
+        of a freed leaf raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. The
+        leaf lives in executor memory: an executor lost mid-run loses it,
+        and a ``CheckpointStore`` saved every k supersteps is the recovery
+        point.
 
-        INVALIDATION WINDOW (bucketed mode): returned DataFrames are views of
-        a ROTATING table pool — a handle stays valid only for the next
-        ``ROTATION_SLOTS - 1`` roundtrips of the same (schema, bucket key,
-        bucket count); after that its slot is overwritten in place and the
-        handle silently resolves to NEWER data (insertInto + refreshTable, no
-        DROP to fail loudly). Ping-pong loops that only read the previous
-        state are safe by construction. Plain-parquet writes
-        (``bucket_by=None``) get a fresh directory each and stay readable
-        until ``close()``: loops that retain MANY live state handles
-        (BFS-style level lists) write that way. Handles are generation-tagged:
-        ``StateScratch.is_live(df)`` reports whether a handle still
-        reflects its data and ``assert_live(df)`` raises on
-        reuse-after-rotation.
-
-        State parquet is written UNCOMPRESSED: superstep state is
-        (id, score)-shaped doubles — nearly incompressible — on a scratch
-        medium that is RAM in this sandbox and node-local SSD on a cluster,
-        and lives at most ROTATION_SLOTS supersteps. Snappy there is pure CPU:
-        measured ~6-12% whole-superstep cost at 319k-2.4M edges with
-        bit-identical checksums (PLANS.md, superstep fixed-cost round 3).
-        Durable CheckpointStore artifacts keep the session codec.
+        With ``bucket_by=None`` the state is written to a fresh scratch
+        parquet directory, UNCOMPRESSED: superstep state is (id, score)-
+        shaped doubles, nearly incompressible, on RAM or node-local SSD, so
+        snappy there is pure CPU (measured ~6-12% whole-superstep cost at
+        319k-2.4M edges, PLANS.md). Durable ``CheckpointStore`` artifacts
+        keep the session codec.
         """
-        self._i += 1
         if bucket_by is None:
+            self._i += 1
             path = os.path.join(self.dir, f"s{self._i:06d}")
             df.write.mode("overwrite").option("compression", "none").parquet(path)
-            self._slot_epoch[path] = self._i
-            out = self.spark.read.parquet(path)
-            out._cassovary_scratch = (self, path, self._i)
-            return out
+            return self.spark.read.parquet(path)
 
-        b = num_buckets or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        key = (
-            tuple((f.name, f.dataType.simpleString()) for f in df.schema.fields),
-            bucket_by,
-            b,
-        )
-        rotation = self._rotations.setdefault(key, [])
-        if len(rotation) < self.ROTATION_SLOTS:
-            # rotation warm-up: first writes of a key pay the DDL; the name
-            # is recorded first so close() drops a half-created table too
-            name = f"{self._prefix}_{self._i:06d}"
-            self._tables.append(name)
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            with self._state_codec():
-                (
-                    df.write.bucketBy(b, bucket_by)
-                    .sortBy(bucket_by)
-                    .mode("overwrite")
-                    .format("parquet")
-                    .saveAsTable(name)
-                )
-        else:
-            # steady state: overwrite the OLDEST slot (of 3, so the
-            # previous state — which this write reads — is never
-            # the table being truncated). insertInto binds columns by
-            # position; reorder by name against the table schema.
-            name = rotation.pop(0)
-            cols = [f.name for f in self.spark.table(name).schema.fields]
-            with self._state_codec():
-                df.select(*cols).write.mode("overwrite").insertInto(name)
-            # the catalog caches the table's LogicalRelation including
-            # its resolved file listing; without an explicit refresh a
-            # later read can resolve to the PRE-overwrite files
-            # (observed: FileNotFoundException mid-superstep)
-            self.spark.catalog.refreshTable(name)
-        rotation.append(name)
-        self._slot_epoch[name] = self._i
-        out = self.spark.table(name)
-        out._cassovary_scratch = (self, name, self._i)
+        p = num_buckets or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        keyed = df.sortWithinPartitions(bucket_by)
+        with plans.pinned_conf(self.spark, p):
+            checkpointed = keyed.localCheckpoint(eager=True)
+        live = self._leaves.setdefault((checkpointed.schema.simpleString(), bucket_by), [])
+        live.append(checkpointed._jdf.queryExecution().logical().rdd())
+        out = drop_statistics(checkpointed, _hashed_on(keyed, bucket_by))
+        if len(live) > self.LIVE_LEAVES:
+            live.pop(0).unpersist(False)
         return out
 
-    @contextlib.contextmanager
-    def _state_codec(self):
-        # dictionary encoding is also off for state writes: the columns
-        # are ids + fresh doubles where the dictionary never pays off,
-        # and parquet's try-dictionary-then-fallback is pure encode CPU
-        # (measured ~7%/superstep at 319k edges, interleaved A/B)
-        keys = {
-            "spark.sql.parquet.compression.codec": "uncompressed",
-            "spark.hadoop.parquet.enable.dictionary": "false",
-            # scratch state is rewritten wholesale every superstep and
-            # never read by another job mid-write: the v1 commit's
-            # task-dir -> job-dir double rename and the _SUCCESS marker
-            # buy nothing here (r6, measured ~5%/superstep at 3.2M
-            # edges). Durable CheckpointStore artifacts keep the session
-            # defaults.
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-            "spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs": "false",
-        }
-        old = {k: self.spark.conf.get(k, None) for k in keys}
-        for k, v in keys.items():
-            self.spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
-
-    @staticmethod
-    def is_live(df) -> bool:
-        """Whether a roundtrip handle still reflects the data it returned.
-
-        False once its bucketed slot has been overwritten by rotation (the
-        handle would silently resolve to NEWER data) or its scratch is
-        closed. Frames that never came from a roundtrip have nothing to
-        invalidate and report True."""
-        tag = getattr(df, "_cassovary_scratch", None)
-        if tag is None:
-            return True
-        scratch, slot, epoch = tag
-        return scratch._slot_epoch.get(slot) == epoch
-
-    @staticmethod
-    def assert_live(df) -> None:
-        """Loud-failure guard for retained roundtrip handles: raise instead
-        of letting a rotated slot silently serve newer state. Operators that
-        retain many live handles (BFS-style level lists) write them as plain
-        parquet, which never rotates."""
-        if not StateScratch.is_live(df):
-            tag = df._cassovary_scratch
-            raise RuntimeError(
-                f"stale StateScratch handle: slot {tag[1]!r} was written at "
-                f"epoch {tag[0]._slot_epoch.get(tag[1])} but this handle "
-                f"reflects epoch {tag[2]}; retained handles survive only "
-                f"{StateScratch.ROTATION_SLOTS - 1} roundtrips of their "
-                f"(schema, bucket) key — write them unbucketed or "
-                f"re-materialize earlier"
-            )
-
     def close(self) -> None:
-        self._drop_tables()
-        self._slot_epoch.clear()
+        for rdd in [r for live in self._leaves.values() for r in live]:
+            try:
+                rdd.unpersist(False)
+            except Exception:  # noqa: BLE001 — session may already be stopped
+                pass
+        self._leaves.clear()
         shutil.rmtree(self.dir, ignore_errors=True)
         atexit.unregister(self.close)

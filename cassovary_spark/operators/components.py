@@ -74,7 +74,8 @@ def connected_components(
             labels = labels.repartition(ss.p, "id")
         # labels enter the superstep through the neighbor gather, the least()
         # fallback, AND (with pointer_jump) a self-join — multiplicative stat
-        # growth — so per-superstep stats are reset via StateScratch.
+        # growth — so each state is a leaf with its statistics dropped
+        # (StateScratch.roundtrip).
         labels, _ = ss.write(labels)
         label_sum = labels.agg(F.sum("component")).first()[0]
 

@@ -84,7 +84,8 @@ def hits(
 
         # state feeds TWO branches of each superstep's join tree (auth gather
         # + hub gather over the fresh auth), so per-superstep stats must be
-        # RESET, not just lineage-truncated — see checkpoint.StateScratch.
+        # RESET, not just lineage-truncated: each state is a leaf with its
+        # statistics dropped (StateScratch.roundtrip).
         state, _ = ss.write(
             verts.select("id", F.lit(1.0 / n).alias("hub"), F.lit(0.0).alias("authority"))
         )

@@ -13,8 +13,8 @@ Scale design:
   keeps only edges whose BOTH endpoints survive. Unlike PageRank/CC (fixed
   edge table, stationary bucketing), rewriting the edge set each round is
   the point — peeled hubs' edges never move again.
-- Survivors are an O(V') table bucketed by id; the src-side semi-join is
-  bucket-co-located with the degree agg's output partitioning, the
+- Survivors are an O(V') state leaf keyed on id; the src-side semi-join is
+  co-located with the degree agg's output partitioning, the
   dst-side join is the one real exchange per superstep and it moves only
   the surviving (shrunk) edges.
 - Convergence: |survivors| is strictly decreasing until fixpoint, so the
@@ -84,7 +84,7 @@ def k_core(
             converged = alive == 0 or alive == last.get("alive")
             if not converged:
                 # keep only edges with BOTH endpoints alive; the src join is
-                # bucket-co-located, the dst join exchanges the (shrunk) edges
+                # co-located, the dst join exchanges the (shrunk) edges
                 cur_edges, _ = ss.write(
                     cur_edges.join(survivors.select(F.col("id").alias("src")), "src", "semi")
                     .join(survivors.select(F.col("id").alias("dst")), "dst", "semi")

@@ -72,8 +72,9 @@ def label_propagation(
         else:
             labels = labels.repartition(ss.p, "id")
         # labels feed two branches per superstep (neighbor-mode gather + the
-        # keep-own-label fallback join) — stats must reset per superstep
-        # (checkpoint.StateScratch rationale).
+        # keep-own-label fallback join) — stats must reset per superstep:
+        # each state is a leaf with its statistics dropped
+        # (StateScratch.roundtrip).
         labels, _ = ss.write(labels)
 
         def step(labels, last):

@@ -155,7 +155,8 @@ def _frontier_levels(
     # ``visited`` is the lazy UNION of the per-level files — levels are
     # written once and never rewritten, so state writes total O(V), not
     # O(V * depth) as a rewrite-visited-per-level loop would cost. Plain
-    # parquet writes, not bucketed ones: files must outlive the whole walk.
+    # parquet writes, not keyed leaves (freed two writes later): files must
+    # outlive the whole walk.
     frontier, _ = ss.write(frontier, bucket_by=None)
     levels = [frontier]
     ev_frames = [

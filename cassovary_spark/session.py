@@ -91,11 +91,6 @@ def get_spark(
         # local[2]). The default periodic GC is 30min; iterative jobs need
         # cleanup at superstep cadence.
         "spark.cleaner.periodicGC.interval": "45s",
-        # a bucketed table's scan reports its sortBy order. Superstep state
-        # is an in-memory leaf now (Superstep.write); the only bucketed
-        # tables left are StateScratch's rotation, which perfbench's
-        # state-transport probe times, so this stays while that probe does
-        "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
         # Tungsten execution memory off-heap: sort/shuffle/join buffers
         # bypass the GC heap entirely — at 32 threads the allocation rate of
         # on-heap execution memory makes G1 pause-bound (measured 14s..52s
@@ -106,8 +101,10 @@ def get_spark(
         "spark.memory.offHeap.size": os.environ.get(
             "CASSOVARY_SPARK_OFFHEAP_SIZE", "24g"
         ),
-        # catalog tables live here: no operator writes one; StateScratch's
-        # bucketed rotation (perfbench's state-transport probe) does
+        # no operator writes a catalog table (superstep state is an
+        # in-memory leaf, StateScratch.roundtrip); without this, Spark's
+        # default catalog would still make spark-warehouse/ in the working
+        # directory
         "spark.sql.warehouse.dir": os.environ.get(
             "CASSOVARY_SPARK_WAREHOUSE", _scratch_root() + "/cassovary_warehouse"
         ),

@@ -21,7 +21,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame, Observation
 
 from cassovary_spark import plans
-from cassovary_spark.checkpoint import CheckpointStore, StateScratch, drop_statistics
+from cassovary_spark.checkpoint import CheckpointStore, StateScratch
 
 ENGINES = ("auto", "local", "distributed")
 
@@ -90,13 +90,9 @@ class Superstep:
     """One distributed operator run over ``m`` edge rows.
 
     A context manager: on exit, normal or not, it closes the state scratch
-    (its parquet files) and drops every temp view, persisted frame, local
-    checkpoint and state leaf it handed out, so a superstep that raises
-    leaks nothing into the session. ``run`` drives the loop."""
-
-    # a state leaf is freed once this many newer leaves of its (schema, key)
-    # exist: a handle stays readable through the next write of its kind
-    LIVE_LEAVES = 2
+    (its state leaves and parquet files) and drops every temp view,
+    persisted frame and local checkpoint it handed out, so a superstep that
+    raises leaks nothing into the session. ``run`` drives the loop."""
 
     def __init__(self, spark, m: int, num_partitions: int | None = None,
                  stats: dict | None = None):
@@ -106,8 +102,6 @@ class Superstep:
         self._views: list[str] = []
         self._frames: list[DataFrame] = []
         self._rdds: list = []
-        # (schema, key) -> RDDs of the live state leaves, oldest first
-        self._leaves: dict[tuple[str, str], list] = {}
 
     def __enter__(self) -> "Superstep":
         self.scratch = StateScratch(self.spark)
@@ -122,16 +116,20 @@ class Superstep:
                 pass
         for df in self._frames:
             df.unpersist()
-        for rdd in self._rdds + [r for live in self._leaves.values() for r in live]:
+        for rdd in self._rdds:
             rdd.unpersist(False)
 
     def persist(self, df: DataFrame, key: str | None = None) -> DataFrame:
         """Persist a static table for the run; with ``key``, partitioned AND
         sorted by it, so every superstep's join on ``key`` skips exchange and
-        sort on this side."""
+        sort on this side. The cached plan is built under
+        ``plans.pinned_conf``: an adaptive one reports no partitioning until
+        it is materialized, so the superstep that first reads it (CC's and
+        LPA's first) would exchange it once more."""
         if key is not None:
             df = df.repartition(self.p, key).sortWithinPartitions(key)
-        df = df.persist()
+        with plans.pinned_conf(self.spark, self.p):
+            df = df.persist()
         self._frames.append(df)
         return df
 
@@ -157,37 +155,17 @@ class Superstep:
         — no extra job — and returned by alias; ``drop`` columns feed only
         the metrics.
 
-        With ``bucket_by``, the state is an in-memory leaf: sorted within its
-        partitions by that key and locally checkpointed, with AQE off and
-        the shuffle partitions pinned to ``p`` (an adaptive plan reports no
-        partitioning), then re-wrapped without the statistics and
-        constraints the checkpoint inherits from its origin plan
-        (``checkpoint.drop_statistics``). The leaf keeps the partitioning
-        and ordering its executed plan reported, so the next superstep's
-        joins on the key neither exchange nor sort the state, and its
-        ``sizeInBytes`` stays fixed where the inherited one would grow with
-        every superstep. A leaf is freed once ``LIVE_LEAVES`` newer leaves
-        of its (schema, key) exist, and every leaf when the run ends.
-        The leaf lives in executor memory: an executor lost mid-run loses
-        it, and a ``CheckpointStore`` saved every k supersteps is the
-        recovery point. With ``bucket_by=None`` the state is written to
-        scratch parquet and stays readable until the run ends."""
+        With ``bucket_by``, the state is an in-memory leaf keyed on that
+        column, on ``p`` partitions; with ``bucket_by=None`` it is written
+        to scratch parquet and stays readable until the run ends
+        (``StateScratch.roundtrip``)."""
         obs = None
         if metrics:
             obs = Observation()
             df = df.observe(obs, *metrics)
         if drop:
             df = df.drop(*drop)
-        if bucket_by is None:
-            out = self.scratch.roundtrip(df)
-        else:
-            with plans.pinned_conf(self.spark, self.p):
-                checkpointed = df.sortWithinPartitions(bucket_by).localCheckpoint(eager=True)
-            live = self._leaves.setdefault((checkpointed.schema.simpleString(), bucket_by), [])
-            live.append(checkpointed._jdf.queryExecution().logical().rdd())
-            out = drop_statistics(checkpointed)
-            if len(live) > self.LIVE_LEAVES:
-                live.pop(0).unpersist(False)
+        out = self.scratch.roundtrip(df, bucket_by, self.p)
         return out, (dict(obs.get) if obs is not None else {})
 
     def latest(self, checkpoint: CheckpointStore | None, resume: bool):

@@ -369,9 +369,9 @@ compression (median superstep 8.3s vs lz4 7.4-8.1s — the CPU cost exceeds
 the byte savings on RAM-backed shuffle) and 64-partition over-decomposition
 (8.4s vs 7.7s — extra task/bucket-file overhead beats the wave-balance
 gain). The engine's plans are shuffle-light and partition-parallel
-(stationary co-partitioned edge table; bucketed superstep state so joins
-need no exchange; map-side partial aggregation), which is what the
-N -> 4N rule rewards on a real cluster.
+(stationary co-partitioned edge table; superstep state an in-memory leaf
+keyed on id, so joins need no exchange; map-side partial aggregation),
+which is what the N -> 4N rule rewards on a real cluster.
 """
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/BASELINE.md", "w") as f:

@@ -8,7 +8,9 @@ third time. A subprocess is required: the module is usually already
 imported (and its string literals already compiled) in the test process.
 
 ``test_cited_scripts_exist`` guards the other kind of rot: a path to a
-deleted script left behind in code or docs.
+deleted script left behind in code or docs;
+``test_package_writes_no_catalog_table`` keeps a second keyed-state
+transport from coming back.
 """
 
 from __future__ import annotations
@@ -58,3 +60,23 @@ def test_cited_scripts_exist():
         if not (root / m).is_file()
     )
     assert not dangling, "cited scripts that do not exist:\n" + "\n".join(dangling)
+
+
+def test_package_writes_no_catalog_table():
+    """Keyed superstep state is an in-memory leaf
+    (``StateScratch.roundtrip``): nothing under ``cassovary_spark/`` writes
+    a bucketed catalog table, and the session no longer sets the
+    ``bucketedTableScan.outputOrdering`` conf such a table would need to
+    be read back sort-free."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(REPO_ROOT)
+    call = re.compile(r"\b(bucketBy|saveAsTable|insertInto)\(")
+    found = sorted(
+        f"{p.relative_to(root)}:{n}: {line.strip()}"
+        for p in (root / "cassovary_spark").rglob("*.py")
+        for n, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if call.search(line)
+    )
+    assert not found, "catalog table writes:\n" + "\n".join(found)

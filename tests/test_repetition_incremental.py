@@ -11,6 +11,7 @@ filters (Rae et al. Gopher §A1.1, Raffel et al. C4 §2.2).
 from __future__ import annotations
 
 import math
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -181,38 +182,40 @@ def test_cache_scope_holds_one_generation(spark, corpus_and_batch):
     assert release_caches() >= 0
 
 
-def test_state_scratch_handle_generation_tracking(spark):
-    """Rotation reuse is LOUD now (r2 ADVICE): a handle older than the
-    rotation window reports is_live False and assert_live raises; handles
-    inside the window and non-scratch frames stay quiet."""
-    import pytest as _pytest
-
+def test_state_scratch_leaf_outlives_one_newer_write(spark):
+    """A keyed ``roundtrip`` handle stays readable through one newer write
+    of its (schema, key), and a self-join on the key reads it in place (no
+    ``Exchange``). After two newer writes it is freed: a read raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` and never returns newer data."""
     from cassovary_spark.checkpoint import StateScratch
+
+    def state(k):  # keyed on id, as a superstep's join or aggregate leaves it
+        return spark.range(5).select("id", (F.col("id") * k).alias("v")).repartition(2, "id")
+
+    def values(df):
+        return sorted(r["v"] for r in df.collect())
 
     scratch = StateScratch(spark)
     try:
-        df0 = scratch.roundtrip(
-            spark.range(5).select("id", (F.col("id") * 2).alias("v")),
-            bucket_by="id",
-            num_buckets=2,
-        )
-        assert StateScratch.is_live(df0)
-        # 3 slots warm up, the 4th write overwrites df0's slot in place
-        for k in (3, 4):
-            scratch.roundtrip(
-                spark.range(5).select("id", (F.col("id") * k).alias("v")),
-                bucket_by="id", num_buckets=2,
-            )
-        assert StateScratch.is_live(df0)
-        scratch.roundtrip(
-            spark.range(5).select("id", (F.col("id") * 5).alias("v")),
-            bucket_by="id", num_buckets=2,
-        )
-        assert not StateScratch.is_live(df0)
-        with _pytest.raises(RuntimeError, match="stale StateScratch handle"):
-            StateScratch.assert_live(df0)
-        # frames that never came from a roundtrip have nothing to invalidate
-        StateScratch.assert_live(spark.range(1))
+        df0 = scratch.roundtrip(state(2), bucket_by="id", num_buckets=2)
+        scratch.roundtrip(state(3), bucket_by="id", num_buckets=2)
+        assert values(df0) == [0, 2, 4, 6, 8]
+        joined = df0.alias("a").join(df0.alias("b"), "id")
+        assert "Exchange" not in joined._jdf.queryExecution().executedPlan().toString()
+        assert joined.count() == 5
+        scratch.roundtrip(state(4), bucket_by="id", num_buckets=2)
+        # the leaf's blocks are removed asynchronously: until they are
+        # gone a read may still see them, but only as df0's own data
+        deadline = time.time() + 30
+        while True:
+            try:
+                got = values(df0)
+            except Exception as e:  # noqa: BLE001 — the JVM error, converted
+                assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in str(e), e
+                break
+            assert got == [0, 2, 4, 6, 8], got
+            assert time.time() < deadline, "a freed leaf is still readable"
+            time.sleep(0.1)
     finally:
         scratch.close()
 

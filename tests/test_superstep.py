@@ -1,11 +1,12 @@
 """The superstep driver's contracts: the steady-state plan shape of the
 SQL-built supersteps (the state a sort-free, exchange-free leaf, also with
-AQE on for the loop and after a checkpoint save), state statistics that
-stay fixed, at most two live state leaves per (schema, key), cleanup after
-a failed and after a successful run (only the result stays persisted, no
-exit hook stays registered), a failed state-leaf build that reaches the
-caller, routing that reads its memory budget at call time, and an edge
-count ``m`` that a cached input answers without a Spark job."""
+AQE on for the loop and after a checkpoint save), a first CC/LPA superstep
+that shuffles as a steady one, state statistics that stay fixed, at most
+two live state leaves per (schema, key), cleanup after a failed and after
+a successful run (only the result stays persisted, no exit hook stays
+registered), a failed state-leaf build that reaches the caller and writes
+no table or file, routing that reads its memory budget at call time, and
+an edge count ``m`` that a cached input answers without a Spark job."""
 
 from __future__ import annotations
 
@@ -89,16 +90,16 @@ def _run_pagerank(e, **k):
     return pagerank(e, max_iterations=3, engine="distributed", **k)
 
 
-def _run_cc(e):
+def _run_cc(e, **k):
     from cassovary_spark.operators import connected_components
 
-    connected_components(e, max_iterations=3, engine="distributed")
+    connected_components(e, max_iterations=3, engine="distributed", **k)
 
 
-def _run_lpa(e):
+def _run_lpa(e, **k):
     from cassovary_spark.operators import label_propagation
 
-    label_propagation(e, max_iterations=3, engine="distributed")
+    label_propagation(e, max_iterations=3, engine="distributed", **k)
 
 
 def _run_ppr(e, **k):
@@ -166,6 +167,34 @@ def test_steady_pagerank_superstep_has_one_exchange(spark, state_plans, run, sta
     run(edges_df(spark, G6), num_partitions=3)
     nodes = _assert_plan_shape(captured, state_cols)
     assert len(_exchanges(nodes)) == 1, _exchanges(nodes)
+
+
+@pytest.mark.parametrize(
+    "run, marker, state_cols, exchanges",
+    [
+        (_run_cc, "nbr_component", ["id", "component"], 1),
+        (_run_lpa, "new_label", ["id", "label"], 2),
+    ],
+    ids=["cc", "lpa"],
+)
+def test_first_cc_lpa_superstep_shuffles_as_a_steady_one(
+    spark, state_plans, run, marker, state_cols, exchanges
+):
+    """On p >= 2 partitions the first CC/LPA superstep shuffles what a
+    steady one does and never the state: CC the gathered minimum labels to
+    their source (one ``Exchange``), LPA the (src, label) counts and then
+    their per-id mode (two). The initial state, ``id`` aliased as the
+    label, is a leaf keyed on ``id``, and the static edge table reports its
+    partitioning before its first read."""
+    captured = state_plans(marker)
+    run(edges_df(spark, TWO_CLIQUES_BRIDGED), num_partitions=3)
+    _assert_plan_shape(captured, state_cols)
+    for which, plan in (("first", captured[0]), ("steady", captured[-1])):
+        nodes = list(_walk(plan))
+        assert len(_exchanges(nodes)) == exchanges, (which, _exchanges(nodes))
+        for path in (p for n in nodes for p in _paths_to_state_scans(n, state_cols)
+                     if "Join" in _name(n)):
+            assert "Exchange" not in path and "Sort" not in path, (which, path)
 
 
 def test_plan_shape_holds_with_aqe_on_for_the_loop(spark, state_plans, monkeypatch):
@@ -393,20 +422,23 @@ def test_successful_superstep_leaves_only_its_result(spark, op):
 
 
 def test_failed_bucketed_state_write_reaches_the_caller(spark, monkeypatch):
-    """A state leaf that cannot be built raises: the run does not go on
-    with bucketed tables or plain-parquet state. Here the local checkpoint
-    comes back without its ``LogicalRDD``, as if the private API it relies
-    on had changed."""
-    from cassovary_spark.checkpoint import StateScratch
+    """A keyed state leaf that cannot be built raises: the run does not go
+    on with a catalog table or plain-parquet state, and writes neither.
+    Here the local checkpoint comes back without its ``LogicalRDD``, as if
+    the private API it relies on had changed."""
     from cassovary_spark.operators import pagerank
 
     cls = type(spark.range(1))
     monkeypatch.setattr(cls, "localCheckpoint", lambda self, *a, **k: self)
-    fallbacks = []
-    monkeypatch.setattr(StateScratch, "roundtrip", lambda *a, **k: fallbacks.append(1))
+    writes = []
+    writer = type(spark.range(1).write)
+    for method in ("parquet", "saveAsTable", "insertInto"):
+        monkeypatch.setattr(writer, method, lambda *a, _m=method, **k: writes.append(_m))
+    tables = {t.name for t in spark.catalog.listTables()}
     with pytest.raises(Py4JError):
         pagerank(edges_df(spark, G6), max_iterations=3, engine="distributed")
-    assert fallbacks == []
+    assert writes == []
+    assert {t.name for t in spark.catalog.listTables()} == tables
 
 
 def test_state_scratch_frees_its_exit_hook(spark, monkeypatch):
